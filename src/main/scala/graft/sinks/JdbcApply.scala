@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,23 +15,26 @@ import graft.operators.CdcOps
  * IidrCdcSinkTask.java:94-155), designed to be called from
  * `foreachBatch` (streaming) or directly (batch backfill).
  *
- * Scale shape per micro-batch:
- *  1. corrupt branch first, then optional fail (tolerance=none), like
- *     IidrCdcSinkTask.java:236-264;
- *  2. per target table: last-write-wins collapse on the PK (the
- *     order-insensitive equivalent of offset-order apply, SURVEY.md
- *     §2.6) — ONE shuffle on (key);
- *  3. `repartition(pk)` so no two connections ever race on one key;
- *  4. per partition: one JDBC transaction, PreparedStatement reuse,
+ * Scale shape per micro-batch — ONE plan whatever the number of
+ * tables, like the reference's single pass over a poll's
+ * `Map<table, List<record>>` (IidrCdcSinkTask.java:101-126):
+ *  1. one census job: the corrupt count and the tables with valid rows;
+ *  2. corrupt branch first (only when corrupt rows exist), then
+ *     optional fail (tolerance=none), like IidrCdcSinkTask.java:236-264;
+ *  3. one write job: last-write-wins on (table, pk), the order-
+ *     insensitive equivalent of offset-order apply (SURVEY.md §2.6),
+ *     is its ONE exchange, and the writer keeps that partitioning, so
+ *     no two connections ever race on a key;
+ *  4. per partition: one JDBC transaction over its tables, PS reuse,
  *     `addBatch`/`executeBatch` every `batchSize` rows
  *     (JdbcWriter.java:102-108), rollback + rethrow on failure
  *     (IidrCdcSinkTask.java:143-154). Exactly-once EFFECT comes from
  *     idempotent upsert replay, not 2PC (sink README.md:8).
  *
  * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs on the
- * DRIVER before any executor work — the reference is single-task and
- * can DDL inline; we must serialize DDL against parallel writers
- * (SURVEY.md §7.4).
+ * DRIVER, for every present table on one connection, before any
+ * executor work — the reference is single-task and can DDL inline; we
+ * must serialize DDL against parallel writers (SURVEY.md §7.4).
  */
 object JdbcApply {
 
@@ -114,7 +117,7 @@ object JdbcApply {
     // corrupt BEFORE the split, so they ride the same DLQ + tolerance
     // path as malformed envelopes (the reference throws DataException
     // from the SMT for exactly these, IidrToJdbcSinkTransform.java:292).
-    // Marking is scoped exactly like the coercion in applyTable: only
+    // Marking is scoped exactly like the coercion in writeTables: only
     // rows routed to a table whose PINNED schema declares the field as
     // STRING — a same-named numeric field on another table must parse
     // under ITS type, not the override (the reference SMT coerces only
@@ -136,46 +139,54 @@ object JdbcApply {
       }
     val batch = marked.persist()
     try {
-      val corrupt = CdcOps.toCorruptEvents(batch,
-        col("topic"), col("partition"), col("offset"),
-        col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
-        to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
-          col(Cdc.Cols.SourceTs))),
-        col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType))
-      val nCorrupt = writeCorrupt(corrupt, cfg)
+      // Census: ONE job over the PERSISTED batch. Tables with no rows
+      // this batch skip their DDL and their slice of the write plan,
+      // rows routed to an UNCONFIGURED table are surfaced (a config
+      // typo would otherwise advance the checkpoint past the data with
+      // no signal), and a clean batch never touches the DLQ.
+      val census = batch
+        .groupBy(col(Cdc.Cols.CorruptReason).isNull.as("valid"),
+          col(Cdc.Cols.TargetTable))
+        .count().collect()
+      val nCorrupt = census.filterNot(_.getBoolean(0)).map(_.getLong(2)).sum
+      val present = census.filter(r => r.getBoolean(0) && !r.isNullAt(1))
+        .map(_.getString(1)).toSet
       val warned: Long =
         if (nCorrupt == 0) 0L
-        else cfg.errorsTolerance match {
-          case "none" =>
-            throw new IllegalStateException(
-              s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
-          case "log" =>
-            // Per-record WARN + skip (IidrCdcSinkTask.java:254-259),
-            // capped at MaxLoggedCorrupt with a rollup line so the
-            // count is always visible.
-            val sample = corrupt
-              .select(col("error_reason"), col("topic"),
-                col("kafka_partition"), col("kafka_offset"))
-              .limit(MaxLoggedCorrupt).collect()
-            sample.foreach(r => log.warn(
-              s"Corrupt record skipped: ${r.get(0)} (topic=${r.get(1)}, " +
-                s"partition=${r.get(2)}, offset=${r.get(3)})"))
-            if (nCorrupt > sample.length)
-              log.warn(s"... and ${nCorrupt - sample.length} more corrupt " +
-                "record(s) skipped (see DLQ table)")
-            sample.length.toLong
-          case _ => 0L // "all": silently skip
+        else {
+          val corrupt = CdcOps.toCorruptEvents(batch,
+            col("topic"), col("partition"), col("offset"),
+            col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
+            to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
+              col(Cdc.Cols.SourceTs))),
+            col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType))
+          writeCorrupt(corrupt, cfg)
+          cfg.errorsTolerance match {
+            case "none" =>
+              throw new IllegalStateException(
+                s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
+            case "log" =>
+              // Per-record WARN + skip (IidrCdcSinkTask.java:254-259),
+              // capped at MaxLoggedCorrupt with a rollup line so the
+              // count is always visible.
+              val sample = corrupt
+                .select(col("error_reason"), col("topic"),
+                  col("kafka_partition"), col("kafka_offset"))
+                .limit(MaxLoggedCorrupt).collect()
+              sample.foreach(r => log.warn(
+                s"Corrupt record skipped: ${r.get(0)} (topic=${r.get(1)}, " +
+                  s"partition=${r.get(2)}, offset=${r.get(3)})"))
+              if (nCorrupt > sample.length)
+                log.warn(s"... and ${nCorrupt - sample.length} more corrupt " +
+                  "record(s) skipped (see DLQ table)")
+              sample.length.toLong
+            case _ => 0L // "all": silently skip
+          }
         }
 
       // A table with a PK but no pinned schema is still applied — its
       // value schema is INFERRED from the batch's own payloads (C1
       // fallback, IidrToJdbcSinkTransform.java:299-320).
-      val configured = cfg.tableSchemas.keySet ++ cfg.primaryKeys.keySet
-      // One cheap distinct over the PERSISTED batch: tables with no
-      // rows this batch skip their per-table DDL round trip and Spark
-      // job entirely, and rows routed to an UNCONFIGURED table are
-      // surfaced (a config typo would otherwise advance the checkpoint
-      // past the data with no signal).
       //
       // DEFERRED AUTO-CREATE is a consequence operators should expect:
       // a configured table's DDL runs on the first batch that CARRIES
@@ -183,35 +194,38 @@ object JdbcApply {
       // deletes-only-against-nothing) first batch the table does not
       // exist yet. Intentional: creating from config alone would need a
       // schema before the C1 inference fallback has seen any payload.
-      val present = batch
-        .filter(col(Cdc.Cols.CorruptReason).isNull &&
-          col(Cdc.Cols.TargetTable).isNotNull)
-        .select(Cdc.Cols.TargetTable).distinct()
-        .collect().map(_.getString(0)).toSet
+      val configured = cfg.tableSchemas.keySet ++ cfg.primaryKeys.keySet
       val unconfigured = present -- configured
       if (unconfigured.nonEmpty)
         log.warn(s"Batch contains rows for unconfigured table(s) " +
           s"${unconfigured.toSeq.sorted.mkString(", ")} — no schema or " +
           "primary key is configured, so these rows are NOT applied")
-      val unroutable = configured.toSeq.sorted
-        .filter(present.contains)
-        .map(t => applyTable(batch, t, cfg)).sum
-      ApplyStats(nCorrupt, warned, unroutable)
+      // Every table's config checks run before any DDL or write, so a
+      // misconfigured table fails the batch before the others land.
+      val plans = configured.toSeq.sorted.filter(present.contains)
+        .flatMap(tablePlan(batch, _, cfg))
+      ApplyStats(nCorrupt, warned, writeTables(batch, plans, cfg))
     } finally batch.unpersist()
   }
 
-  /** Apply one table's slice of the batch; returns the number of
-    * valid rows skipped because no PK value could be resolved. */
-  private def applyTable(batch: DataFrame, table: String, cfg: Config): Long = {
+  /** One present table: parse schema, STRING-field overrides, key
+    * schema, wire PKs, and the cased schema/PKs of the JDBC edge. */
+  private final case class TablePlan(table: String, schema: StructType,
+      overrides: Map[String, String], keySchema: StructType, pks: Seq[String],
+      jdbcSchema: StructType, jdbcPks: Seq[String])
+
+  /** Resolve one table's schemas and check its config; None when
+    * nothing is inferable (no payloads for the table in this batch —
+    * e.g. deletes only against a table that was never created). */
+  private def tablePlan(batch: DataFrame, table: String,
+      cfg: Config): Option[TablePlan] = {
     val schema = cfg.tableSchemas.getOrElse(table,
       graft.operators.SchemaInfer.infer(
         batch.sparkSession,
         batch.filter(col(Cdc.Cols.TargetTable) === table &&
           col(Cdc.Cols.CorruptReason).isNull),
         Cdc.Cols.ValueJson))
-    // Nothing inferable (no payloads for the table in this batch — e.g.
-    // deletes only against a table that was never created): no-op.
-    if (schema.isEmpty) return 0L
+    if (schema.isEmpty) return None
     // Overrides hit STRING-declared fields only (the reference coerces
     // only string values, IidrToJdbcSinkTransform.java:246-252); the
     // EFFECTIVE schema — with overridden fields re-typed — drives DDL
@@ -227,55 +241,9 @@ object JdbcApply {
     val pks = cfg.primaryKeys.getOrElse(table, Seq.empty)
     require(pks.nonEmpty, s"no primary key configured for $table")
 
-    val parsed = batch
-      .filter(col(Cdc.Cols.TargetTable) === table &&
-        col(Cdc.Cols.CorruptReason).isNull)
-      .withColumn("__v", from_json(col(Cdc.Cols.ValueJson), schema))
-      .withColumn("__k", from_json(col(Cdc.Cols.KeyJson), keySchema))
-    val rows = overrides.foldLeft(parsed) { case (df, (f, t)) =>
-      df.withColumn("__v", col("__v").withField(f,
-        graft.operators.TypeOverrides.coerce(col("__v").getField(f), t)))
-    }
-
-    // PK columns: key struct for deletes, value struct otherwise
-    // (IidrCdcSinkTask.java:186-195 / JdbcWriter.java:208-221). Either
-    // struct may LACK the field (pinned value schema without the PK,
-    // or no key schema configured) — referencing a missing struct
-    // field would fail analysis, so both sides are schema-guarded.
-    def valueField(pk: String) =
-      if (schema.fieldNames.contains(pk)) Some(col(s"__v.$pk")) else None
-    val keyed = pks.foldLeft(rows) { (df, pk) =>
-      val fromKey = keyField(keySchema, pk)
-      val fromValue = valueField(pk)
-      df.withColumn(s"__pk_$pk",
-        when(col(Cdc.Cols.Op) === Cdc.Op.Delete,
-          fromKey.orElse(fromValue).getOrElse(lit(null)))
-          .otherwise(coalesce(
-            (fromValue.toSeq ++ fromKey.toSeq :+ lit(null)): _*)))
-    }
-
-    // Valid JSON that lacks the PK fields cannot be routed: warn +
-    // skip + count, like the reference's "no PK fields => warn + skip"
-    // (JdbcWriter.java:208-221) — never a silent drop. The count scans
-    // the PERSISTED batch, so it costs one cached pass.
-    val routableCond = pks.map(p => col(s"__pk_$p").isNotNull).reduce(_ && _)
-    val nUnroutable = keyed.filter(!routableCond).count()
-    if (nUnroutable > 0)
-      log.warn(s"$nUnroutable record(s) for table $table skipped: no " +
-        s"primary-key value resolvable from key or value payload")
-    val routable = keyed.filter(routableCond)
-
-    val lww = CdcOps.lastWriteWins(routable, Cdc.Cols.TargetTable,
-      pks.map(p => s"__pk_$p"), "offset")
-
-    val out = lww.select(
-      (col(Cdc.Cols.Op).as("__op") +:
-        pks.map(p => col(s"__pk_$p")) :+
-        col("__v").as("__v")): _*)
-
-    // field.name.case applies at the JDBC EDGE only: parsing above
-    // used the wire field names; DDL and statements use the cased
-    // names (binding is positional, so only the names change).
+    // field.name.case applies at the JDBC EDGE only: parsing uses the
+    // wire field names; DDL and statements use the cased names
+    // (binding is positional, so only the names change).
     // Locale.ROOT: identifier casing must not vary with the JVM's
     // default locale (Turkish-I would otherwise corrupt "ID").
     val cased: String => String = cfg.fieldNameCase match {
@@ -285,7 +253,7 @@ object JdbcApply {
     }
     // A PK carried only by the KEY schema (value payloads never repeat
     // it — the compacted-topic shape) still needs a column: append it
-    // so DDL declares it and the writer binds it from __pk_* below.
+    // so DDL declares it and the writer binds it from its PK column.
     val ddlSchema = StructType(effSchema.fields ++
       pks.filterNot(effSchema.fieldNames.contains)
         .flatMap(p => keySchema.fields.find(_.name == p)))
@@ -310,30 +278,98 @@ object JdbcApply {
         s"field.name.case=${cfg.fieldNameCase} collapses distinct wire fields " +
           s"into duplicate column name(s) ${dups.mkString(", ")} for table $table")
     }
-    val jdbcPks = pks.map(cased)
-
-    // DDL on the driver, before executors touch the table.
-    withConnection(cfg) { conn =>
-      val dialect = Dialects.forConnection(conn)
-      ensureTable(conn, dialect, table, jdbcSchema, jdbcPks, cfg)
-    }
-
-    val (url, batchSize, user, password) =
-      (cfg.url, cfg.batchSize, cfg.user, cfg.password)
-    val (maxRetries, retryBackoffMs) = (cfg.maxRetries, cfg.retryBackoffMs)
-    val (bufRows, bufBytes) = (cfg.retryBufferRows, cfg.retryBufferBytes)
-    val valueCols = jdbcSchema.fieldNames.toSeq
-    out.repartition(pks.map(p => col(s"__pk_$p")): _*)
-      .foreachPartition { (it: Iterator[Row]) =>
-        if (it.hasNext)
-          writePartition(it, url, user, password, table, valueCols, jdbcPks,
-            batchSize, maxRetries, retryBackoffMs, bufRows, bufBytes)
-      }
-    nUnroutable
+    Some(TablePlan(table, schema, overrides, keySchema, pks, jdbcSchema,
+      pks.map(cased)))
   }
 
-  private def keyField(keySchema: StructType, name: String) =
-    if (keySchema.fieldNames.contains(name)) Some(col(s"__k.$name")) else None
+  /** DDL for every present table on one driver connection, then ONE
+    * write job whose only exchange is the last-write-wins window on
+    * (table, pk). Returns the number of valid rows skipped because no
+    * PK value could be resolved. */
+  private def writeTables(batch: DataFrame, plans: Seq[TablePlan],
+      cfg: Config): Long = {
+    if (plans.isEmpty) return 0L
+    // DDL on the driver, before executors touch the tables.
+    withConnection(cfg) { conn =>
+      val dialect = Dialects.forConnection(conn)
+      plans.foreach(p =>
+        ensureTable(conn, dialect, p.table, p.jdbcSchema, p.jdbcPks, cfg))
+    }
+    val tableCol = col(Cdc.Cols.TargetTable)
+    val ix = plans.indices
+    val mine = plans.map(p => tableCol === p.table)
+    // Table i's columns parse only table i's rows: `__v<i>`/`__k<i>`
+    // (and so every `__pk<i>_<j>`) read null on other tables' rows, so
+    // the window below compares each table's keys with its own typed
+    // equality and keys need no string encoding.
+    val parsed = batch
+      .filter(col(Cdc.Cols.CorruptReason).isNull &&
+        tableCol.isin(plans.map(_.table): _*))
+      .withColumns(ix.flatMap(i => Seq(
+        s"__v$i" -> when(mine(i), from_json(col(Cdc.Cols.ValueJson), plans(i).schema)),
+        s"__k$i" -> when(mine(i), from_json(col(Cdc.Cols.KeyJson), plans(i).keySchema))
+      )).toMap)
+      .withColumns(ix.filter(plans(_).overrides.nonEmpty).map(i => s"__v$i" ->
+        plans(i).overrides.foldLeft(col(s"__v$i")) { case (v, (f, t)) =>
+          v.withField(f, graft.operators.TypeOverrides.coerce(v.getField(f), t))
+        }).toMap)
+    // PK columns: key struct for deletes, value struct otherwise
+    // (IidrCdcSinkTask.java:186-195 / JdbcWriter.java:208-221). Either
+    // struct may LACK the field (pinned value schema without the PK,
+    // or no key schema configured) — referencing a missing struct
+    // field would fail analysis, so both sides are schema-guarded.
+    val pkCols = ix.map(i => plans(i).pks.indices.map(j => s"__pk${i}_$j"))
+    val keyed = parsed.withColumns(ix.flatMap { i =>
+      val p = plans(i)
+      def field(s: StructType, struct: String, pk: String) =
+        if (s.fieldNames.contains(pk)) Some(col(struct).getField(pk)) else None
+      p.pks.zip(pkCols(i)).map { case (pk, name) =>
+        val fromKey = field(p.keySchema, s"__k$i", pk)
+        val fromValue = field(p.schema, s"__v$i", pk)
+        name -> when(col(Cdc.Cols.Op) === Cdc.Op.Delete,
+          fromKey.orElse(fromValue).getOrElse(lit(null)))
+          .otherwise(coalesce((fromValue.toSeq ++ fromKey.toSeq :+ lit(null)): _*))
+      }
+    }.toMap)
+
+    // Valid JSON that lacks the PK fields cannot be routed: warn +
+    // skip + count, like the reference's "no PK fields => warn + skip"
+    // (JdbcWriter.java:208-221) — never a silent drop. An Observation
+    // counts them per table on the write plan itself, so the count
+    // rides the write job instead of costing one of its own.
+    val routable = ix.map(i => mine(i) && pkCols(i).map(col(_).isNotNull).reduce(_ && _))
+    val unroutable = Observation()
+    val metrics = ix.map(i => count(when(mine(i) && !routable(i), true)).as(s"u$i"))
+    val lww = CdcOps.lastWriteWins(
+      keyed.observe(unroutable, metrics.head, metrics.tail: _*)
+        .filter(routable.reduce(_ || _)),
+      Cdc.Cols.TargetTable, pkCols.flatten, "offset")
+    // A row: op, table, then per table its PK columns and value struct.
+    val out = lww.select((col(Cdc.Cols.Op) +: tableCol +:
+      ix.flatMap(i => pkCols(i).map(col) :+ col(s"__v$i"))): _*)
+    val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
+      .map { case (p, offset) => p.table -> (p, offset) }.toMap
+    // No repartition: the window's exchange already put each
+    // (table, pk) in exactly one partition, and one transaction covers
+    // every table the partition carries.
+    writePartitions(out, "apply partition write", cfg) { (conn, dialect, rows) =>
+      val writers = scala.collection.mutable.Map.empty[String, TableWriter]
+      rows.foreach { row =>
+        val (p, offset) = slots(row.getString(1))
+        writers.getOrElseUpdate(p.table,
+          new TableWriter(conn, dialect, p, offset, cfg.batchSize)).write(row)
+      }
+      writers.values.foreach(_.finish())
+    }
+    val counts = unroutable.get
+    ix.map { i =>
+      val n = counts(s"u$i").asInstanceOf[Long]
+      if (n > 0)
+        log.warn(s"$n record(s) for table ${plans(i).table} skipped: no " +
+          s"primary-key value resolvable from key or value payload")
+      n
+    }.sum
+  }
 
   /** Retry-replay buffer bounds, rows AND (estimated) bytes per
     * partition: a retry must re-bind the partition's rows after the
@@ -427,155 +463,146 @@ object JdbcApply {
     buf.toIndexedSeq
   }
 
-  /** W17 retry scaffold shared by the partition and DLQ writers:
-    * buffer the head for replay; if the partition overflows either
-    * retry-buffer bound, stream it exactly as before retry was wired
-    * (one WARN; restart-level replay only); otherwise run the attempt
-    * under transient retry. */
-  private def retryOrStream(it: Iterator[Row], what: String,
-      maxRetries: Int, backoffMs: Long, maxRows: Int,
-      maxBytes: Long)(attempt: Iterator[Row] => Unit): Unit =
-    if (maxRetries <= 0) attempt(it)
-    else {
-      val head = bufferHead(it, maxRows, maxBytes)
-      if (it.hasNext) {
-        log.warn(s"$what exceeds the retry-replay buffer " +
-          s"(${head.length} rows buffered); W17 retry stands down for " +
-          "this partition (streaming write, restart-level replay only)")
-        attempt(head.iterator ++ it)
-      } else
-        withTransientRetry(what, maxRetries, backoffMs) {
-          attempt(head.iterator)
-        }
-    }
-
-  /** Executor-side partition writer with W17 transient retry. When
+  /** Run `attempt` over every nonempty partition of `df`, each attempt
+    * on a fresh connection inside one transaction: commit on success,
+    * rollback + rethrow on failure (IidrCdcSinkTask.java:143-154).
+    * W17 retry scaffold shared by the apply and DLQ writers: when
     * retries are enabled the partition's rows materialize ONCE (up to
     * [[RetryBufferRows]]/[[RetryBufferBytes]]) so a retry can re-bind
-    * them after the failed attempt's rollback; an oversized partition
-    * falls back to the streaming no-retry write rather than risk the
-    * heap. */
-  private def writePartition(it: Iterator[Row], url: String,
-      user: Option[String], password: Option[String], table: String,
-      valueCols: Seq[String], pks: Seq[String], batchSize: Int,
-      maxRetries: Int, retryBackoffMs: Long, bufRows: Int,
-      bufBytes: Long): Unit =
-    retryOrStream(it, s"partition write to $table", maxRetries,
-      retryBackoffMs, bufRows, bufBytes) { rows =>
-      writePartitionAttempt(rows, url, user, password, table, valueCols,
-        pks, batchSize)
+    * them after the failed attempt's rollback; if the partition
+    * overflows either retry-buffer bound, it streams exactly as before
+    * retry was wired (one WARN; restart-level replay only) rather than
+    * risk the heap. */
+  private def writePartitions(df: DataFrame, what: String, cfg: Config)(
+      attempt: (Connection, Dialect, Iterator[Row]) => Unit): Unit =
+    df.foreachPartition { (it: Iterator[Row]) =>
+      def once(rows: Iterator[Row]): Unit = {
+        val conn = connect(cfg.url, cfg.user, cfg.password)
+        try {
+          conn.setAutoCommit(false)
+          attempt(conn, Dialects.forConnection(conn), rows)
+          conn.commit()
+        } catch { case e: Throwable => rollbackQuietly(conn); throw e }
+        finally closeQuietly(conn)
+      }
+      if (!it.hasNext) ()
+      else if (cfg.maxRetries <= 0) once(it)
+      else {
+        val head = bufferHead(it, cfg.retryBufferRows, cfg.retryBufferBytes)
+        if (it.hasNext) {
+          log.warn(s"$what exceeds the retry-replay buffer " +
+            s"(${head.length} rows buffered); W17 retry stands down for " +
+            "this partition (streaming write, restart-level replay only)")
+          once(head.iterator ++ it)
+        } else
+          withTransientRetry(what, cfg.maxRetries, cfg.retryBackoffMs) {
+            once(head.iterator)
+          }
+      }
     }
 
-  /** One attempt: one connection, one txn, PS reuse, batched ops. */
-  private def writePartitionAttempt(it: Iterator[Row], url: String,
-      user: Option[String], password: Option[String], table: String,
-      valueCols: Seq[String], pks: Seq[String], batchSize: Int): Unit = {
-    val conn = connect(url, user, password)
-    val dialect = Dialects.forConnection(conn)
-    conn.setAutoCommit(false)
-    try {
-      val t = dialect.normalizeIdent(table)
-      val cols = valueCols
-      val delete = conn.prepareStatement(dialect.deleteSql(t, pks))
-      var nDel = 0
-      val plan = dialect.upsertSql(t, cols, pks)
-      val (upsertPs, insertPs) = plan match {
-        case NativeUpsert(sql, _) => (conn.prepareStatement(sql), null)
-        case UpdateInsert(up, ins, _) =>
-          (if (up.nonEmpty) conn.prepareStatement(up) else null,
-            conn.prepareStatement(ins))
-      }
-      var nUp = 0
-      // UpdateInsert (generic dialect): buffer up to batchSize rows,
-      // batch all UPDATEs, read executeBatch's update counts, then
-      // batch-INSERT only the zero-count rows — ~2 round trips per
-      // batch instead of up to 2 per ROW (JdbcWriter.java:102-108).
-      val pending = scala.collection.mutable.ArrayBuffer
-        .empty[(IndexedSeq[Any], IndexedSeq[Any])] // (colVals, pkVals)
-      def flushUpdateInsert(bind: (java.sql.PreparedStatement, Seq[Any], Seq[Any]) => Unit,
-          hasUpdate: Boolean): Unit = {
-        if (pending.isEmpty) return
-        val needInsert =
-          if (!hasUpdate) pending.toIndexedSeq
-          else {
-            pending.foreach { case (colVals, pkVals) =>
-              val nonPkVals = valueCols.zip(colVals)
-                .filterNot { case (c, _) => pks.contains(c) }.map(_._2)
-              bind(upsertPs, nonPkVals, pkVals)
-              upsertPs.addBatch()
-            }
-            val counts = upsertPs.executeBatch()
-            // SUCCESS_NO_INFO (-2) drivers don't report row counts:
-            // re-check those rows individually so new keys are never
-            // silently dropped.
-            val noInfo = pending.indices
-              .filter(counts(_) == java.sql.Statement.SUCCESS_NO_INFO)
-            val recheck = noInfo.filter { i =>
-              val (colVals, pkVals) = pending(i)
-              val nonPkVals = valueCols.zip(colVals)
-                .filterNot { case (c, _) => pks.contains(c) }.map(_._2)
-              bind(upsertPs, nonPkVals, pkVals)
-              upsertPs.executeUpdate() == 0
-            }
-            (pending.indices.filter(counts(_) == 0) ++ recheck).map(pending(_))
-          }
-        needInsert.foreach { case (colVals, _) =>
-          colVals.zipWithIndex.foreach { case (cv, i) =>
-            insertPs.setObject(i + 1, cv)
-          }
-          if (hasUpdate) insertPs.addBatch()
-          else {
-            // All-PK tables have no UPDATE statement, so "insert if
-            // absent" must tolerate duplicate keys for the idempotent-
-            // replay contract (mirrors INSERT IGNORE / DO NOTHING).
-            try insertPs.executeUpdate()
-            catch { case e: java.sql.SQLException if isDuplicateKey(e) => }
-          }
+  /** One table's statements inside a partition's transaction:
+    * PreparedStatement reuse and batched ops over the table's slice of
+    * each row, which starts at `offset` (PK values, then the value
+    * struct). */
+  private final class TableWriter(conn: Connection, dialect: Dialect,
+      p: TablePlan, offset: Int, batchSize: Int) {
+    private val (valueCols, pks) = (p.jdbcSchema.fieldNames.toSeq, p.jdbcPks)
+    private val t = dialect.normalizeIdent(p.table)
+    private val delete = conn.prepareStatement(dialect.deleteSql(t, pks))
+    private var nDel = 0
+    private val plan = dialect.upsertSql(t, valueCols, pks)
+    private val (upsertPs, insertPs) = plan match {
+      case NativeUpsert(sql, _) => (conn.prepareStatement(sql), null)
+      case UpdateInsert(up, ins, _) =>
+        (if (up.nonEmpty) conn.prepareStatement(up) else null,
+          conn.prepareStatement(ins))
+    }
+    private var nUp = 0
+    // UpdateInsert (generic dialect): buffer up to batchSize rows,
+    // batch all UPDATEs, read executeBatch's update counts, then
+    // batch-INSERT only the zero-count rows — ~2 round trips per
+    // batch instead of up to 2 per ROW (JdbcWriter.java:102-108).
+    private val pending = scala.collection.mutable.ArrayBuffer
+      .empty[(IndexedSeq[Any], IndexedSeq[Any])] // (colVals, pkVals)
+
+    private def bindUpdate(ui: UpdateInsert, i: Int): Unit = {
+      val (colVals, pkVals) = pending(i)
+      ui.updateBind(upsertPs, valueCols.zip(colVals)
+        .filterNot { case (c, _) => pks.contains(c) }.map(_._2), pkVals)
+    }
+
+    private def flushUpdateInsert(ui: UpdateInsert): Unit = {
+      if (pending.isEmpty) return
+      val hasUpdate = upsertPs != null
+      val needInsert =
+        if (!hasUpdate) pending.toIndexedSeq
+        else {
+          pending.indices.foreach { i => bindUpdate(ui, i); upsertPs.addBatch() }
+          val counts = upsertPs.executeBatch()
+          // SUCCESS_NO_INFO (-2) drivers don't report row counts:
+          // re-check those rows individually so new keys are never
+          // silently dropped.
+          val recheck = pending.indices
+            .filter(counts(_) == java.sql.Statement.SUCCESS_NO_INFO)
+            .filter { i => bindUpdate(ui, i); upsertPs.executeUpdate() == 0 }
+          (pending.indices.filter(counts(_) == 0) ++ recheck).map(pending(_))
         }
-        if (hasUpdate && needInsert.nonEmpty) insertPs.executeBatch()
-        pending.clear()
-      }
-      it.foreach { row =>
-        val op = row.getString(0)
-        val pkVals = pks.indices.map(i => jdbcValue(row.get(1 + i)))
-        if (op == Cdc.Op.Delete) {
-          pkVals.zipWithIndex.foreach { case (v, i) => delete.setObject(i + 1, v) }
-          delete.addBatch(); nDel += 1
-          if (nDel % batchSize == 0) delete.executeBatch()
-        } else {
-          val v = row.getStruct(1 + pks.length)
-          // PK columns bind from the ROUTING values (__pk_*, already
-          // key/value-coalesced): a PK riding only the record key
-          // would otherwise insert as NULL from the value struct —
-          // and key-only PK columns have no value-struct slot at all.
-          val colVals = valueCols.indices.map { i =>
-            val pkIdx = pks.indexOf(valueCols(i))
-            if (pkIdx >= 0) pkVals(pkIdx)
-            else if (v == null) null else jdbcValue(v.get(i))
-          }
-          plan match {
-            case NativeUpsert(_, bind) =>
-              bind(upsertPs, colVals)
-              upsertPs.addBatch(); nUp += 1
-              if (nUp % batchSize == 0) upsertPs.executeBatch()
-            case UpdateInsert(_, _, bind) =>
-              pending += ((colVals, pkVals))
-              if (pending.length >= batchSize)
-                flushUpdateInsert(bind, upsertPs != null)
-          }
+      needInsert.foreach { case (colVals, _) =>
+        colVals.zipWithIndex.foreach { case (cv, i) =>
+          insertPs.setObject(i + 1, cv)
+        }
+        if (hasUpdate) insertPs.addBatch()
+        else {
+          // All-PK tables have no UPDATE statement, so "insert if
+          // absent" must tolerate duplicate keys for the idempotent-
+          // replay contract (mirrors INSERT IGNORE / DO NOTHING).
+          try insertPs.executeUpdate()
+          catch { case e: java.sql.SQLException if isDuplicateKey(e) => }
         }
       }
+      if (hasUpdate && needInsert.nonEmpty) insertPs.executeBatch()
+      pending.clear()
+    }
+
+    def write(row: Row): Unit = {
+      val op = row.getString(0)
+      val pkVals = pks.indices.map(i => jdbcValue(row.get(offset + i)))
+      if (op == Cdc.Op.Delete) {
+        pkVals.zipWithIndex.foreach { case (v, i) => delete.setObject(i + 1, v) }
+        delete.addBatch(); nDel += 1
+        if (nDel % batchSize == 0) delete.executeBatch()
+      } else {
+        val v = row.getStruct(offset + pks.length)
+        // PK columns bind from the ROUTING values (the PK columns,
+        // already key/value-coalesced): a PK riding only the record key
+        // would otherwise insert as NULL from the value struct —
+        // and key-only PK columns have no value-struct slot at all.
+        val colVals = valueCols.indices.map { i =>
+          val pkIdx = pks.indexOf(valueCols(i))
+          if (pkIdx >= 0) pkVals(pkIdx)
+          else if (v == null) null else jdbcValue(v.get(i))
+        }
+        plan match {
+          case NativeUpsert(_, bind) =>
+            bind(upsertPs, colVals)
+            upsertPs.addBatch(); nUp += 1
+            if (nUp % batchSize == 0) upsertPs.executeBatch()
+          case ui: UpdateInsert =>
+            pending += ((colVals, pkVals))
+            if (pending.length >= batchSize) flushUpdateInsert(ui)
+        }
+      }
+    }
+
+    def finish(): Unit = {
       if (nDel % batchSize != 0) delete.executeBatch()
       plan match {
         case _: NativeUpsert =>
           if (nUp % batchSize != 0) upsertPs.executeBatch()
-        case UpdateInsert(_, _, bind) =>
-          flushUpdateInsert(bind, upsertPs != null)
+        case ui: UpdateInsert => flushUpdateInsert(ui)
       }
-      conn.commit()
-    } catch {
-      case e: Throwable => rollbackQuietly(conn); throw e
-    } finally closeQuietly(conn)
+    }
   }
 
   /** Failed-attempt cleanup must never REPLACE the original
@@ -614,77 +641,55 @@ object JdbcApply {
     }
   }
 
-  private def writeCorrupt(corrupt: DataFrame, cfg: Config): Long = {
-    val n = corrupt.count()
-    if (n == 0) return 0
+  /** Write the batch's corrupt rows (the caller's census already
+    * knows there are some) to the DLQ table. */
+  private def writeCorrupt(corrupt: DataFrame, cfg: Config): Unit = {
     withConnection(cfg) { conn =>
       val dialect = Dialects.forConnection(conn)
       val t = dialect.normalizeIdent(cfg.corruptTable)
       if (!tableExists(conn, t))
         exec(conn, dialect.createTableSql(t, Cdc.corruptEventSchema, Seq.empty))
     }
-    val (url, table, batchSize, user, password) =
-      (cfg.url, cfg.corruptTable, cfg.batchSize, cfg.user, cfg.password)
-    val (maxRetries, retryBackoffMs) = (cfg.maxRetries, cfg.retryBackoffMs)
-    val (bufRows, bufBytes) = (cfg.retryBufferRows, cfg.retryBufferBytes)
     val fields = Cdc.corruptEventSchema.fieldNames.toSeq
-    corrupt.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        // W17 retry, same shape as writePartition: materialize once
-        // (up to the RetryBufferRows/RetryBufferBytes bounds) for
-        // replay, fresh connection + txn per attempt;
-        // delete-then-insert by Kafka coordinates makes the replayed
-        // attempt idempotent.
-        def attemptOnce(rows: Iterator[Row]): Unit = {
-        val conn = connect(url, user, password)
-        try {
-          val dialect = Dialects.forConnection(conn)
-          val t = dialect.normalizeIdent(table)
-          val sql = s"INSERT INTO ${dialect.quote(t)} " +
-            s"(${fields.map(dialect.quote).mkString(", ")}) " +
-            s"VALUES (${fields.map(_ => "?").mkString(", ")})"
-          // REPLAY-IDEMPOTENT: a corrupt row's Kafka coordinates
-          // (topic, partition, offset) identify it globally, so a
-          // redelivered foreachBatch (at-least-once) must REPLACE its
-          // own DLQ rows, not append duplicates — the one spot where
-          // the reference's own at-least-once path duplicates
-          // (CorruptEventWriter.java:37-114 blind-inserts). Delete-
-          // then-insert by coordinates, chunked so memory stays at
-          // batchSize rows, inside one transaction per partition so a
-          // crash between the two phases can't lose rows.
-          val delSql = s"DELETE FROM ${dialect.quote(t)} WHERE " +
-            Seq("topic", "kafka_partition", "kafka_offset")
-              .map(c => s"${dialect.quote(c)} = ?").mkString(" AND ")
-          conn.setAutoCommit(false)
-          try {
-            val ins = conn.prepareStatement(sql)
-            val del = conn.prepareStatement(delSql)
-            rows.grouped(batchSize).foreach { chunk =>
-              chunk.foreach { row =>
-                (0 until 3).foreach(i => del.setObject(i + 1, jdbcValue(row.get(i))))
-                del.addBatch()
-              }
-              del.executeBatch()
-              chunk.foreach { row =>
-                fields.indices.foreach(i =>
-                  ins.setObject(i + 1, jdbcValue(row.get(i))))
-                ins.addBatch()
-              }
-              ins.executeBatch()
-            }
-            conn.commit()
-          } catch { case e: Throwable => rollbackQuietly(conn); throw e }
-        } finally closeQuietly(conn)
+    // Same retry scaffold as the apply write: "DLQ partitions are
+    // small by construction" does not survive a poisoned feed under
+    // errors.tolerance=log, where millions of wide corrupt rows can
+    // land in one partition; delete-then-insert by Kafka coordinates
+    // makes the replayed attempt idempotent.
+    writePartitions(corrupt, s"DLQ write to ${cfg.corruptTable}", cfg) {
+      (conn, dialect, rows) =>
+        val t = dialect.normalizeIdent(cfg.corruptTable)
+        val sql = s"INSERT INTO ${dialect.quote(t)} " +
+          s"(${fields.map(dialect.quote).mkString(", ")}) " +
+          s"VALUES (${fields.map(_ => "?").mkString(", ")})"
+        // REPLAY-IDEMPOTENT: a corrupt row's Kafka coordinates
+        // (topic, partition, offset) identify it globally, so a
+        // redelivered foreachBatch (at-least-once) must REPLACE its
+        // own DLQ rows, not append duplicates — the one spot where
+        // the reference's own at-least-once path duplicates
+        // (CorruptEventWriter.java:37-114 blind-inserts). Delete-
+        // then-insert by coordinates, chunked so memory stays at
+        // batchSize rows, inside one transaction per partition so a
+        // crash between the two phases can't lose rows.
+        val delSql = s"DELETE FROM ${dialect.quote(t)} WHERE " +
+          Seq("topic", "kafka_partition", "kafka_offset")
+            .map(c => s"${dialect.quote(c)} = ?").mkString(" AND ")
+        val ins = conn.prepareStatement(sql)
+        val del = conn.prepareStatement(delSql)
+        rows.grouped(cfg.batchSize).foreach { chunk =>
+          chunk.foreach { row =>
+            (0 until 3).foreach(i => del.setObject(i + 1, jdbcValue(row.get(i))))
+            del.addBatch()
+          }
+          del.executeBatch()
+          chunk.foreach { row =>
+            fields.indices.foreach(i =>
+              ins.setObject(i + 1, jdbcValue(row.get(i))))
+            ins.addBatch()
+          }
+          ins.executeBatch()
         }
-        // same retryOrStream scaffold as writePartition: "DLQ
-        // partitions are small by construction" does not survive a
-        // poisoned feed under errors.tolerance=log, where millions of
-        // wide corrupt rows can land in one partition
-        retryOrStream(it, s"DLQ write to $table", maxRetries,
-          retryBackoffMs, bufRows, bufBytes)(attemptOnce)
-      }
     }
-    n
   }
 
   // ------------------------------------------------------------- helpers
@@ -814,16 +819,7 @@ object JdbcApply {
     withTransientRetry(s"driver connection/DDL to ${cfg.url}",
       cfg.maxRetries, cfg.retryBackoffMs) {
       val conn = connect(cfg.url, cfg.user, cfg.password)
-      val out = try f(conn) catch {
-        case e: Throwable =>
-          try conn.close() catch { case s: Exception =>
-            log.warn(s"connection close failed after error: ${s.getMessage}") }
-          throw e
-      }
-      try conn.close() catch { case s: Exception =>
-        log.warn(s"connection close failed after success (not retried): " +
-          s.getMessage) }
-      out
+      try f(conn) finally closeQuietly(conn)
     }
 
   /** Escape JDBC metadata search-pattern wildcards ('_' and '%') so

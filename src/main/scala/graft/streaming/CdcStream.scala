@@ -22,7 +22,8 @@ import graft.sinks.JdbcApply
  * apply is an idempotent upsert/delete by PK, so replay after failure
  * converges to the same terminal state (reference's exactly-once story,
  * sink README.md:8). Parallelism = Kafka partitions for the narrow
- * stages, then one shuffle per table on the PK inside the apply.
+ * stages, then ONE shuffle per micro-batch on (table, pk) inside the
+ * apply, whatever the number of tables; the writer keeps it.
  */
 object CdcStream {
 

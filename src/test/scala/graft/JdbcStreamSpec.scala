@@ -56,6 +56,24 @@ class JdbcStreamSpec extends SparkSpec {
     batchSize = 2, // force multiple executeBatch flushes
     errorsTolerance = "log")
 
+  /** TEST_ORDERS and TEST_SHIPMENTS, both with the orders schema. */
+  private def twoTableCfg(db: String) = sinkCfg(db).copy(
+    tableSchemas = Map("TEST_ORDERS" -> orderSchema, "TEST_SHIPMENTS" -> orderSchema),
+    keySchemas = Map("TEST_ORDERS" -> StructType.fromDDL("ID BIGINT"),
+      "TEST_SHIPMENTS" -> StructType.fromDDL("ID BIGINT")),
+    primaryKeys = Map("TEST_ORDERS" -> Seq("ID"), "TEST_SHIPMENTS" -> Seq("ID")))
+
+  private def idsOf(url: String, table: String): Seq[Long] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        s"""SELECT "ID" FROM "$table" ORDER BY "ID"""")
+      val b = Seq.newBuilder[Long]
+      while (rs.next()) b += rs.getLong(1)
+      b.result()
+    } finally conn.close()
+  }
+
   private def queryAll(url: String): Seq[(Long, String, Double, String)] = {
     val conn = DriverManager.getConnection(url)
     try {
@@ -153,12 +171,28 @@ class JdbcStreamSpec extends SparkSpec {
         """{"ID":1,"ORDER_NAME":"ok","AMOUNT":1.0,"STATUS":"NEW"}"""),
       // valid upsert, but no key and no ID in the value → unroutable
       wireRow(1, "PT", null,
-        """{"ORDER_NAME":"orphan","AMOUNT":2.0,"STATUS":"NEW"}"""))
+        """{"ORDER_NAME":"orphan","AMOUNT":2.0,"STATUS":"NEW"}"""),
+      // a second table in the same batch: two orphans (counted one by
+      // one, never collapsed on their null key) beside a routable row
+      wireRow(2, "PT", """{"ID":7}""",
+        """{"ID":7,"ORDER_NAME":"ship","AMOUNT":3.0,"STATUS":"NEW"}""",
+        "TEST_SHIPMENTS"),
+      wireRow(3, "PT", null,
+        """{"ORDER_NAME":"orphan2","AMOUNT":4.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"),
+      wireRow(4, "PT", null,
+        """{"ORDER_NAME":"orphan3","AMOUNT":5.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"))
     val wire = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
-    val stats = JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), sinkCfg(db))
-    assert(stats.unroutableSkipped == 1, s"stats=$stats")
+    val stats = JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), twoTableCfg(db))
+    assert(stats.unroutableSkipped == 3, s"stats=$stats")
     assert(queryAll(s"jdbc:derby:memory:$db").map(_._1) == Seq(1L))
+    assert(idsOf(s"jdbc:derby:memory:$db", "TEST_SHIPMENTS") == Seq(7L))
+    // a batch whose valid rows are ALL unroutable still reports them
+    // (the write plan runs with nothing left to write)
+    val orphans = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(rows(1), rows(3))), Cdc.kafkaWireSchema)
+    val stats2 = JdbcApply.applyBatch(CdcNormalize(orphans, CdcConfig()), twoTableCfg(db))
+    assert(stats2.unroutableSkipped == 2, s"stats=$stats2")
   }
 
   test("errors.tolerance=none throws after writing the DLQ") {
@@ -287,12 +321,7 @@ class JdbcStreamSpec extends SparkSpec {
         """{"ID":2,"ORDER_NAME":"B","AMOUNT":2.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"))
     val wire = spark.createDataFrame(
       spark.sparkContext.parallelize(ev), Cdc.kafkaWireSchema)
-    val cfg = sinkCfg(db).copy(
-      tableSchemas = Map("TEST_ORDERS" -> orderSchema, "TEST_SHIPMENTS" -> orderSchema),
-      keySchemas = Map("TEST_ORDERS" -> StructType.fromDDL("ID BIGINT"),
-        "TEST_SHIPMENTS" -> StructType.fromDDL("ID BIGINT")),
-      primaryKeys = Map("TEST_ORDERS" -> Seq("ID"), "TEST_SHIPMENTS" -> Seq("ID")))
-    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
+    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), twoTableCfg(db))
     val conn = DriverManager.getConnection(s"jdbc:derby:memory:$db")
     try {
       Seq("TEST_ORDERS" -> "A", "TEST_SHIPMENTS" -> "B").foreach { case (t, want) =>
@@ -303,12 +332,88 @@ class JdbcStreamSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("one apply plan per batch: jobs and exchanges are constant in the table count; a clean batch runs no DLQ job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graftshim.GraftShims
+    object Plans extends AdaptiveSparkPlanHelper
+    val tables = Seq("T_A", "T_B", "T_C", "T_D")
+    val cfg = (db: String) => sinkCfg(db).copy(
+      tableSchemas = tables.map(_ -> orderSchema).toMap,
+      keySchemas = tables.map(_ -> StructType.fromDDL("ID BIGINT")).toMap,
+      primaryKeys = tables.map(_ -> Seq("ID")).toMap)
+    // two upserts and a delete per table
+    def rowsFor(ts: Seq[String]): Seq[Row] = ts.zipWithIndex.flatMap { case (t, i) =>
+      Seq(wireRow(3L * i, "PT", """{"ID":1}""",
+          """{"ID":1,"ORDER_NAME":"A","AMOUNT":1.0,"STATUS":"NEW"}""", t),
+        wireRow(3L * i + 1, "PT", """{"ID":2}""",
+          """{"ID":2,"ORDER_NAME":"B","AMOUNT":2.0,"STATUS":"NEW"}""", t),
+        wireRow(3L * i + 2, "DL", """{"ID":1}""", null, t))
+    }
+    /** (Spark jobs, shuffle exchanges in the executed plans, SQL
+      * executions started from the DLQ writer) of one applyBatch. */
+    def census(rows: Seq[Row], db: String): (Int, Int, Int) = {
+      val wire = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
+      val norm = CdcNormalize(wire, CdcConfig())
+      val jobs, exchanges, dlq = new java.util.concurrent.atomic.AtomicInteger
+      val jobListener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart
+              if s.details.contains("JdbcApply$.writeCorrupt") => dlq.incrementAndGet()
+          case _ =>
+        }
+      }
+      val planListener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          exchanges.addAndGet(Plans.collectWithSubqueries(qe.executedPlan) {
+            case x: ShuffleExchangeLike => x }.length)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      GraftShims.waitListenerBusEmpty(spark.sparkContext)
+      spark.sparkContext.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        JdbcApply.applyBatch(norm, cfg(db))
+        GraftShims.waitListenerBusEmpty(spark.sparkContext)
+      } finally {
+        spark.sparkContext.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+      (jobs.get, exchanges.get, dlq.get)
+    }
+    val one = census(rowsFor(tables.take(1)), "plan1db")
+    val four = census(rowsFor(tables), "plan4db")
+    info(s"(jobs, exchanges, DLQ executions): 1 table $one, 4 tables $four")
+    assert(one._1 > 0 && one._2 > 0, s"the counters must see the apply: $one")
+    assert(one._1 == four._1,
+      s"Spark jobs per applyBatch must not grow with tables: 1 table ${one._1}, 4 tables ${four._1}")
+    assert(one._2 == four._2,
+      s"shuffle exchanges must not grow with tables: 1 table ${one._2}, 4 tables ${four._2}")
+    assert(one._3 == 0 && four._3 == 0, s"a clean batch must run no DLQ job: $one / $four")
+    // the DLQ detector is live: a batch with a corrupt row does run it
+    val dirty = census(rowsFor(tables.take(1)) :+
+      wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A"), "plandirtydb")
+    assert(dirty._3 > 0, s"a dirty batch must reach the DLQ writer: $dirty")
+    // and every table landed: ID 2 survives, the delete removed ID 1
+    tables.foreach(t => assert(idsOf("jdbc:derby:memory:plan4db", t) == Seq(2L), t))
+  }
+
   test("undeclared table applies via runtime-inferred schema (C1 fallback)") {
     val db = "inferdb"
+    // TEST_ORDERS has no pinned schema; TEST_SHIPMENTS, pinned, rides
+    // the same batch — the two share one write plan
+    val ev = fixture.take(5) :+ wireRow(6, "PT", """{"ID":4}""",
+      """{"ID":4,"ORDER_NAME":"S","AMOUNT":4.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS")
     val wire = spark.createDataFrame(
-      spark.sparkContext.parallelize(fixture.take(5)), Cdc.kafkaWireSchema)
-    val cfg = sinkCfg(db).copy(
-      tableSchemas = Map.empty, // NO pinned schema — PK config only
+      spark.sparkContext.parallelize(ev), Cdc.kafkaWireSchema)
+    val cfg = twoTableCfg(db).copy(
+      tableSchemas = Map("TEST_SHIPMENTS" -> orderSchema), // TEST_ORDERS: PK config only
       errorsTolerance = "all")
     JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
     // inferred {AMOUNT double, ID long, ORDER_NAME string, STATUS string}
@@ -316,6 +421,7 @@ class JdbcStreamSpec extends SparkSpec {
     assert(queryAll(s"jdbc:derby:memory:$db") == Seq(
       (1L, "Order-001", 100.50, "NEW"),
       (2L, "Order-002-Updated", 250.00, "PROCESSING")))
+    assert(idsOf(s"jdbc:derby:memory:$db", "TEST_SHIPMENTS") == Seq(4L))
   }
 
   test("field.type.overrides: date column materializes; unparseable routes to DLQ") {
@@ -711,8 +817,9 @@ class JdbcStreamSpec extends SparkSpec {
     // the BYTE bound's config plumbing, driven executor-side (the row
     // bound has its own e2e case above; the byte bound was spec'd only
     // via bufferHead at defaults until now). Two distinct PKs chosen to
-    // hash into ONE write partition (repartition(__pk_ID) is
-    // HashPartitioning = pmod(murmur3(ID), shufflePartitions), so the
+    // hash into ONE write partition (the writer keeps the last-write-
+    // wins window's exchange, HashPartitioning on (target_table,
+    // __pk0_0) = pmod(murmur3(table, ID), shufflePartitions), so the
     // choice replicates it exactly): under default bounds the 2-row
     // partition buffers fully and a transient flap retries to success;
     // under a 1-byte budget the first admit overshoots, the second row
@@ -722,7 +829,7 @@ class JdbcStreamSpec extends SparkSpec {
     FlakyJdbc.register()
     val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val byPart = spark.range(1, 51).toDF("ID")
-      .select(col("ID"), pmod(hash(col("ID")), lit(np)).as("p"))
+      .select(col("ID"), pmod(hash(lit("TEST_ORDERS"), col("ID")), lit(np)).as("p"))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
       .groupBy(_._2).values.maxBy(_.length).map(_._1)
     val coIds = byPart.take(2).toSeq
