@@ -15,26 +15,29 @@ import graft.operators.CdcOps
  * IidrCdcSinkTask.java:94-155), designed to be called from
  * `foreachBatch` (streaming) or directly (batch backfill).
  *
- * Scale shape per micro-batch — ONE plan whatever the number of
- * tables, like the reference's single pass over a poll's
- * `Map<table, List<record>>` (IidrCdcSinkTask.java:101-126):
- *  1. one census job: the corrupt count and the tables with valid rows;
- *  2. corrupt branch first (only when corrupt rows exist), then
- *     optional fail (tolerance=none), like IidrCdcSinkTask.java:236-264;
- *  3. one write job: last-write-wins on (table, pk), the order-
+ * Scale shape per micro-batch — two actions (three Spark jobs) for any
+ * number of tables, like the reference's single pass over a poll that
+ * routes corrupt records to the DLQ and groups the rest by table
+ * (IidrCdcSinkTask.java:101-126, 236-264):
+ *  1. one narrow census job, which also fills the batch's cache: the
+ *     corrupt count, the tables with valid rows, and the WARN sample;
+ *  2. one write job: last-write-wins on (table, pk), the order-
  *     insensitive equivalent of offset-order apply (SURVEY.md §2.6),
  *     is its ONE exchange, and the writer keeps that partitioning, so
- *     no two connections ever race on a key;
- *  4. per partition: one JDBC transaction over its tables, PS reuse,
- *     `addBatch`/`executeBatch` every `batchSize` rows
+ *     no two connections ever race on a key; the corrupt rows ride the
+ *     same job as a narrow DLQ branch. Under tolerance=none a dirty
+ *     batch writes the DLQ branch alone, then fails;
+ *  3. per partition: one JDBC transaction over its tables (or its DLQ
+ *     rows), PS reuse, `addBatch`/`executeBatch` every `batchSize` rows
  *     (JdbcWriter.java:102-108), rollback + rethrow on failure
  *     (IidrCdcSinkTask.java:143-154). Exactly-once EFFECT comes from
  *     idempotent upsert replay, not 2PC (sink README.md:8).
  *
  * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs on the
- * DRIVER, for every present table on one connection, before any
- * executor work — the reference is single-task and can DDL inline; we
- * must serialize DDL against parallel writers (SURVEY.md §7.4).
+ * DRIVER, for every present table and the DLQ table (only when the
+ * census counted corrupt rows) on one connection, before any executor
+ * work — the reference is single-task and can DDL inline; we must
+ * serialize DDL against parallel writers (SURVEY.md §7.4).
  */
 object JdbcApply {
 
@@ -139,50 +142,31 @@ object JdbcApply {
       }
     val batch = marked.persist()
     try {
-      // Census: ONE job over the PERSISTED batch. Tables with no rows
-      // this batch skip their DDL and their slice of the write plan,
-      // rows routed to an UNCONFIGURED table are surfaced (a config
-      // typo would otherwise advance the checkpoint past the data with
-      // no signal), and a clean batch never touches the DLQ.
-      val census = batch
-        .groupBy(col(Cdc.Cols.CorruptReason).isNull.as("valid"),
-          col(Cdc.Cols.TargetTable))
-        .count().collect()
-      val nCorrupt = census.filterNot(_.getBoolean(0)).map(_.getLong(2)).sum
-      val present = census.filter(r => r.getBoolean(0) && !r.isNullAt(1))
-        .map(_.getString(1)).toSet
-      val warned: Long =
-        if (nCorrupt == 0) 0L
-        else {
-          val corrupt = CdcOps.toCorruptEvents(batch,
-            col("topic"), col("partition"), col("offset"),
-            col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
-            to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
-              col(Cdc.Cols.SourceTs))),
-            col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType))
-          writeCorrupt(corrupt, cfg)
-          cfg.errorsTolerance match {
-            case "none" =>
-              throw new IllegalStateException(
-                s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
-            case "log" =>
-              // Per-record WARN + skip (IidrCdcSinkTask.java:254-259),
-              // capped at MaxLoggedCorrupt with a rollup line so the
-              // count is always visible.
-              val sample = corrupt
-                .select(col("error_reason"), col("topic"),
-                  col("kafka_partition"), col("kafka_offset"))
-                .limit(MaxLoggedCorrupt).collect()
-              sample.foreach(r => log.warn(
-                s"Corrupt record skipped: ${r.get(0)} (topic=${r.get(1)}, " +
-                  s"partition=${r.get(2)}, offset=${r.get(3)})"))
-              if (nCorrupt > sample.length)
-                log.warn(s"... and ${nCorrupt - sample.length} more corrupt " +
-                  "record(s) skipped (see DLQ table)")
-              sample.length.toLong
-            case _ => 0L // "all": silently skip
-          }
-        }
+      // Census: ONE narrow job over the PERSISTED batch, which also
+      // fills the cache. Tables with no rows this batch skip their DDL
+      // and their slice of the write plan, rows routed to an
+      // UNCONFIGURED table are surfaced (a config typo would otherwise
+      // advance the checkpoint past the data with no signal), and a
+      // clean batch never touches the DLQ.
+      val (nCorrupt, present, sample) = census(batch)
+      // tolerance=none: the corrupt rows still reach the DLQ, data rows
+      // never land, then the batch fails (IidrCdcSinkTask.java:236-264).
+      val strict = nCorrupt > 0 && cfg.errorsTolerance == "none"
+      // Per-record WARN + skip under log (IidrCdcSinkTask.java:254-259),
+      // capped at MaxLoggedCorrupt with a rollup line so the count is
+      // always visible; "all" skips silently.
+      val warned = if (cfg.errorsTolerance != "log") 0L else {
+        sample.foreach(log.warn)
+        if (nCorrupt > sample.length) log.warn(s"... and " +
+          s"${nCorrupt - sample.length} more corrupt record(s) skipped (see DLQ table)")
+        sample.length.toLong
+      }
+      val corrupt = Option.when(nCorrupt > 0)(CdcOps.toCorruptEvents(batch,
+        col("topic"), col("partition"), col("offset"),
+        col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
+        to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
+          col(Cdc.Cols.SourceTs))),
+        col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType)))
 
       // A table with a PK but no pinned schema is still applied — its
       // value schema is INFERRED from the batch's own payloads (C1
@@ -202,10 +186,39 @@ object JdbcApply {
           "primary key is configured, so these rows are NOT applied")
       // Every table's config checks run before any DDL or write, so a
       // misconfigured table fails the batch before the others land.
-      val plans = configured.toSeq.sorted.filter(present.contains)
-        .flatMap(tablePlan(batch, _, cfg))
-      ApplyStats(nCorrupt, warned, writeTables(batch, plans, cfg))
+      val plans = if (strict) Nil else configured.toSeq.sorted
+        .filter(present.contains).flatMap(tablePlan(batch, _, cfg))
+      val unroutable = writeTables(batch, plans, corrupt, cfg)
+      if (strict)
+        throw new IllegalStateException(
+          s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
+      ApplyStats(nCorrupt, warned, unroutable)
     } finally batch.unpersist()
+  }
+
+  /** ONE narrow job (no exchange, so AQE adds no stages): the corrupt
+    * count, the tables with valid rows, and WARN lines for the first
+    * [[MaxLoggedCorrupt]] corrupt rows, merged from per-partition
+    * summaries on the driver. */
+  private def census(batch: DataFrame): (Long, Set[String], Seq[String]) = {
+    import batch.sparkSession.implicits._
+    val parts = batch.select(substring(col(Cdc.Cols.CorruptReason), 1, 1000),
+        col(Cdc.Cols.TargetTable), col("topic"), col("partition"), col("offset"))
+      .mapPartitions { (rows: Iterator[Row]) =>
+        var n = 0L
+        val (tables, sample) = (scala.collection.mutable.Set.empty[String], Seq.newBuilder[String])
+        rows.foreach { r =>
+          if (r.isNullAt(0)) { if (!r.isNullAt(1)) tables += r.getString(1) }
+          else {
+            if (n < MaxLoggedCorrupt) sample += s"Corrupt record skipped: " +
+              s"${r.get(0)} (topic=${r.get(2)}, partition=${r.get(3)}, offset=${r.get(4)})"
+            n += 1
+          }
+        }
+        Iterator((n, tables.toSeq, sample.result()))
+      }.collect()
+    (parts.map(_._1).sum, parts.flatMap(_._2).toSet,
+      parts.toSeq.flatMap(_._3).take(MaxLoggedCorrupt))
   }
 
   /** One present table: parse schema, STRING-field overrides, key
@@ -236,8 +249,7 @@ object JdbcApply {
       overrides.get(f.name)
         .map(t => f.copy(dataType = graft.operators.TypeOverrides.sparkType(t)))
         .getOrElse(f)))
-    val keySchema = cfg.keySchemas.getOrElse(table,
-      StructType(Seq.empty[StructField]))
+    val keySchema = cfg.keySchemas.getOrElse(table, new StructType())
     val pks = cfg.primaryKeys.getOrElse(table, Seq.empty)
     require(pks.nonEmpty, s"no primary key configured for $table")
 
@@ -278,23 +290,52 @@ object JdbcApply {
         s"field.name.case=${cfg.fieldNameCase} collapses distinct wire fields " +
           s"into duplicate column name(s) ${dups.mkString(", ")} for table $table")
     }
-    Some(TablePlan(table, schema, overrides, keySchema, pks, jdbcSchema,
-      pks.map(cased)))
+    Some(TablePlan(table, schema, overrides, keySchema, pks, jdbcSchema, pks.map(cased)))
   }
 
-  /** DDL for every present table on one driver connection, then ONE
-    * write job whose only exchange is the last-write-wins window on
-    * (table, pk). Returns the number of valid rows skipped because no
-    * PK value could be resolved. */
+  /** DDL for every present table (and the DLQ table, given `corrupt`
+    * rows) on one driver connection, then ONE write job: the LWW window
+    * on (table, pk) is its only exchange, and the corrupt rows ride it
+    * as a narrow `__dlq` branch. Returns the unroutable-row count. */
   private def writeTables(batch: DataFrame, plans: Seq[TablePlan],
-      cfg: Config): Long = {
-    if (plans.isEmpty) return 0L
+      corrupt: Option[DataFrame], cfg: Config): Long = {
+    if (plans.isEmpty && corrupt.isEmpty) return 0L
     // DDL on the driver, before executors touch the tables.
     withConnection(cfg) { conn =>
       val dialect = Dialects.forConnection(conn)
-      plans.foreach(p =>
-        ensureTable(conn, dialect, p.table, p.jdbcSchema, p.jdbcPks, cfg))
+      plans.foreach(p => ensureTable(conn, dialect, p.table, p.jdbcSchema, p.jdbcPks, cfg))
+      val dlq = dialect.normalizeIdent(cfg.corruptTable)
+      if (corrupt.nonEmpty && !tableExists(conn, dlq))
+        exec(conn, dialect.createTableSql(dlq, Cdc.corruptEventSchema, Seq.empty))
     }
+    val unroutable = Observation()
+    // Union by name: each branch's rows read null in the other's
+    // columns, so a row is a DLQ row exactly when `__dlq` is set.
+    val out = (Option.when(plans.nonEmpty)(lwwRows(batch, plans, unroutable)) ++
+      corrupt.map(c => c.select(struct(c.columns.map(col): _*).as("__dlq"))))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
+      .map { case (p, offset) => p.table -> (p, offset) }.toMap
+    // No repartition: the window's exchange already put each
+    // (table, pk) in exactly one partition, and one transaction covers
+    // every table the partition carries.
+    writePartitions(out, slots, out.schema.fieldNames.indexOf("__dlq"), cfg)
+    if (plans.isEmpty) return 0L
+    val counts = unroutable.get
+    plans.indices.map { i =>
+      val n = counts(s"u$i").asInstanceOf[Long]
+      if (n > 0)
+        log.warn(s"$n record(s) for table ${plans(i).table} skipped: no " +
+          s"primary-key value resolvable from key or value payload")
+      n
+    }.sum
+  }
+
+  /** Valid rows after last-write-wins on (table, pk): op, table, then
+    * per table its PK columns and value struct. `unroutable` counts,
+    * per table, the rows skipped for lack of a PK value. */
+  private def lwwRows(batch: DataFrame, plans: Seq[TablePlan],
+      unroutable: Observation): DataFrame = {
     val tableCol = col(Cdc.Cols.TargetTable)
     val ix = plans.indices
     val mine = plans.map(p => tableCol === p.table)
@@ -338,76 +379,41 @@ object JdbcApply {
     // counts them per table on the write plan itself, so the count
     // rides the write job instead of costing one of its own.
     val routable = ix.map(i => mine(i) && pkCols(i).map(col(_).isNotNull).reduce(_ && _))
-    val unroutable = Observation()
     val metrics = ix.map(i => count(when(mine(i) && !routable(i), true)).as(s"u$i"))
-    val lww = CdcOps.lastWriteWins(
+    CdcOps.lastWriteWins(
       keyed.observe(unroutable, metrics.head, metrics.tail: _*)
         .filter(routable.reduce(_ || _)),
       Cdc.Cols.TargetTable, pkCols.flatten, "offset")
-    // A row: op, table, then per table its PK columns and value struct.
-    val out = lww.select((col(Cdc.Cols.Op) +: tableCol +:
-      ix.flatMap(i => pkCols(i).map(col) :+ col(s"__v$i"))): _*)
-    val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
-      .map { case (p, offset) => p.table -> (p, offset) }.toMap
-    // No repartition: the window's exchange already put each
-    // (table, pk) in exactly one partition, and one transaction covers
-    // every table the partition carries.
-    writePartitions(out, "apply partition write", cfg) { (conn, dialect, rows) =>
-      val writers = scala.collection.mutable.Map.empty[String, TableWriter]
-      rows.foreach { row =>
-        val (p, offset) = slots(row.getString(1))
-        writers.getOrElseUpdate(p.table,
-          new TableWriter(conn, dialect, p, offset, cfg.batchSize)).write(row)
-      }
-      writers.values.foreach(_.finish())
-    }
-    val counts = unroutable.get
-    ix.map { i =>
-      val n = counts(s"u$i").asInstanceOf[Long]
-      if (n > 0)
-        log.warn(s"$n record(s) for table ${plans(i).table} skipped: no " +
-          s"primary-key value resolvable from key or value payload")
-      n
-    }.sum
+      .select((col(Cdc.Cols.Op) +: tableCol +:
+        ix.flatMap(i => pkCols(i).map(col) :+ col(s"__v$i"))): _*)
   }
 
-  /** Retry-replay buffer bounds, rows AND (estimated) bytes per
-    * partition: a retry must re-bind the partition's rows after the
-    * failed attempt's rollback, which means holding them on the
-    * executor heap — fine for the micro-batch-sized partitions the
-    * streaming apply produces (the target database buffers the same
-    * rows as one open transaction), NOT fine for a multi-million-row
-    * backfill partition that used to stream from the shuffle with
-    * O(batchSize) residency, and a ROW bound alone is no bound at all
-    * for wide rows (1M × 5 KB DLQ payloads ≈ 5 GB). The byte budget
-    * accumulates per row from a cheap width approximation
-    * ([[approxRowBytes]] — string/binary payloads dominate a wide
-    * row, and the same values get fully bound to JDBC later, so an
-    * O(width) pass per row costs a fraction of work already owed;
-    * a one-shot calibration over the first rows would be defeated by
-    * a partition whose early rows are unrepresentatively narrow).
-    * Past either bound the partition streams exactly as before and
-    * W17 retry stands down for it (one WARN says so): the outer
-    * Structured Streaming restart remains the retry of record, as it
-    * was before retry was wired. Both bounds are per TASK, and tasks
-    * run concurrently — see [[Config.retryBufferBytes]] for the
-    * per-executor multiplication; these are only the defaults. */
+  /** Retry-replay buffer bounds per partition, rows AND estimated
+    * bytes: a retry re-binds the partition's rows after the failed
+    * attempt's rollback, so they sit on the executor heap — fine for
+    * micro-batch-sized partitions (the database holds the same rows in
+    * one open transaction), NOT for a multi-million-row backfill
+    * partition that used to stream with O(batchSize) residency; and a
+    * ROW bound alone is no bound for wide rows (1M × 5 KB DLQ payloads
+    * ≈ 5 GB). Bytes accumulate per row from [[approxRowBytes]], an
+    * O(width) pass over values JDBC binds anyway (a one-shot calibration
+    * would be fooled by a partition whose early rows are narrow). Past
+    * either bound the partition streams and W17 retry stands down for it
+    * (one WARN): the Structured Streaming restart is the retry of record.
+    * Both bounds are per TASK and tasks run concurrently — see
+    * [[Config.retryBufferBytes]]; these are only the defaults. */
   private[graft] val RetryBufferRows = 1 << 20
   private[graft] val RetryBufferBytes = 64L << 20
 
   /** Heap-weight approximation of one buffered row, counting what the
-    * JVM actually holds: the GenericRow + its backing Object[] (32 B
-    * of headers + one 8 B reference per field) and per-field payload
-    * INCLUDING object headers — a boxed primitive is a 24 B object,
-    * not its primitive width; a String is header + coder/hash fields
-    * + a byte[] of up to 2 B/char (UTF-16 worst case; compact latin-1
-    * strings cost half, so the estimate leans high there, never low);
-    * boxed-element arrays/seqs pay a 24 B box plus the 8 B slot per
-    * element. [[JdbcRetryBufferSpec]] pins this against
-    * `SizeEstimator.estimate` within a documented factor on wide rows
-    * (binary / decimal / long string / array shapes). Cheap enough to
-    * run per row; exact enough that retryBufferBytes is a real heap
-    * bound, not a payload-only undercount. */
+    * JVM holds: GenericRow + backing Object[] (32 B of headers + an 8 B
+    * reference per field) and per-field payload WITH object headers — a
+    * boxed primitive is a 24 B object; a String is header + fields + a
+    * byte[] of up to 2 B/char (UTF-16 worst case, so compact latin-1
+    * strings lean high, never low); boxed-element arrays/seqs pay a 24 B
+    * box plus an 8 B slot per element. [[JdbcRetryBufferSpec]] pins it
+    * against `SizeEstimator.estimate` within a documented factor on wide
+    * rows, so retryBufferBytes is a real heap bound. */
   private[graft] def approxRowBytes(r: Row): Long = {
     var s = 32L; var i = 0
     while (i < r.length) {
@@ -438,19 +444,15 @@ object JdbcApply {
     case _                 => 24L
   }
 
-  /** Drain the head by hand: `Iterator.take`'s contract says to
-    * DISCARD the source afterwards (an override may consume or return
-    * the receiver), so `take(n).toVector` followed by `++ it` risks
-    * silently dropping the tail on exactly the oversized partitions
-    * the cap exists for. A manual next() loop leaves `it` positioned
-    * at the first un-buffered row by definition — so after this
-    * returns, `it.hasNext` IS the overflow signal (a partition that
-    * fits entirely, even at exactly the row bound, keeps its retry:
-    * the memory is already paid for). The buffer never holds more
-    * than `maxRows` rows; the byte bound is checked BEFORE each
-    * admit, so the final row may overshoot `maxBytes` by its own
-    * width (a row's size is unknowable before reading it) and the
-    * buffer's estimated total stays < maxBytes + one row. */
+  /** Drain the head by hand: `Iterator.take`'s contract says to DISCARD
+    * the source afterwards, so `take(n).toVector` then `++ it` risks
+    * dropping the tail on exactly the oversized partitions the cap
+    * exists for. A next() loop leaves `it` at the first un-buffered row,
+    * so afterwards `it.hasNext` IS the overflow signal (a partition that
+    * fits, even at exactly the row bound, keeps its retry). At most
+    * `maxRows` rows; the byte bound is checked BEFORE each admit, so the
+    * last row may overshoot `maxBytes` by its own width (unknowable
+    * before reading it). */
   private[graft] def bufferHead(it: Iterator[Row], maxRows: Int,
       maxBytes: Long): IndexedSeq[Row] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -463,24 +465,33 @@ object JdbcApply {
     buf.toIndexedSeq
   }
 
-  /** Run `attempt` over every nonempty partition of `df`, each attempt
-    * on a fresh connection inside one transaction: commit on success,
-    * rollback + rethrow on failure (IidrCdcSinkTask.java:143-154).
-    * W17 retry scaffold shared by the apply and DLQ writers: when
-    * retries are enabled the partition's rows materialize ONCE (up to
+  /** Write every nonempty partition of `out`, each attempt on a fresh
+    * connection inside one transaction: commit on success, rollback +
+    * rethrow on failure (IidrCdcSinkTask.java:143-154). A row whose
+    * `__dlq` column (`dlqIx`, -1 when absent) is set goes to the
+    * [[DlqWriter]], any other to its table's [[TableWriter]]. W17
+    * retry: when enabled, the partition's rows materialize ONCE (up to
     * [[RetryBufferRows]]/[[RetryBufferBytes]]) so a retry can re-bind
-    * them after the failed attempt's rollback; if the partition
-    * overflows either retry-buffer bound, it streams exactly as before
-    * retry was wired (one WARN; restart-level replay only) rather than
-    * risk the heap. */
-  private def writePartitions(df: DataFrame, what: String, cfg: Config)(
-      attempt: (Connection, Dialect, Iterator[Row]) => Unit): Unit =
-    df.foreachPartition { (it: Iterator[Row]) =>
+    * them after the failed attempt's rollback; a partition over either
+    * bound streams exactly as before retry was wired (one WARN;
+    * restart-level replay only) rather than risk the heap. */
+  private def writePartitions(out: DataFrame, slots: Map[String, (TablePlan, Int)],
+      dlqIx: Int, cfg: Config): Unit =
+    out.foreachPartition { (it: Iterator[Row]) =>
+      val what = "apply partition write"
       def once(rows: Iterator[Row]): Unit = {
         val conn = connect(cfg.url, cfg.user, cfg.password)
         try {
           conn.setAutoCommit(false)
-          attempt(conn, Dialects.forConnection(conn), rows)
+          val dialect = Dialects.forConnection(conn)
+          val writers = scala.collection.mutable.Map.empty[Option[String], RowWriter]
+          rows.foreach { row => // key None: the DLQ
+            val key = if (dlqIx >= 0 && !row.isNullAt(dlqIx)) None else Some(row.getString(1))
+            writers.getOrElseUpdate(key, key.fold[RowWriter](new DlqWriter(conn, dialect, cfg, dlqIx)) {
+              t => new TableWriter(conn, dialect, slots(t)._1, slots(t)._2, cfg.batchSize)
+            }).write(row)
+          }
+          writers.values.foreach(_.finish())
           conn.commit()
         } catch { case e: Throwable => rollbackQuietly(conn); throw e }
         finally closeQuietly(conn)
@@ -505,8 +516,10 @@ object JdbcApply {
     * PreparedStatement reuse and batched ops over the table's slice of
     * each row, which starts at `offset` (PK values, then the value
     * struct). */
+  private sealed trait RowWriter { def write(row: Row): Unit; def finish(): Unit }
+
   private final class TableWriter(conn: Connection, dialect: Dialect,
-      p: TablePlan, offset: Int, batchSize: Int) {
+      p: TablePlan, offset: Int, batchSize: Int) extends RowWriter {
     private val (valueCols, pks) = (p.jdbcSchema.fieldNames.toSeq, p.jdbcPks)
     private val t = dialect.normalizeIdent(p.table)
     private val delete = conn.prepareStatement(dialect.deleteSql(t, pks))
@@ -641,54 +654,44 @@ object JdbcApply {
     }
   }
 
-  /** Write the batch's corrupt rows (the caller's census already
-    * knows there are some) to the DLQ table. */
-  private def writeCorrupt(corrupt: DataFrame, cfg: Config): Unit = {
-    withConnection(cfg) { conn =>
-      val dialect = Dialects.forConnection(conn)
-      val t = dialect.normalizeIdent(cfg.corruptTable)
-      if (!tableExists(conn, t))
-        exec(conn, dialect.createTableSql(t, Cdc.corruptEventSchema, Seq.empty))
+  /** The DLQ table's statements inside a partition's transaction.
+    * REPLAY-IDEMPOTENT: Kafka coordinates (topic, partition, offset)
+    * identify a corrupt row globally, so a redelivered foreachBatch or
+    * a retried attempt REPLACES its own DLQ rows instead of appending
+    * duplicates, where the reference blind-inserts
+    * (CorruptEventWriter.java:37-114). Delete-then-insert by
+    * coordinates, chunked so memory stays at batchSize rows, inside the
+    * partition's one transaction so a crash between the phases can't
+    * lose rows. */
+  private final class DlqWriter(conn: Connection, dialect: Dialect, cfg: Config,
+      dlqIx: Int) extends RowWriter {
+    private val fields = Cdc.corruptEventSchema.fieldNames.toSeq
+    private val t = dialect.quote(dialect.normalizeIdent(cfg.corruptTable))
+    private val ins = conn.prepareStatement(
+      s"INSERT INTO $t (${fields.map(dialect.quote).mkString(", ")}) " +
+        s"VALUES (${fields.map(_ => "?").mkString(", ")})")
+    private val del = conn.prepareStatement(s"DELETE FROM $t WHERE " +
+      Seq("topic", "kafka_partition", "kafka_offset")
+        .map(c => s"${dialect.quote(c)} = ?").mkString(" AND "))
+    private val chunk = scala.collection.mutable.ArrayBuffer.empty[Row]
+
+    def write(row: Row): Unit = {
+      chunk += row.getStruct(dlqIx)
+      if (chunk.length >= cfg.batchSize) finish()
     }
-    val fields = Cdc.corruptEventSchema.fieldNames.toSeq
-    // Same retry scaffold as the apply write: "DLQ partitions are
-    // small by construction" does not survive a poisoned feed under
-    // errors.tolerance=log, where millions of wide corrupt rows can
-    // land in one partition; delete-then-insert by Kafka coordinates
-    // makes the replayed attempt idempotent.
-    writePartitions(corrupt, s"DLQ write to ${cfg.corruptTable}", cfg) {
-      (conn, dialect, rows) =>
-        val t = dialect.normalizeIdent(cfg.corruptTable)
-        val sql = s"INSERT INTO ${dialect.quote(t)} " +
-          s"(${fields.map(dialect.quote).mkString(", ")}) " +
-          s"VALUES (${fields.map(_ => "?").mkString(", ")})"
-        // REPLAY-IDEMPOTENT: a corrupt row's Kafka coordinates
-        // (topic, partition, offset) identify it globally, so a
-        // redelivered foreachBatch (at-least-once) must REPLACE its
-        // own DLQ rows, not append duplicates — the one spot where
-        // the reference's own at-least-once path duplicates
-        // (CorruptEventWriter.java:37-114 blind-inserts). Delete-
-        // then-insert by coordinates, chunked so memory stays at
-        // batchSize rows, inside one transaction per partition so a
-        // crash between the two phases can't lose rows.
-        val delSql = s"DELETE FROM ${dialect.quote(t)} WHERE " +
-          Seq("topic", "kafka_partition", "kafka_offset")
-            .map(c => s"${dialect.quote(c)} = ?").mkString(" AND ")
-        val ins = conn.prepareStatement(sql)
-        val del = conn.prepareStatement(delSql)
-        rows.grouped(cfg.batchSize).foreach { chunk =>
-          chunk.foreach { row =>
-            (0 until 3).foreach(i => del.setObject(i + 1, jdbcValue(row.get(i))))
-            del.addBatch()
-          }
-          del.executeBatch()
-          chunk.foreach { row =>
-            fields.indices.foreach(i =>
-              ins.setObject(i + 1, jdbcValue(row.get(i))))
-            ins.addBatch()
-          }
-          ins.executeBatch()
-        }
+
+    def finish(): Unit = if (chunk.nonEmpty) {
+      chunk.foreach { row =>
+        (0 until 3).foreach(i => del.setObject(i + 1, jdbcValue(row.get(i))))
+        del.addBatch()
+      }
+      del.executeBatch()
+      chunk.foreach { row =>
+        fields.indices.foreach(i => ins.setObject(i + 1, jdbcValue(row.get(i))))
+        ins.addBatch()
+      }
+      ins.executeBatch()
+      chunk.clear()
     }
   }
 
@@ -720,31 +723,18 @@ object JdbcApply {
     case other => other
   }
 
-  /** Duplicate-key detection that survives non-JDBC4 drivers.
-    * DUPLICATE-specific only: SQLState 23505 (unique violation —
-    * ANSI-distinct, used by Derby/PG/H2), or a duplicate-key VENDOR
-    * code (MySQL 1062, Oracle ORA-00001, SQL Server 2601/2627). The
-    * generic states 23000/23001 alone do NOT qualify: Oracle and
-    * SQL Server report FK (ORA-02291, error 547) and NOT NULL
-    * (MySQL 1048) failures under 23000 too, so accepting the bare
-    * state would silently drop genuinely corrupt rows on the all-PK
-    * insert path — as would the whole class-23 family or the typed
-    * subclass (FK 23503, NOT NULL 23502, CHECK 23514). Anything else
-    * rethrows. */
   /** TRANSIENT-error classification for W17 retry: the JDBC4 marker
     * types (`SQLTransientException` — incl. deadlock-victim
     * `SQLTransactionRollbackException` and timeouts —
-    * `SQLRecoverableException`), or SQLState class 08 (connection
-    * exception) or the retryable rollback states 40001 (deadlock /
-    * serialization failure) and 40P01 (PostgreSQL's deadlock spelling)
-    * for pre-JDBC4 drivers, walked through `getNextException` chains
-    * (BatchUpdateException buries the real state there) and causes.
-    * NOT the whole class 40: 40002 is a rollback caused by an
-    * integrity-constraint violation, which re-fails identically on
-    * replay — retrying it would both delay the loud failure the
-    * tolerance contract promises and bypass the dedicated
-    * [[isDuplicateKey]] handling. Integrity violations (class 23) and
-    * syntax/DDL errors are NOT transient for the same reason. */
+    * `SQLRecoverableException`), or for pre-JDBC4 drivers SQLState
+    * class 08 (connection) or the retryable rollbacks 40001 (deadlock /
+    * serialization) and 40P01 (PostgreSQL's deadlock), walked through
+    * `getNextException` chains (BatchUpdateException buries the real
+    * state there) and causes. NOT all of class 40: 40002 is an
+    * integrity-violation rollback that re-fails identically on replay,
+    * so retrying it delays the loud failure the tolerance contract
+    * promises and bypasses [[isDuplicateKey]]. Integrity violations
+    * (class 23) and syntax/DDL errors are NOT transient either. */
   private[graft] def isTransient(e: Throwable, depth: Int = 0): Boolean =
     depth < 10 && (e match {
       case s: java.sql.SQLException =>
@@ -785,6 +775,17 @@ object JdbcApply {
     throw new IllegalStateException("unreachable")
   }
 
+  /** Duplicate-key detection that survives non-JDBC4 drivers.
+    * DUPLICATE-specific only: SQLState 23505 (unique violation —
+    * ANSI-distinct, used by Derby/PG/H2), or a duplicate-key VENDOR
+    * code (MySQL 1062, Oracle ORA-00001, SQL Server 2601/2627). The
+    * generic states 23000/23001 alone do NOT qualify: Oracle and
+    * SQL Server report FK (ORA-02291, error 547) and NOT NULL
+    * (MySQL 1048) failures under 23000 too, so accepting the bare
+    * state would silently drop genuinely corrupt rows on the all-PK
+    * insert path — as would the whole class-23 family or the typed
+    * subclass (FK 23503, NOT NULL 23502, CHECK 23514). Anything else
+    * rethrows. */
   private[graft] def isDuplicateKey(e: java.sql.SQLException): Boolean =
     Option(e.getSQLState).contains("23505") ||
       Set(1062, 1, 2601, 2627)(e.getErrorCode) &&
@@ -805,16 +806,14 @@ object JdbcApply {
     }
 
   /** Driver-side connection scope with the same W17 transient retry
-    * as the partition writers: the connect itself is the failure mode
-    * a flapping database shows FIRST (SQLState 08xxx before any write
-    * runs), and without retry here an epoch dies in `ensureTable`
-    * while its partition writes would have retried. Both current
-    * bodies are idempotent from scratch (existence-guarded
-    * CREATE/ALTER) — a future caller must keep that property, because
-    * a transient failure re-runs `f` on a fresh connection. A close()
-    * failure AFTER `f` completed never re-runs the body: the work is
-    * done, so it logs and returns (the leak is one flapping-database
-    * connection, not a duplicated DDL execution). */
+    * as the partition writers: the connect itself is the failure mode a
+    * flapping database shows FIRST (SQLState 08xxx before any write),
+    * and without retry here an epoch dies in `ensureTable` while its
+    * partition writes would have retried. A transient failure re-runs
+    * `f` on a fresh connection, so `f` must be idempotent from scratch
+    * (the DDL body is: existence-guarded CREATE/ALTER). A close()
+    * failure AFTER `f` completed logs and returns: one leaked
+    * connection, not a duplicated DDL execution. */
   private def withConnection[A](cfg: Config)(f: Connection => A): A =
     withTransientRetry(s"driver connection/DDL to ${cfg.url}",
       cfg.maxRetries, cfg.retryBackoffMs) {

@@ -11,7 +11,7 @@ import graft.sinks.JdbcApply
 /**
  * Structured-Streaming shell (SURVEY.md §7.2 M3): Kafka-wire records →
  * normalize chain → foreachBatch JDBC apply (+ DLQ side-branch inside
- * the same batch).
+ * the same write job).
  *
  *   Kafka topic {prefix}.{schema}.{table}
  *     → spark.readStream.format("kafka").option("includeHeaders", true)
@@ -23,7 +23,9 @@ import graft.sinks.JdbcApply
  * converges to the same terminal state (reference's exactly-once story,
  * sink README.md:8). Parallelism = Kafka partitions for the narrow
  * stages, then ONE shuffle per micro-batch on (table, pk) inside the
- * apply, whatever the number of tables; the writer keeps it.
+ * apply, whatever the number of tables; the writer keeps it. The apply
+ * costs three Spark jobs per micro-batch: one narrow census job, then
+ * the write job's two (LWW map stage, result), the DLQ rows riding it.
  */
 object CdcStream {
 

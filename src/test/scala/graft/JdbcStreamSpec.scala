@@ -86,17 +86,29 @@ class JdbcStreamSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  private def dlqCount(url: String): Int = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT COUNT(*) FROM "STREAMING_CORRUPT_EVENTS"""")
+      rs.next(); rs.getInt(1)
+    } finally conn.close()
+  }
+
+  private def tableExists(url: String, table: String): Boolean = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.getMetaData.getTables(null, null, table, null)
+      try rs.next() finally rs.close()
+    } finally conn.close()
+  }
+
   private def assertTerminal(url: String): Unit = {
     val rows = queryAll(url)
     assert(rows == Seq(
       (1L, "Order-001", 100.50, "NEW"),
       (2L, "Order-002-Updated", 250.00, "PROCESSING")))
-    val conn = DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery(
-        """SELECT COUNT(*) FROM "STREAMING_CORRUPT_EVENTS"""")
-      rs.next(); assert(rs.getInt(1) == 1)
-    } finally conn.close()
+    assert(dlqCount(url) == 1)
   }
 
   test("batch apply reaches reference terminal state in Derby (upsert/delete/DLQ)") {
@@ -197,19 +209,24 @@ class JdbcStreamSpec extends SparkSpec {
 
   test("errors.tolerance=none throws after writing the DLQ") {
     val db = "strictdb"
+    val url = s"jdbc:derby:memory:$db"
+    val cfg = sinkCfg(db).copy(errorsTolerance = "none")
+    // an earlier clean batch creates the target table, so the dirty
+    // batch's data rows would have somewhere to land
+    val seed = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      wireRow(100, "PT", """{"ID":7}""",
+        """{"ID":7,"ORDER_NAME":"seed","AMOUNT":7.0,"STATUS":"NEW"}"""))),
+      Cdc.kafkaWireSchema)
+    JdbcApply.applyBatch(CdcNormalize(seed, CdcConfig()), cfg)
     val wire = spark.createDataFrame(
       spark.sparkContext.parallelize(fixture), Cdc.kafkaWireSchema)
     val e = intercept[IllegalStateException] {
-      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()),
-        sinkCfg(db).copy(errorsTolerance = "none"))
+      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
     }
     assert(e.getMessage.contains("corrupt"))
-    val conn = DriverManager.getConnection(s"jdbc:derby:memory:$db")
-    try {
-      val rs = conn.createStatement().executeQuery(
-        """SELECT COUNT(*) FROM "STREAMING_CORRUPT_EVENTS"""")
-      rs.next(); assert(rs.getInt(1) == 1) // DLQ written before the throw
-    } finally conn.close()
+    assert(dlqCount(url) == 1) // DLQ written before the throw
+    assert(queryAll(url) == Seq((7L, "seed", 7.0, "NEW")),
+      "no data row of the failed batch may reach the target table")
   }
 
   test("errors.tolerance: log warns and continues, all skips silently, same DB state") {
@@ -333,11 +350,10 @@ class JdbcStreamSpec extends SparkSpec {
   }
 
   test("one apply plan per batch: jobs and exchanges are constant in the table count; a clean batch runs no DLQ job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.apache.spark.sql.graftshim.GraftShims
     object Plans extends AdaptiveSparkPlanHelper
@@ -354,20 +370,15 @@ class JdbcStreamSpec extends SparkSpec {
           """{"ID":2,"ORDER_NAME":"B","AMOUNT":2.0,"STATUS":"NEW"}""", t),
         wireRow(3L * i + 2, "DL", """{"ID":1}""", null, t))
     }
-    /** (Spark jobs, shuffle exchanges in the executed plans, SQL
-      * executions started from the DLQ writer) of one applyBatch. */
-    def census(rows: Seq[Row], db: String): (Int, Int, Int) = {
+    /** (Spark jobs, shuffle exchanges in the executed plans) of one
+      * applyBatch under errors.tolerance=log. */
+    def census(rows: Seq[Row], db: String): (Int, Int) = {
       val wire = spark.createDataFrame(
         spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
       val norm = CdcNormalize(wire, CdcConfig())
-      val jobs, exchanges, dlq = new java.util.concurrent.atomic.AtomicInteger
+      val jobs, exchanges = new java.util.concurrent.atomic.AtomicInteger
       val jobListener = new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case s: SparkListenerSQLExecutionStart
-              if s.details.contains("JdbcApply$.writeCorrupt") => dlq.incrementAndGet()
-          case _ =>
-        }
       }
       val planListener = new QueryExecutionListener {
         override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -385,23 +396,53 @@ class JdbcStreamSpec extends SparkSpec {
         spark.sparkContext.removeSparkListener(jobListener)
         spark.listenerManager.unregister(planListener)
       }
-      (jobs.get, exchanges.get, dlq.get)
+      (jobs.get, exchanges.get)
     }
     val one = census(rowsFor(tables.take(1)), "plan1db")
     val four = census(rowsFor(tables), "plan4db")
-    info(s"(jobs, exchanges, DLQ executions): 1 table $one, 4 tables $four")
-    assert(one._1 > 0 && one._2 > 0, s"the counters must see the apply: $one")
-    assert(one._1 == four._1,
-      s"Spark jobs per applyBatch must not grow with tables: 1 table ${one._1}, 4 tables ${four._1}")
-    assert(one._2 == four._2,
-      s"shuffle exchanges must not grow with tables: 1 table ${one._2}, 4 tables ${four._2}")
-    assert(one._3 == 0 && four._3 == 0, s"a clean batch must run no DLQ job: $one / $four")
-    // the DLQ detector is live: a batch with a corrupt row does run it
+    // a corrupt row beside the valid ones: the DLQ branch rides the
+    // write job, so the batch costs what a clean one does
     val dirty = census(rowsFor(tables.take(1)) :+
       wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A"), "plandirtydb")
-    assert(dirty._3 > 0, s"a dirty batch must reach the DLQ writer: $dirty")
+    info(s"(jobs, exchanges): 1 table $one, 4 tables $four, 1 table + 1 corrupt row $dirty")
+    // census (1 narrow job) + write (LWW map stage + result): 3 jobs,
+    // and the LWW window on (table, pk) is the only exchange
+    assert(one == ((3, 1)), s"1 table: $one")
+    assert(four == ((3, 1)), s"4 tables: $four")
+    assert(dirty == ((3, 1)), s"1 table + 1 corrupt row: $dirty")
+    // the dirty batch's corrupt row reached the DLQ; a clean batch
+    // never creates the DLQ table
+    assert(dlqCount("jdbc:derby:memory:plandirtydb") == 1)
+    assert(!tableExists("jdbc:derby:memory:plan4db", "STREAMING_CORRUPT_EVENTS"))
     // and every table landed: ID 2 survives, the delete removed ID 1
     tables.foreach(t => assert(idsOf("jdbc:derby:memory:plan4db", t) == Seq(2L), t))
+    assert(idsOf("jdbc:derby:memory:plandirtydb", "T_A") == Seq(2L))
+  }
+
+  test("the WARN cap holds across partitions; DLQ and targets survive a replay unchanged") {
+    val db = "warncapdb"
+    // 600 rows over 4 input partitions: every 4th row valid (distinct
+    // IDs), the rest corrupt (no A_ENTTYP) — 112-113 corrupt rows per
+    // partition, so both the per-partition and the merged cap bite
+    val rows = (0 until 600).map { i =>
+      if (i % 4 == 0) wireRow(i, "PT", s"""{"ID":$i}""",
+        s"""{"ID":$i,"ORDER_NAME":"o$i","AMOUNT":1.0,"STATUS":"NEW"}""")
+      else wireRow(i, null, s"""{"ID":$i}""", s"""{"ID":$i}""")
+    }
+    val wire = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 4), Cdc.kafkaWireSchema)
+    assert(wire.rdd.getNumPartitions == 4)
+    val url = s"jdbc:derby:memory:$db"
+    val stats = JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), sinkCfg(db))
+    assert(stats == JdbcApply.ApplyStats(corruptSkipped = 450,
+      warningsLogged = JdbcApply.MaxLoggedCorrupt))
+    assert(dlqCount(url) == 450)
+    val applied = queryAll(url)
+    assert(applied.map(_._1) == (0L until 600L by 4L))
+    val replay = JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), sinkCfg(db))
+    assert(replay == stats)
+    assert(dlqCount(url) == 450, "a replay must replace its own DLQ rows")
+    assert(queryAll(url) == applied)
   }
 
   test("undeclared table applies via runtime-inferred schema (C1 fallback)") {
