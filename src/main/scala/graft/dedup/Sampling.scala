@@ -107,6 +107,10 @@ object Sampling {
     // groupBy exchange drains the full input), so it materializes the
     // checkpoint as a side effect — eager=true spent a THIRD driver
     // action per budget-fill call on a separate materialization pass.
+    // Completeness does not rest on that first action: when the local
+    // checkpoint materializes, Spark computes any partition the action
+    // left uncomputed (LocalRDDCheckpointData), so lazy mode stays
+    // correct even if a later plan stops draining every partition.
     val base = keyedDocs
       .withColumn("__chunk", expr(s"__key div ${2147483648L / chunks}"))
       .localCheckpoint(false)

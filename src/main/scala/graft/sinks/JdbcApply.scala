@@ -15,20 +15,21 @@ import graft.operators.CdcOps
  * IidrCdcSinkTask.java:94-155), designed to be called from
  * `foreachBatch` (streaming) or directly (batch backfill).
  *
- * Scale shape per micro-batch — two actions (three Spark jobs) for any
- * number of tables, like the reference's single pass over a poll that
- * routes corrupt records to the DLQ and groups the rest by table
- * (IidrCdcSinkTask.java:101-126, 236-264):
+ * Scale shape per micro-batch — two Spark jobs for any number of
+ * tables, like the reference's single task that applies a whole poll,
+ * routing corrupt records to the DLQ and grouping the rest by table
+ * (IidrCdcSinkTask.java:94-155, 236-264):
  *  1. one narrow census job, which also fills the batch's cache: the
  *     corrupt count, the tables with valid rows, and the WARN sample;
- *  2. one write job: last-write-wins on (table, pk), the order-
+ *  2. one write job on ONE task: the batch is read coalesced to one
+ *     partition, so last-write-wins on (table, pk), the order-
  *     insensitive equivalent of offset-order apply (SURVEY.md §2.6),
- *     is its ONE exchange, and the writer keeps that partitioning, so
- *     no two connections ever race on a key; the corrupt rows ride the
- *     same job as a narrow DLQ branch. Under tolerance=none a dirty
- *     batch writes the DLQ branch alone, then fails;
- *  3. per partition: one JDBC transaction over its tables (or its DLQ
- *     rows), PS reuse, `addBatch`/`executeBatch` every `batchSize` rows
+ *     needs no exchange and no two connections ever race on a key; the
+ *     corrupt rows ride the same job as a narrow DLQ branch. Under
+ *     tolerance=none a dirty batch writes the DLQ branch alone, then
+ *     fails;
+ *  3. one JDBC transaction over every table and the DLQ rows, PS
+ *     reuse, `addBatch`/`executeBatch` every `batchSize` rows
  *     (JdbcWriter.java:102-108), rollback + rethrow on failure
  *     (IidrCdcSinkTask.java:143-154). Exactly-once EFFECT comes from
  *     idempotent upsert replay, not 2PC (sink README.md:8).
@@ -36,8 +37,9 @@ import graft.operators.CdcOps
  * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs on the
  * DRIVER, for every present table and the DLQ table (only when the
  * census counted corrupt rows) on one connection, before any executor
- * work — the reference is single-task and can DDL inline; we must
- * serialize DDL against parallel writers (SURVEY.md §7.4).
+ * work — the reference can DDL inline in its task; here the writer
+ * runs on an executor, so the driver serializes DDL ahead of it
+ * (SURVEY.md §7.4).
  */
 object JdbcApply {
 
@@ -149,6 +151,13 @@ object JdbcApply {
       // advance the checkpoint past the data with no signal), and a
       // clean batch never touches the DLQ.
       val (nCorrupt, present, sample) = census(batch)
+      // Write from ONE partition. CoalesceExec(1) is SinglePartition,
+      // which satisfies the LWW window's distribution, so the write plan
+      // has no exchange. On embedded Derby (4 vCPUs, local[4]) this
+      // matched the (table, pk) exchange with a writer per shuffle
+      // partition within run-to-run spread at 2,000 and 6,000 rows per
+      // batch, and was faster at 12,000 and 24,000.
+      val src = batch.coalesce(1)
       // tolerance=none: the corrupt rows still reach the DLQ, data rows
       // never land, then the batch fails (IidrCdcSinkTask.java:236-264).
       val strict = nCorrupt > 0 && cfg.errorsTolerance == "none"
@@ -161,7 +170,7 @@ object JdbcApply {
           s"${nCorrupt - sample.length} more corrupt record(s) skipped (see DLQ table)")
         sample.length.toLong
       }
-      val corrupt = Option.when(nCorrupt > 0)(CdcOps.toCorruptEvents(batch,
+      val corrupt = Option.when(nCorrupt > 0)(CdcOps.toCorruptEvents(src,
         col("topic"), col("partition"), col("offset"),
         col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
         to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
@@ -188,7 +197,7 @@ object JdbcApply {
       // misconfigured table fails the batch before the others land.
       val plans = if (strict) Nil else configured.toSeq.sorted
         .filter(present.contains).flatMap(tablePlan(batch, _, cfg))
-      val unroutable = writeTables(batch, plans, corrupt, cfg)
+      val unroutable = writeTables(src, plans, corrupt, cfg)
       if (strict)
         throw new IllegalStateException(
           s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
@@ -294,9 +303,10 @@ object JdbcApply {
   }
 
   /** DDL for every present table (and the DLQ table, given `corrupt`
-    * rows) on one driver connection, then ONE write job: the LWW window
-    * on (table, pk) is its only exchange, and the corrupt rows ride it
-    * as a narrow `__dlq` branch. Returns the unroutable-row count. */
+    * rows) on one driver connection, then ONE write job over the
+    * one-partition `batch`: the LWW window on (table, pk) needs no
+    * exchange, and the corrupt rows ride it as a narrow `__dlq` branch.
+    * Returns the unroutable-row count. */
   private def writeTables(batch: DataFrame, plans: Seq[TablePlan],
       corrupt: Option[DataFrame], cfg: Config): Long = {
     if (plans.isEmpty && corrupt.isEmpty) return 0L
@@ -316,9 +326,8 @@ object JdbcApply {
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
       .map { case (p, offset) => p.table -> (p, offset) }.toMap
-    // No repartition: the window's exchange already put each
-    // (table, pk) in exactly one partition, and one transaction covers
-    // every table the partition carries.
+    // No repartition: the one partition holds every (table, pk), and
+    // one transaction covers every table and the DLQ rows.
     writePartitions(out, slots, out.schema.fieldNames.indexOf("__dlq"), cfg)
     if (plans.isEmpty) return 0L
     val counts = unroutable.get

@@ -22,10 +22,9 @@ import graft.sinks.JdbcApply
  * apply is an idempotent upsert/delete by PK, so replay after failure
  * converges to the same terminal state (reference's exactly-once story,
  * sink README.md:8). Parallelism = Kafka partitions for the narrow
- * stages, then ONE shuffle per micro-batch on (table, pk) inside the
- * apply, whatever the number of tables; the writer keeps it. The apply
- * costs three Spark jobs per micro-batch: one narrow census job, then
- * the write job's two (LWW map stage, result), the DLQ rows riding it.
+ * stages. The apply writes a micro-batch from ONE task with no shuffle,
+ * whatever the number of tables, like the reference's one-task poll:
+ * two Spark jobs (census, write), the DLQ rows riding the write job.
  */
 object CdcStream {
 

@@ -127,6 +127,34 @@ class JdbcStreamSpec extends SparkSpec {
     JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), sinkCfg(db)) // replay
     val rows = queryAll(s"jdbc:derby:memory:$db")
     assert(rows.map(_._1) == Seq(1L, 2L))
+
+    // The write runs on one task with no exchange: last-write-wins must
+    // still keep each key's highest offset when the input partitions
+    // interleave it. IDs 1-3 are written in every
+    // slice; ID 1 ends deleted, ID 2 updated, ID 3 deleted then
+    // re-inserted. Slices hold the offsets newest-first, so iteration
+    // order is never offset order.
+    val lwwDb = "replaylwwdb"
+    def order(id: Int, off: Int) = wireRow(off, if (off == 0) "PT" else "UP",
+      s"""{"ID":$id}""",
+      s"""{"ID":$id,"ORDER_NAME":"o$id-$off","AMOUNT":$off.0,"STATUS":"S$off"}""")
+    val events = (0 until 8).flatMap(s => (1 to 3).map(id => order(id, 3 * s + id - 1))) ++
+      Seq(wireRow(24, "DL", """{"ID":1}""", null), wireRow(12, "DL", """{"ID":3}""", null))
+    val byOffset = events.sortBy(_.getLong(5))
+    val lwwWire = spark.createDataFrame(
+      spark.sparkContext.parallelize(byOffset.reverse, 4), Cdc.kafkaWireSchema)
+    val lwwCfg = sinkCfg(lwwDb)
+    // offset-order apply: the reference's sequential fold over the poll
+    val model = byOffset.foldLeft(Map.empty[Long, (Long, String, Double, String)]) { (m, r) =>
+      val id = new String(r.getAs[Array[Byte]](0), "UTF-8").filter(_.isDigit).toLong
+      if (r.isNullAt(1)) m - id
+      else m + (id -> (id, s"o$id-${r.getLong(5)}", r.getLong(5).toDouble, s"S${r.getLong(5)}"))
+    }.values.toSeq.sortBy(_._1)
+    assert(model.map(_._1) == Seq(2L, 3L))
+    JdbcApply.applyBatch(CdcNormalize(lwwWire, CdcConfig()), lwwCfg)
+    assert(queryAll(s"jdbc:derby:memory:$lwwDb") == model)
+    JdbcApply.applyBatch(CdcNormalize(lwwWire, CdcConfig()), lwwCfg) // replay
+    assert(queryAll(s"jdbc:derby:memory:$lwwDb") == model)
   }
 
   test("DLQ writes are replay-idempotent (keyed by topic/partition/offset)") {
@@ -398,18 +426,18 @@ class JdbcStreamSpec extends SparkSpec {
       }
       (jobs.get, exchanges.get)
     }
+    val corruptRow = wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A")
     val one = census(rowsFor(tables.take(1)), "plan1db")
     val four = census(rowsFor(tables), "plan4db")
     // a corrupt row beside the valid ones: the DLQ branch rides the
     // write job, so the batch costs what a clean one does
-    val dirty = census(rowsFor(tables.take(1)) :+
-      wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A"), "plandirtydb")
+    val dirty = census(rowsFor(tables.take(1)) :+ corruptRow, "plandirtydb")
     info(s"(jobs, exchanges): 1 table $one, 4 tables $four, 1 table + 1 corrupt row $dirty")
-    // census (1 narrow job) + write (LWW map stage + result): 3 jobs,
-    // and the LWW window on (table, pk) is the only exchange
-    assert(one == ((3, 1)), s"1 table: $one")
-    assert(four == ((3, 1)), s"4 tables: $four")
-    assert(dirty == ((3, 1)), s"1 table + 1 corrupt row: $dirty")
+    // census (1 narrow job) + ONE write job on one task: the batch is
+    // coalesced to one partition, so the LWW window needs no exchange
+    assert(one == ((2, 0)), s"1 table: $one")
+    assert(four == ((2, 0)), s"4 tables: $four")
+    assert(dirty == ((2, 0)), s"1 table + 1 corrupt row: $dirty")
     // the dirty batch's corrupt row reached the DLQ; a clean batch
     // never creates the DLQ table
     assert(dlqCount("jdbc:derby:memory:plandirtydb") == 1)
@@ -417,6 +445,20 @@ class JdbcStreamSpec extends SparkSpec {
     // and every table landed: ID 2 survives, the delete removed ID 1
     tables.foreach(t => assert(idsOf("jdbc:derby:memory:plan4db", t) == Seq(2L), t))
     assert(idsOf("jdbc:derby:memory:plandirtydb", "T_A") == Seq(2L))
+    // one connection and one transaction carry the data and the DLQ
+    // row, over 4 input slices: the driver's DDL connection plus ONE
+    // writer
+    FlakyJdbc.register()
+    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+    val wire = spark.createDataFrame(spark.sparkContext.parallelize(
+      rowsFor(tables.take(1)) :+ corruptRow, 4), Cdc.kafkaWireSchema)
+    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg("planflakydb").copy(
+      url = s"${FlakyJdbc.Prefix}memory:planflakydb;create=true"))
+    assert((FlakyJdbc.connectAttempts.get(), FlakyJdbc.commitAttempts.get()) == ((2, 1)),
+      "a dirty batch opens 2 connections and commits once, got " +
+        s"(${FlakyJdbc.connectAttempts.get()}, ${FlakyJdbc.commitAttempts.get()})")
+    assert(dlqCount("jdbc:derby:memory:planflakydb") == 1)
+    assert(idsOf("jdbc:derby:memory:planflakydb", "T_A") == Seq(2L))
   }
 
   test("the WARN cap holds across partitions; DLQ and targets survive a replay unchanged") {
@@ -757,6 +799,19 @@ class JdbcStreamSpec extends SparkSpec {
     // replay safety: the two rolled-back attempts left nothing behind
     assert(queryAll("jdbc:derby:memory:w17okdb") ==
       Seq((1L, "Order-001", 100.50, "NEW")))
+
+    // ONE transaction holds the data and the DLQ rows of a batch read
+    // from 3 slices: both roll back together and the replay reaches the
+    // terminal state
+    FlakyJdbc.reset(failCommits = 2, transientFlavor = true)
+    val dirty = spark.createDataFrame(
+      spark.sparkContext.parallelize(fixture, 3), Cdc.kafkaWireSchema)
+    JdbcApply.applyBatch(CdcNormalize(dirty, CdcConfig()), sinkCfg("w17onedb").copy(
+      url = s"${FlakyJdbc.Prefix}memory:w17onedb;create=true",
+      maxRetries = 3, retryBackoffMs = 10L))
+    assert(FlakyJdbc.commitAttempts.get() == 3,
+      s"one task: 2 injected failures + 1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
+    assertTerminal("jdbc:derby:memory:w17onedb")
   }
 
   test("W17: transient CONNECT failures retry the driver DDL leg too") {
@@ -857,30 +912,20 @@ class JdbcStreamSpec extends SparkSpec {
   test("W17: a non-default retryBufferBytes drives stand-down end to end through applyBatch") {
     // the BYTE bound's config plumbing, driven executor-side (the row
     // bound has its own e2e case above; the byte bound was spec'd only
-    // via bufferHead at defaults until now). Two distinct PKs chosen to
-    // hash into ONE write partition (the writer keeps the last-write-
-    // wins window's exchange, HashPartitioning on (target_table,
-    // __pk0_0) = pmod(murmur3(table, ID), shufflePartitions), so the
-    // choice replicates it exactly): under default bounds the 2-row
-    // partition buffers fully and a transient flap retries to success;
-    // under a 1-byte budget the first admit overshoots, the second row
-    // stays on the iterator, and the SAME partition stands down — one
-    // attempt, loud failure.
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    // via bufferHead at defaults until now). Two distinct PKs read from
+    // two input slices land in the ONE write partition: under default
+    // bounds the 2-row partition buffers fully and a transient flap
+    // retries to success; under a 1-byte budget the first admit
+    // overshoots, the second row stays on the iterator, and the SAME
+    // partition stands down — one attempt, loud failure.
     FlakyJdbc.register()
-    val np = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byPart = spark.range(1, 51).toDF("ID")
-      .select(col("ID"), pmod(hash(lit("TEST_ORDERS"), col("ID")), lit(np)).as("p"))
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-      .groupBy(_._2).values.maxBy(_.length).map(_._1)
-    val coIds = byPart.take(2).toSeq
-    assert(coIds.length == 2, s"need two co-partitioned PKs, got $coIds")
-    val rows = coIds.zipWithIndex.map { case (id, i) =>
+    val ids = Seq(7L, 8L)
+    val rows = ids.zipWithIndex.map { case (id, i) =>
       wireRow(i.toLong, "PT", s"""{"ID":$id}""",
         s"""{"ID":$id,"ORDER_NAME":"Order-$id","AMOUNT":1.5,"STATUS":"NEW"}""")
     }
     val wire = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
+      spark.sparkContext.parallelize(rows, 2), Cdc.kafkaWireSchema)
 
     // CONTROL at default bounds: both rows buffer, retry converges
     FlakyJdbc.reset(failCommits = 2, transientFlavor = true)
@@ -889,10 +934,10 @@ class JdbcStreamSpec extends SparkSpec {
       maxRetries = 3, retryBackoffMs = 10L)
     JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), okCfg)
     assert(FlakyJdbc.commitAttempts.get() == 3,
-      "default bounds must retry the co-partitioned rows: 2 failures + " +
+      "default bounds must retry the partition's rows: 2 failures + " +
         s"1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
     assert(queryAll("jdbc:derby:memory:w17bokdb").map(_._1).sorted ==
-      coIds.sorted, "the retried partition must land both rows")
+      ids.sorted, "the retried partition must land both rows")
 
     // NON-DEFAULT byte budget: same rows, stand-down — no retry loop
     FlakyJdbc.reset(failCommits = 99, transientFlavor = true)

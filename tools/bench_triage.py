@@ -172,16 +172,6 @@ def _salvage(txt, path):
     if verbose is not None:
         verbose.setdefault("partial", False)
         return verbose
-    if compact is not None:
-        cpu = {}
-        for q, v in (suspects or {}).items():
-            cpu[q] = v["cpu"]
-        return {"queries": compact["queries"], "queries_cpu": cpu,
-                "partial": False,
-                "n_failed": compact.get(
-                    "n_failed",
-                    tail_totals.get("n_failed") if tail_totals else None),
-                "sf": compact.get("sf")}
     maps = {}
     # intact labeled maps (sub-~3k tails cut them all; bigger captures
     # may keep the later ones)
@@ -193,6 +183,18 @@ def _salvage(txt, path):
                 maps[key] = json.loads(txt[i + len(key) + 3 : j + 1])
             except json.JSONDecodeError:
                 pass  # the map itself was cut at the end
+    if compact is not None:
+        # a head-torn verbose line can still hold an intact full-
+        # precision queries_cpu map: keep it, suspects' cpu on top
+        cpu = dict(maps.get("queries_cpu", {}))
+        for q, v in (suspects or {}).items():
+            cpu[q] = v["cpu"]
+        return {"queries": compact["queries"], "queries_cpu": cpu,
+                "partial": False,
+                "n_failed": compact.get(
+                    "n_failed",
+                    tail_totals.get("n_failed") if tail_totals else None),
+                "sf": compact.get("sf")}
     torn = _torn_suffix(txt, tail_totals)
     partial_wall = False
     if torn and torn[0] not in maps:
@@ -498,6 +500,24 @@ def selftest():
     rc, out = run([old, torn22])
     check("r22 torn compact salvages totals",
           rc == 1 and "FAILED in new artifact: q_c" in out,
+          f"rc={rc} out={out!r}")
+
+    # head-torn verbose line whose queries_cpu map survives intact, then
+    # the compact contract line: the full-precision cpu of a query the
+    # suspects line does not name (q_f, cpu 0.5 -> 1.2, wall flat) must
+    # reach the cpu-only REGRESSION gate
+    r22_cpu_old = write("r22_cpu_old.json", bench_r22(
+        {"q_f": 1.0, "q_g": 1.0}, {"q_f": 0.5, "q_g": 0.5}))
+    verbose_line, tail_line22, compact22 = bench_r22(
+        {"q_f": 1.0, "q_g": 1.0}, {"q_f": 1.2, "q_g": 0.5}).splitlines()
+    r22_cpu_new = write("r22_cpu_new.json", json.dumps({"tail": "\n".join([
+        verbose_line[verbose_line.find(',"total_cpu"'):],
+        '{"metric":"load_suspects","note":"x","top":{'
+        '"q_g":{"medOverMin":1.1,"min":1.0,"med":1.1,"cpu":0.5}},"sf":"x"}',
+        tail_line22, compact22])}))
+    rc, out = run([r22_cpu_old, r22_cpu_new])
+    check("r22 compact keeps an intact queries_cpu map",
+          rc == 1 and "q_f" in out and "REGRESSION" in out,
           f"rc={rc} out={out!r}")
 
     # a crash in a query the OLD artifact lacks (new query vs a stale
