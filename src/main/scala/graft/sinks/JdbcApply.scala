@@ -5,6 +5,7 @@ import java.sql.{Connection, DriverManager}
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.Cdc
 import graft.operators.CdcOps
@@ -32,7 +33,9 @@ import graft.operators.CdcOps
  *     reuse, `addBatch`/`executeBatch` every `batchSize` rows
  *     (JdbcWriter.java:102-108), rollback + rethrow on failure
  *     (IidrCdcSinkTask.java:143-154). Exactly-once EFFECT comes from
- *     idempotent upsert replay, not 2PC (sink README.md:8).
+ *     idempotent upsert replay, not 2PC (sink README.md:8). A transient
+ *     failure re-runs the write job from the driver (W17,
+ *     [[Config.maxRetries]]) over the cached batch.
  *
  * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs on the
  * DRIVER, for every present table and the DLQ table (only when the
@@ -85,29 +88,20 @@ object JdbcApply {
       password: Option[String] = None,
       /** `max.retries` / `retry.backoff.ms` (IidrCdcSinkConfig.java:77-83,
         * defaults 10 / 3000). The reference DECLARES both and never reads
-        * them (JdbcWriter.java) — here they are WIRED: a partition write
-        * or DLQ write that fails with a TRANSIENT error (connection loss,
-        * deadlock/serialization rollback — [[isTransient]]) is retried up
-        * to `maxRetries` times with `retryBackoffMs` between attempts,
-        * each attempt a fresh connection + transaction (the failed one
-        * was rolled back, so replay re-binds every row — safe, the whole
-        * apply is idempotent upsert/delete/coordinate-keyed DLQ).
-        * Non-transient errors rethrow immediately; the DLQ/tolerance
-        * semantics are untouched (tolerance decides what happens AFTER
-        * retries are exhausted, exactly as it decides a first failure).
-        * 0 disables retry (and the row buffering that replay needs). */
+        * them (JdbcWriter.java) — here they are WIRED: when the batch's
+        * write job, or the driver's connect/DDL scope, fails with a
+        * TRANSIENT error (connection loss, deadlock/serialization
+        * rollback — [[isTransient]]), the driver re-runs it up to
+        * `maxRetries` times with `retryBackoffMs` between attempts, each
+        * attempt a fresh connection + transaction (the failed one was
+        * rolled back and the batch is cached, so the re-run re-reads
+        * every row — safe, the whole apply is idempotent
+        * upsert/delete/coordinate-keyed DLQ). Non-transient errors
+        * rethrow immediately; the DLQ/tolerance semantics are untouched
+        * (tolerance decides what happens AFTER retries are exhausted,
+        * exactly as it decides a first failure). 0 disables retry. */
       maxRetries: Int = 10,
-      retryBackoffMs: Long = 3000,
-      /** Per-partition retry-replay buffer bounds (rows / estimated
-        * heap bytes, [[approxRowBytes]]). SIZE THESE PER TASK SLOT:
-        * every concurrently-running write task holds its own buffer,
-        * so worst-case executor heap ≈ cores × retryBufferBytes (an
-        * 8-core executor at the 64 MB default ≈ 512 MB). A partition
-        * that exceeds either bound streams without retry (WARN;
-        * restart-level replay only), so shrinking these trades retry
-        * coverage for heap, never correctness. */
-      retryBufferRows: Int = RetryBufferRows,
-      retryBufferBytes: Long = RetryBufferBytes)
+      retryBackoffMs: Long = 3000)
 
   /** Apply one normalized micro-batch (CdcNormalize output shape).
     * Returns the batch's skip statistics (corrupt rows never silently
@@ -142,7 +136,11 @@ object JdbcApply {
         else normalized.withColumn(Cdc.Cols.CorruptReason,
           coalesce(col(Cdc.Cols.CorruptReason) +: reasons: _*))
       }
-    val batch = marked.persist()
+    // Cache the batch for the census, the write and any W17 re-run,
+    // unless the caller already cached it: then that cache serves, and
+    // it is the caller's to drop.
+    val owned = marked.storageLevel == StorageLevel.NONE
+    val batch = if (owned) marked.persist() else marked
     try {
       // Census: ONE narrow job over the PERSISTED batch, which also
       // fills the cache. Tables with no rows this batch skip their DDL
@@ -202,7 +200,7 @@ object JdbcApply {
         throw new IllegalStateException(
           s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
       ApplyStats(nCorrupt, warned, unroutable)
-    } finally batch.unpersist()
+    } finally if (owned) batch.unpersist()
   }
 
   /** ONE narrow job (no exchange, so AQE adds no stages): the corrupt
@@ -306,6 +304,7 @@ object JdbcApply {
     * rows) on one driver connection, then ONE write job over the
     * one-partition `batch`: the LWW window on (table, pk) needs no
     * exchange, and the corrupt rows ride it as a narrow `__dlq` branch.
+    * Both legs retry transient failures from the driver (W17).
     * Returns the unroutable-row count. */
   private def writeTables(batch: DataFrame, plans: Seq[TablePlan],
       corrupt: Option[DataFrame], cfg: Config): Long = {
@@ -318,19 +317,25 @@ object JdbcApply {
       if (corrupt.nonEmpty && !tableExists(conn, dlq))
         exec(conn, dialect.createTableSql(dlq, Cdc.corruptEventSchema, Seq.empty))
     }
-    val unroutable = Observation()
-    // Union by name: each branch's rows read null in the other's
-    // columns, so a row is a DLQ row exactly when `__dlq` is set.
-    val out = (Option.when(plans.nonEmpty)(lwwRows(batch, plans, unroutable)) ++
-      corrupt.map(c => c.select(struct(c.columns.map(col): _*).as("__dlq"))))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
     val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
       .map { case (p, offset) => p.table -> (p, offset) }.toMap
-    // No repartition: the one partition holds every (table, pk), and
-    // one transaction covers every table and the DLQ rows.
-    writePartitions(out, slots, out.schema.fieldNames.indexOf("__dlq"), cfg)
-    if (plans.isEmpty) return 0L
-    val counts = unroutable.get
+    // W17: a transient failure re-runs the write job from the driver.
+    // The failed attempt rolled back its one transaction and `batch` is
+    // cached, so the re-run re-reads the same rows. Each attempt builds
+    // its own plan and Observation: re-running a failed action on an
+    // observed frame can report zero for the metrics of the retry.
+    val counts = withTransientRetry("apply write job", cfg.maxRetries, cfg.retryBackoffMs) {
+      val unroutable = Observation()
+      // Union by name: each branch's rows read null in the other's
+      // columns, so a row is a DLQ row exactly when `__dlq` is set.
+      val out = (Option.when(plans.nonEmpty)(lwwRows(batch, plans, unroutable)) ++
+        corrupt.map(c => c.select(struct(c.columns.map(col): _*).as("__dlq"))))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      // No repartition: the one partition holds every (table, pk), and
+      // one transaction covers every table and the DLQ rows.
+      writePartitions(out, slots, out.schema.fieldNames.indexOf("__dlq"), cfg)
+      if (plans.isEmpty) Map.empty[String, Any] else unroutable.get
+    }
     plans.indices.map { i =>
       val n = counts(s"u$i").asInstanceOf[Long]
       if (n > 0)
@@ -397,98 +402,16 @@ object JdbcApply {
         ix.flatMap(i => pkCols(i).map(col) :+ col(s"__v$i"))): _*)
   }
 
-  /** Retry-replay buffer bounds per partition, rows AND estimated
-    * bytes: a retry re-binds the partition's rows after the failed
-    * attempt's rollback, so they sit on the executor heap — fine for
-    * micro-batch-sized partitions (the database holds the same rows in
-    * one open transaction), NOT for a multi-million-row backfill
-    * partition that used to stream with O(batchSize) residency; and a
-    * ROW bound alone is no bound for wide rows (1M × 5 KB DLQ payloads
-    * ≈ 5 GB). Bytes accumulate per row from [[approxRowBytes]], an
-    * O(width) pass over values JDBC binds anyway (a one-shot calibration
-    * would be fooled by a partition whose early rows are narrow). Past
-    * either bound the partition streams and W17 retry stands down for it
-    * (one WARN): the Structured Streaming restart is the retry of record.
-    * Both bounds are per TASK and tasks run concurrently — see
-    * [[Config.retryBufferBytes]]; these are only the defaults. */
-  private[graft] val RetryBufferRows = 1 << 20
-  private[graft] val RetryBufferBytes = 64L << 20
-
-  /** Heap-weight approximation of one buffered row, counting what the
-    * JVM holds: GenericRow + backing Object[] (32 B of headers + an 8 B
-    * reference per field) and per-field payload WITH object headers — a
-    * boxed primitive is a 24 B object; a String is header + fields + a
-    * byte[] of up to 2 B/char (UTF-16 worst case, so compact latin-1
-    * strings lean high, never low); boxed-element arrays/seqs pay a 24 B
-    * box plus an 8 B slot per element. [[JdbcRetryBufferSpec]] pins it
-    * against `SizeEstimator.estimate` within a documented factor on wide
-    * rows, so retryBufferBytes is a real heap bound. */
-  private[graft] def approxRowBytes(r: Row): Long = {
-    var s = 32L; var i = 0
-    while (i < r.length) {
-      s += 8L + approxValueBytes(r.get(i))
-      i += 1
-    }
-    s
-  }
-
-  /** Ref-element arrays/seqs recurse per element (their payload — a
-    * DLQ row's header array of string/binary pairs — is exactly what
-    * a count-only estimate would miss); the work is O(what the row
-    * actually holds) and only paid when such fields exist. */
-  private def approxValueBytes(v: Any): Long = v match {
-    case null              => 0L
-    case x: String         => 48L + 2L * x.length
-    case x: Array[Byte]    => 24L + x.length
-    case x: Array[Long]    => 24L + 8L * x.length
-    case x: Array[Double]  => 24L + 8L * x.length
-    case x: Array[Int]     => 24L + 4L * x.length
-    case x: Array[Float]   => 24L + 4L * x.length
-    case x: Array[_]       =>
-      24L + x.foldLeft(0L)((a, e) => a + 8L + approxValueBytes(e))
-    case x: scala.collection.Seq[_] =>
-      24L + x.foldLeft(0L)((a, e) => a + 16L + approxValueBytes(e))
-    case x: java.math.BigDecimal => 96L
-    case x: Row            => approxRowBytes(x)
-    case _                 => 24L
-  }
-
-  /** Drain the head by hand: `Iterator.take`'s contract says to DISCARD
-    * the source afterwards, so `take(n).toVector` then `++ it` risks
-    * dropping the tail on exactly the oversized partitions the cap
-    * exists for. A next() loop leaves `it` at the first un-buffered row,
-    * so afterwards `it.hasNext` IS the overflow signal (a partition that
-    * fits, even at exactly the row bound, keeps its retry). At most
-    * `maxRows` rows; the byte bound is checked BEFORE each admit, so the
-    * last row may overshoot `maxBytes` by its own width (unknowable
-    * before reading it). */
-  private[graft] def bufferHead(it: Iterator[Row], maxRows: Int,
-      maxBytes: Long): IndexedSeq[Row] = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var bytes = 0L
-    while (buf.length < maxRows && bytes < maxBytes && it.hasNext) {
-      val r = it.next()
-      buf += r
-      bytes += approxRowBytes(r)
-    }
-    buf.toIndexedSeq
-  }
-
-  /** Write every nonempty partition of `out`, each attempt on a fresh
-    * connection inside one transaction: commit on success, rollback +
-    * rethrow on failure (IidrCdcSinkTask.java:143-154). A row whose
-    * `__dlq` column (`dlqIx`, -1 when absent) is set goes to the
-    * [[DlqWriter]], any other to its table's [[TableWriter]]. W17
-    * retry: when enabled, the partition's rows materialize ONCE (up to
-    * [[RetryBufferRows]]/[[RetryBufferBytes]]) so a retry can re-bind
-    * them after the failed attempt's rollback; a partition over either
-    * bound streams exactly as before retry was wired (one WARN;
-    * restart-level replay only) rather than risk the heap. */
+  /** Write every nonempty partition of `out` on a fresh connection
+    * inside one transaction: commit on success, rollback + rethrow on
+    * failure (IidrCdcSinkTask.java:143-154). A row whose `__dlq` column
+    * (`dlqIx`, -1 when absent) is set goes to the [[DlqWriter]], any
+    * other to its table's [[TableWriter]]. The rows stream once: a
+    * retry re-runs the whole job from the driver (see [[writeTables]]). */
   private def writePartitions(out: DataFrame, slots: Map[String, (TablePlan, Int)],
       dlqIx: Int, cfg: Config): Unit =
-    out.foreachPartition { (it: Iterator[Row]) =>
-      val what = "apply partition write"
-      def once(rows: Iterator[Row]): Unit = {
+    out.foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.hasNext) {
         val conn = connect(cfg.url, cfg.user, cfg.password)
         try {
           conn.setAutoCommit(false)
@@ -504,20 +427,6 @@ object JdbcApply {
           conn.commit()
         } catch { case e: Throwable => rollbackQuietly(conn); throw e }
         finally closeQuietly(conn)
-      }
-      if (!it.hasNext) ()
-      else if (cfg.maxRetries <= 0) once(it)
-      else {
-        val head = bufferHead(it, cfg.retryBufferRows, cfg.retryBufferBytes)
-        if (it.hasNext) {
-          log.warn(s"$what exceeds the retry-replay buffer " +
-            s"(${head.length} rows buffered); W17 retry stands down for " +
-            "this partition (streaming write, restart-level replay only)")
-          once(head.iterator ++ it)
-        } else
-          withTransientRetry(what, cfg.maxRetries, cfg.retryBackoffMs) {
-            once(head.iterator)
-          }
       }
     }
 
@@ -633,7 +542,7 @@ object JdbcApply {
     * and if the replacement isn't 08/40-classified, [[isTransient]]
     * would skip the retry the W17 wiring promises. Log and move on —
     * an un-rolled-back transaction dies with its connection, and the
-    * retry's fresh connection re-binds every row anyway. */
+    * retry re-writes every row on a fresh connection anyway. */
   private def rollbackQuietly(conn: Connection): Unit =
     try conn.rollback() catch {
       case e: Exception => log.warn(s"rollback after failed attempt: $e")
@@ -815,10 +724,10 @@ object JdbcApply {
     }
 
   /** Driver-side connection scope with the same W17 transient retry
-    * as the partition writers: the connect itself is the failure mode a
+    * as the write job: the connect itself is the failure mode a
     * flapping database shows FIRST (SQLState 08xxx before any write),
     * and without retry here an epoch dies in `ensureTable` while its
-    * partition writes would have retried. A transient failure re-runs
+    * write job would have retried. A transient failure re-runs
     * `f` on a fresh connection, so `f` must be idempotent from scratch
     * (the DDL body is: existence-guarded CREATE/ALTER). A close()
     * failure AFTER `f` completed logs and returns: one leaked

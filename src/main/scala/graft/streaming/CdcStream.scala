@@ -25,6 +25,15 @@ import graft.sinks.JdbcApply
  * stages. The apply writes a micro-batch from ONE task with no shuffle,
  * whatever the number of tables, like the reference's one-task poll:
  * two Spark jobs (census, write), the DLQ rows riding the write job.
+ *
+ * W17 retry (`JdbcApply.Config.maxRetries`) re-runs a failed write job
+ * from the driver over the cached micro-batch; the task itself writes
+ * its rows once. On a cluster, Spark's own task retries
+ * (`spark.task.maxFailures`, 4 by default; 1 under `local[N]`) run
+ * inside each W17 attempt, so a transient failure can be tried up to
+ * maxFailures × (maxRetries + 1) times before the epoch fails. Set
+ * `spark.task.maxFailures` to 1, or `maxRetries` to 0, to keep one
+ * retry loop.
  */
 object CdcStream {
 

@@ -45,6 +45,24 @@ class JdbcStreamSpec extends SparkSpec {
     wireRow(4, "DL", """{"ID":3}""", null),
     wireRow(5, null, """{"ID":9}""", """{"ID":9}""")) // corrupt
 
+  /** Three valid rows with no resolvable PK (no key, no ID in the
+    * value) over two tables, beside one routable row per table. */
+  private val unroutableRows = Seq(
+    wireRow(0, "PT", """{"ID":1}""",
+      """{"ID":1,"ORDER_NAME":"ok","AMOUNT":1.0,"STATUS":"NEW"}"""),
+    // valid upsert, but no key and no ID in the value → unroutable
+    wireRow(1, "PT", null,
+      """{"ORDER_NAME":"orphan","AMOUNT":2.0,"STATUS":"NEW"}"""),
+    // a second table in the same batch: two orphans (counted one by
+    // one, never collapsed on their null key) beside a routable row
+    wireRow(2, "PT", """{"ID":7}""",
+      """{"ID":7,"ORDER_NAME":"ship","AMOUNT":3.0,"STATUS":"NEW"}""",
+      "TEST_SHIPMENTS"),
+    wireRow(3, "PT", null,
+      """{"ORDER_NAME":"orphan2","AMOUNT":4.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"),
+    wireRow(4, "PT", null,
+      """{"ORDER_NAME":"orphan3","AMOUNT":5.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"))
+
   private val orderSchema = StructType.fromDDL(
     "ID BIGINT, ORDER_NAME STRING, AMOUNT DOUBLE, STATUS STRING")
 
@@ -128,6 +146,17 @@ class JdbcStreamSpec extends SparkSpec {
     val rows = queryAll(s"jdbc:derby:memory:$db")
     assert(rows.map(_._1) == Seq(1L, 2L))
 
+    // A batch the caller cached stays cached: the apply reads that
+    // cache and leaves it to the caller to drop.
+    val cachedDb = "replaycacheddb"
+    val cached = CdcNormalize(wire, CdcConfig()).persist()
+    JdbcApply.applyBatch(cached, sinkCfg(cachedDb))
+    JdbcApply.applyBatch(cached, sinkCfg(cachedDb)) // replay
+    assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "applyBatch must not unpersist a frame its caller cached")
+    assertTerminal(s"jdbc:derby:memory:$cachedDb")
+    cached.unpersist()
+
     // The write runs on one task with no exchange: last-write-wins must
     // still keep each key's highest offset when the input partitions
     // interleave it. IDs 1-3 are written in every
@@ -206,21 +235,7 @@ class JdbcStreamSpec extends SparkSpec {
 
   test("rows with no resolvable PK are counted and skipped, not applied or lost silently") {
     val db = "unroutabledb"
-    val rows = Seq(
-      wireRow(0, "PT", """{"ID":1}""",
-        """{"ID":1,"ORDER_NAME":"ok","AMOUNT":1.0,"STATUS":"NEW"}"""),
-      // valid upsert, but no key and no ID in the value → unroutable
-      wireRow(1, "PT", null,
-        """{"ORDER_NAME":"orphan","AMOUNT":2.0,"STATUS":"NEW"}"""),
-      // a second table in the same batch: two orphans (counted one by
-      // one, never collapsed on their null key) beside a routable row
-      wireRow(2, "PT", """{"ID":7}""",
-        """{"ID":7,"ORDER_NAME":"ship","AMOUNT":3.0,"STATUS":"NEW"}""",
-        "TEST_SHIPMENTS"),
-      wireRow(3, "PT", null,
-        """{"ORDER_NAME":"orphan2","AMOUNT":4.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"),
-      wireRow(4, "PT", null,
-        """{"ORDER_NAME":"orphan3","AMOUNT":5.0,"STATUS":"NEW"}""", "TEST_SHIPMENTS"))
+    val rows = unroutableRows
     val wire = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
     val stats = JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), twoTableCfg(db))
@@ -812,6 +827,29 @@ class JdbcStreamSpec extends SparkSpec {
     assert(FlakyJdbc.commitAttempts.get() == 3,
       s"one task: 2 injected failures + 1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
     assertTerminal("jdbc:derby:memory:w17onedb")
+
+    // Every attempt builds its own plan and Observation: a batch with
+    // unroutable rows reports, after 2 injected failures, the count the
+    // same batch reports with none. The attempts read the cached batch:
+    // the source is read once, by the census.
+    val reads = spark.sparkContext.longAccumulator("w17 source reads")
+    val orphans = spark.createDataFrame(spark.sparkContext
+      .parallelize(unroutableRows, 2).map { r => reads.add(1); r }, Cdc.kafkaWireSchema)
+    def applyOrphans(db: String) = JdbcApply.applyBatch(CdcNormalize(orphans, CdcConfig()),
+      twoTableCfg(db).copy(url = s"${FlakyJdbc.Prefix}memory:$db;create=true",
+        maxRetries = 3, retryBackoffMs = 10L))
+    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+    val clean = applyOrphans("w17u0db")
+    FlakyJdbc.reset(failCommits = 2, transientFlavor = true)
+    reads.reset()
+    val retried = applyOrphans("w17u2db")
+    assert(FlakyJdbc.commitAttempts.get() == 3,
+      s"2 injected failures + 1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
+    assert(clean.unroutableSkipped == 3 && retried == clean,
+      s"a retried batch must report its unroutable rows: clean $clean, retried $retried")
+    assert(reads.value == unroutableRows.length,
+      s"the retried write must read the cache, got ${reads.value} source reads")
+    assert(idsOf("jdbc:derby:memory:w17u2db", "TEST_SHIPMENTS") == Seq(7L))
   }
 
   test("W17: transient CONNECT failures retry the driver DDL leg too") {
@@ -873,89 +911,6 @@ class JdbcStreamSpec extends SparkSpec {
       s"the exhausted transient failure must propagate, got: ${e.getMessage}")
   }
 
-  test("W17: a partition past the retry-buffer bound stands down — streams, no retry") {
-    // retryBufferRows=0 makes EVERY nonempty partition oversized: the
-    // deterministic way to drive the stand-down arm (a million-row
-    // fixture would test the same branch slower). The write must
-    // stream the full partition (terminal DB state intact on the
-    // no-failure path) and a transient failure must NOT retry —
-    // restart-level replay is the retry of record for oversized
-    // partitions, exactly the pre-W17 behavior.
-    FlakyJdbc.register()
-    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
-    val wire = spark.createDataFrame(
-      spark.sparkContext.parallelize(fixture), Cdc.kafkaWireSchema)
-    val cfg = sinkCfg("w17stdndb").copy(
-      url = s"${FlakyJdbc.Prefix}memory:w17stdndb;create=true",
-      maxRetries = 3, retryBackoffMs = 10L, retryBufferRows = 0)
-    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
-    assertTerminal("jdbc:derby:memory:w17stdndb")
-
-    // now with an injected transient commit failure: stood-down means
-    // ONE attempt, loud failure, no backoff loop
-    FlakyJdbc.reset(failCommits = 99, transientFlavor = true)
-    val cfg2 = sinkCfg("w17stdn2db").copy(
-      url = s"${FlakyJdbc.Prefix}memory:w17stdn2db;create=true",
-      maxRetries = 3, retryBackoffMs = 10L, retryBufferRows = 0)
-    val e = intercept[Exception] {
-      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg2)
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(t => Option(t.getMessage)
-        .exists(_.contains("injected transient commit failure"))),
-      s"the stood-down failure must propagate, got: ${e.getMessage}")
-    assert(FlakyJdbc.commitAttempts.get() <= 2,
-      "an oversized partition must not enter the retry loop " +
-        s"(got ${FlakyJdbc.commitAttempts.get()} commit attempts)")
-  }
-
-  test("W17: a non-default retryBufferBytes drives stand-down end to end through applyBatch") {
-    // the BYTE bound's config plumbing, driven executor-side (the row
-    // bound has its own e2e case above; the byte bound was spec'd only
-    // via bufferHead at defaults until now). Two distinct PKs read from
-    // two input slices land in the ONE write partition: under default
-    // bounds the 2-row partition buffers fully and a transient flap
-    // retries to success; under a 1-byte budget the first admit
-    // overshoots, the second row stays on the iterator, and the SAME
-    // partition stands down — one attempt, loud failure.
-    FlakyJdbc.register()
-    val ids = Seq(7L, 8L)
-    val rows = ids.zipWithIndex.map { case (id, i) =>
-      wireRow(i.toLong, "PT", s"""{"ID":$id}""",
-        s"""{"ID":$id,"ORDER_NAME":"Order-$id","AMOUNT":1.5,"STATUS":"NEW"}""")
-    }
-    val wire = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), Cdc.kafkaWireSchema)
-
-    // CONTROL at default bounds: both rows buffer, retry converges
-    FlakyJdbc.reset(failCommits = 2, transientFlavor = true)
-    val okCfg = sinkCfg("w17bokdb").copy(
-      url = s"${FlakyJdbc.Prefix}memory:w17bokdb;create=true",
-      maxRetries = 3, retryBackoffMs = 10L)
-    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), okCfg)
-    assert(FlakyJdbc.commitAttempts.get() == 3,
-      "default bounds must retry the partition's rows: 2 failures + " +
-        s"1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
-    assert(queryAll("jdbc:derby:memory:w17bokdb").map(_._1).sorted ==
-      ids.sorted, "the retried partition must land both rows")
-
-    // NON-DEFAULT byte budget: same rows, stand-down — no retry loop
-    FlakyJdbc.reset(failCommits = 99, transientFlavor = true)
-    val tiny = sinkCfg("w17btinydb").copy(
-      url = s"${FlakyJdbc.Prefix}memory:w17btinydb;create=true",
-      maxRetries = 3, retryBackoffMs = 10L, retryBufferBytes = 1L)
-    val e = intercept[Exception] {
-      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), tiny)
-    }
-    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .take(10).exists(t => Option(t.getMessage)
-        .exists(_.contains("injected transient commit failure"))),
-      s"the stood-down failure must propagate, got: ${e.getMessage}")
-    assert(FlakyJdbc.commitAttempts.get() == 1,
-      "a byte-overflowed partition must not enter the retry loop " +
-        s"(got ${FlakyJdbc.commitAttempts.get()} commit attempts)")
-  }
-
   test("W17: transient classification is rollback/connection-specific, not any SQLException") {
     import java.sql._
     assert(JdbcApply.isTransient(
@@ -979,6 +934,12 @@ class JdbcStreamSpec extends SparkSpec {
       new SQLIntegrityConstraintViolationException("dup", "23505")))
     assert(!JdbcApply.isTransient(new SQLSyntaxErrorException("bad", "42X01")))
     assert(!JdbcApply.isTransient(new RuntimeException("not sql at all")))
+    // the driver sees a failed write task's exception as the cause of
+    // Spark's job-abort wrapper
+    assert(JdbcApply.isTransient(new org.apache.spark.SparkException("Job aborted",
+      new SQLTransientConnectionException("conn lost", "08006"))))
+    assert(!JdbcApply.isTransient(new org.apache.spark.SparkException("Job aborted",
+      new SQLSyntaxErrorException("bad", "42X01"))))
   }
 }
 
