@@ -1,22 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query over SPARK_GRAFT_SF_DIR
-  * at local[32]; one JSON line with per-query seconds. */
+  * on [[Harness.session]] (`local[Harness.cores]`); one JSON line with
+  * per-query seconds. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // Warmup: JIT/class-loading via the flagship, plus the SHARED
     // caches for the bench SF — the normalized CDC feed and the LSH
     // near-dup funnel (pairsCache) — so per-query numbers measure
@@ -44,14 +34,10 @@ object Bench {
     // before it's dismissed.
     // Failed queries report -1 (never a time): a crash must look like
     // a crash in the bench output, not a fast run.
-    val meter = CpuMeter.attach(spark.sparkContext)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): (Double, Double) = {
-        val c0 = meter.snapshotNs()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        (wall, (meter.snapshotNs() - c0) / 1e9)
+        val run = CpuMeter.measure(spark.sparkContext)(fn(spark, sfDir).count())
+        (run.wallS, run.cpuS)
       }
       val (tMin, tMed, cMin) = try {
         val ts = Seq(once(), once(), once()).sortBy(_._1)

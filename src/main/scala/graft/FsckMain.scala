@@ -116,13 +116,7 @@ object FsckMain {
         System.err.println(e.getMessage)
         sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val code =
       try cli(spark, args.toIndexedSeq)
       finally spark.stop()

@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftshim.{GraftRegistration, GraftShims}
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,26 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 
 /**
- * Graft's native Catalyst functions, exposed two ways:
- *
- *  - [[GraftExtensions]] — `spark.sql.extensions=graft.GraftExtensions`
- *    or `.withExtensions(new GraftExtensions)` at session build;
- *  - [[GraftFunctions.registerAll]] — imperative registration onto an
- *    EXISTING session (the driver's sessions are built plain).
- *
- * The Column API in [[GraftFunctions]] needs no registration at all —
- * it builds Columns directly from the expressions.
+ * Graft's native Catalyst functions. The Column API below needs no
+ * registration — it builds Columns directly from the expressions, so
+ * it works on the driver's plain sessions. [[GraftFunctions.registerAll]]
+ * adds SQL access by registering every function on an existing session.
  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    GraftFunctions.builders.foreach { case (name, usage, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name, usage),
-        builder))
-    }
-}
-
 object GraftFunctions {
 
   private def strLit(e: Expression, what: String): String = e match {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Run a comma-separated list of SparkEntry queries once each and time
   * them — the single-query A/B tool (Bench remains the harness: its
@@ -56,25 +55,15 @@ object RunOne {
       case Left(msg) => System.err.println(msg); sys.exit(2)
       case Right(cfg) => cfg
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // same triage signal as Bench's queries_cpu: executor task CPU per
     // rep, so a wall spike on a loaded box is tellable apart from a
     // work regression right in the A/B output
-    val meter = CpuMeter.attach(spark.sparkContext)
     names.foreach { name =>
       (1 to reps).foreach { i =>
-        val c0 = meter.snapshotNs()
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        println(line(name, i, wall, (meter.snapshotNs() - c0) / 1e9, n))
+        val run = CpuMeter.measure(spark.sparkContext)(
+          SparkEntry.queries(name)(spark, sfDir).count())
+        println(line(name, i, run.wallS, run.cpuS, run.value))
       }
     }
     spark.stop()

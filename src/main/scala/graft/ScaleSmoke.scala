@@ -34,20 +34,11 @@ object ScaleSmoke {
   val OutDir = "/tmp/graft_scale10"
 
   def main(args: Array[String]): Unit = {
-    // SCALE_SMOKE_CPUS parameterizes the core count (default 32, the
-    // mains' house master) so the 10x ladders can be run as a c8/c32
-    // pair — per-query scaling ratios at sf0.1 are overhead-bound and
-    // uninformative; at 10x they measure the operators (VERDICT r21
-    // #8). Shuffle partitions follow the core count exactly like
-    // Bench's contract.
-    val cpus = sys.env.getOrElse("SCALE_SMOKE_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CPUS sets the core count (Harness.cores) so the 10x
+    // ladders can be run as a c8/c32 pair — per-query scaling ratios at
+    // sf0.1 are overhead-bound and uninformative; at 10x they measure
+    // the operators (VERDICT r21 #8).
+    val spark = Harness.session()
 
     val src = "/root/testdata/sf0.1"
     val docs = Tables(spark, src, "documents")
@@ -121,15 +112,12 @@ object ScaleSmoke {
     // two timed reps with executor CPU (the load-immune ratio input):
     // rep1 is cold (codegen + standing-cache builds), rep2 is the
     // steady-state number a c8/c32 pair compares
-    val meter = CpuMeter.attach(spark.sparkContext)
     queries.foreach { name =>
       (1 to 2).foreach { rep =>
-        val c0 = meter.snapshotNs()
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, OutDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val cpu = (meter.snapshotNs() - c0) / 1e9
-        println(f"[scale] $name%-24s rep$rep ${sec}%8.2f s  cpu ${cpu}%7.2f s  rows=$n")
+        val r = CpuMeter.measure(spark.sparkContext)(
+          SparkEntry.queries(name)(spark, OutDir).count())
+        println(f"[scale] $name%-24s rep$rep ${r.wallS}%8.2f s  " +
+          f"cpu ${r.cpuS}%7.2f s  rows=${r.value}")
       }
     }
   }
@@ -164,10 +152,9 @@ object ScaleSmoke {
       "+ 1 hot-key copy)")
 
     Seq("q_cdc_lww", "q_cdc_apply", "q_cdc_hot_keys").foreach { name =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, OutDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] $name%-24s ${sec}%8.2f s  rows=$n")
+      val r = CpuMeter.measure(spark.sparkContext)(
+        SparkEntry.queries(name)(spark, OutDir).count())
+      println(f"[scale] $name%-24s ${r.wallS}%8.2f s  rows=${r.value}")
     }
 
     // ---- 50%-hot LWW batch: the exchange's WRITE-side gate ----------
@@ -332,30 +319,11 @@ object ScaleSmoke {
           CdcOps.lastWriteWins(skewed, "tbl", Seq("k"), "offset").count()
         require(collapsed == n / 10 + 1, s"lww keys: $collapsed")
         import scala.jdk.CollectionConverters._
-        // the listener bus drains asynchronously — a fixed sleep
-        // under-waits exactly on the loaded box this block claims
-        // immunity to (empty map → maxBy throws; partial rows → false
-        // require). Poll until the recorded total is nonzero and
-        // stable across THREE consecutive beats (one beat can land
-        // inside a mid-drain GC stall). The deadline is generous
-        // (120 s) because it guards only the pathological dead-bus
-        // case: a drain that completes late should still get its
-        // three stable beats rather than abort with partial data.
-        def recordedSum = reads.asScala.values
-          .map(_.asScala.map(_.longValue).sum).sum
-        val deadline = System.nanoTime() + 120L * 1000L * 1000L * 1000L
-        var prev = -1L; var stable = 0
-        while (stable < 3 && System.nanoTime() < deadline) {
-          Thread.sleep(200)
-          val cur = recordedSum
-          stable = if (cur > 0L && cur == prev) stable + 1 else 0
-          prev = cur
-        }
-        // fail on STABILITY, not liveness: a deadline exit with some
-        // rows recorded means a partially-drained bus, and computing
-        // the ratio over a subset would blame the wrong invariant
-        require(stable >= 3,
-          s"listener bus never finished draining (recorded $prev rows)")
+        // count() returns only after its task-end events are posted, so
+        // draining the bus delivers every one of them to the listener
+        org.apache.spark.sql.graftshim.GraftShims
+          .waitListenerBusEmpty(spark.sparkContext)
+        require(!reads.isEmpty, "the listener recorded no shuffle-read rows")
         // the window stage = the one with the largest shuffle arrival
         val windowStage = reads.asScala.values
           .map(_.asScala.map(_.longValue).toSeq)
@@ -385,10 +353,9 @@ object ScaleSmoke {
    */
   def sketchAndLayoutSmoke(spark: SparkSession): Unit = {
     Seq("q_events_approx_users", "q_events_sketch_rollup").foreach { name =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, OutDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] $name%-24s ${sec}%8.2f s  rows=$n")
+      val r = CpuMeter.measure(spark.sparkContext)(
+        SparkEntry.queries(name)(spark, OutDir).count())
+      println(f"[scale] $name%-24s ${r.wallS}%8.2f s  rows=${r.value}")
     }
 
     import graft.sources.Layout
@@ -700,27 +667,10 @@ object ScaleSmoke {
     // regression would leave unchanged) and bounded against the same
     // rule of thumb; wall clock print-only.
     EmbedIndex.foldBatch(root10, batch, "vec_id", "embedding", 0L)
-    val written = new java.util.concurrent.atomic.AtomicLong(0L)
-    val wListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) { written.addAndGet(m.outputMetrics.bytesWritten); () }
-      }
-    }
-    def drain(): Unit = org.apache.spark.sql.graftshim.GraftShims
-      .waitListenerBusEmpty(spark.sparkContext)
-    drain()
-    spark.sparkContext.addSparkListener(wListener)
-    val compactSec =
-      try {
-        val t0 = System.nanoTime()
-        EmbedIndex.compactThrough(spark, root10, 0L)
-        drain()
-        (System.nanoTime() - t0) / 1e9
-      } finally spark.sparkContext.removeSparkListener(wListener)
-    val moved = written.get
-    println(f"[scale] embed compact writes     ${compactSec}%8.2f s  " +
+    val compact = CpuMeter.measure(spark.sparkContext)(
+      EmbedIndex.compactThrough(spark, root10, 0L))
+    val moved = compact.bytesWritten
+    println(f"[scale] embed compact writes     ${compact.wallS}%8.2f s  " +
       f"${moved / 1024}%d KB  (${moved.toDouble / vecsBytes}%.2fx vecs bytes)")
     require(moved >= vecsBytes,
       s"compaction wrote $moved bytes — less than one vecs copy; the " +
@@ -1250,7 +1200,6 @@ object ScaleSmoke {
     // seconds-based gate), while CPU nanoseconds measure the work.
     // Serial batches + the meter's bus drain at each boundary
     // attribute tasks to their batch.
-    val meter = CpuMeter.attach(spark.sparkContext)
     val cpuPerBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
     val q = writer.start()
     try {
@@ -1267,15 +1216,14 @@ object ScaleSmoke {
           else slice.zipWithIndex.map { case (r, _) =>
             Row(r.getLong(0) + (b + 1) * 10000000L, r.getString(1), r.get(2))
           }
-        val c0 = meter.snapshotNs()
-        t0 = System.nanoTime()
-        mem.addData(rows.toIndexedSeq: _*)
-        q.processAllAvailable()
-        cpuPerBatch += (meter.snapshotNs() - c0) / 1e9
+        cpuPerBatch += CpuMeter.measure(spark.sparkContext) {
+          t0 = System.nanoTime()
+          mem.addData(rows.toIndexedSeq: _*)
+          q.processAllAvailable()
+        }.cpuS
       }
     } finally {
       q.stop(); release()
-      meter.remove()
     }
 
     val tag = if (sketchHead) "ingest/sketch" else "ingest/exact "
@@ -1389,45 +1337,27 @@ object ScaleSmoke {
     import graft.dedup.{ClusterIndex, Clusters, Dedup}
     val docs = Tables(spark, OutDir, "documents")
     val nDocs = docs.count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def drain(): Unit = org.apache.spark.sql.graftshim.GraftShims
-      .waitListenerBusEmpty(spark.sparkContext)
-    drain()
-    spark.sparkContext.addSparkListener(listener)
     val path = ClusterIndex.scratchPath(OutDir)
     try {
-      val t0 = System.nanoTime()
-      val (pairs, release) = Dedup.nearDupPairsManaged(
-        docs, "doc_id", "text", graft.dedup.DedupQueries.LshPairsThreshold)
-      ClusterIndex.write(
-        Clusters.resolve(docs, "doc_id", pairs, "doc_a", "doc_b")
-          .select("doc_id", "cluster"),
-        path)
-      release()
-      drain()
-      val resolveSec = (System.nanoTime() - t0) / 1e9
-      val resolveJobs = jobs.get
-      val t1 = System.nanoTime()
-      val n = ClusterIndex.open(spark, path).count()
-      drain()
-      val openSec = (System.nanoTime() - t1) / 1e9
-      val openJobs = jobs.get - resolveJobs
-      println(f"[scale] cluster index at rest    resolve+write ${resolveSec}%6.2f s" +
-        f" ($resolveJobs%d jobs)  open+probe ${openSec}%6.2f s ($openJobs%d jobs)  rows=$n")
+      val resolve = CpuMeter.measure(spark.sparkContext) {
+        val (pairs, release) = Dedup.nearDupPairsManaged(
+          docs, "doc_id", "text", graft.dedup.DedupQueries.LshPairsThreshold)
+        ClusterIndex.write(
+          Clusters.resolve(docs, "doc_id", pairs, "doc_a", "doc_b")
+            .select("doc_id", "cluster"),
+          path)
+        release()
+      }
+      val open = CpuMeter.measure(spark.sparkContext)(
+        ClusterIndex.open(spark, path).count())
+      val (n, resolveJobs, openJobs) = (open.value, resolve.jobs, open.jobs)
+      println(f"[scale] cluster index at rest    resolve+write ${resolve.wallS}%6.2f s" +
+        f" ($resolveJobs%d jobs)  open+probe ${open.wallS}%6.2f s ($openJobs%d jobs)  rows=$n")
       require(n == nDocs, s"at-rest assignment table lost rows: $n of $nDocs")
       require(openJobs * 2 <= resolveJobs,
         s"open submitted $openJobs jobs vs the resolve's $resolveJobs — " +
           "the at-rest table no longer skips the resolve pipeline")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      ClusterIndex.delete(spark, path)
-    }
+    } finally ClusterIndex.delete(spark, path)
   }
 
   /**

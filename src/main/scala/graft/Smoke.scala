@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's smoke check: `SparkEntry.entry` on a plain
-  * session (no extensions, no special confs) must return rows > 0. */
+  * session (no extensions, no query-shaping confs) must return rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n " + (if (n > 0) "PASS" else "FAIL"))
     spark.stop()

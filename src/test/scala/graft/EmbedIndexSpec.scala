@@ -202,7 +202,6 @@ class EmbedIndexSpec extends SparkSpec {
   }
 
   test("point probe submits exactly TWO Spark jobs — the latency shape, pinned structurally") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     // the r15→r17 latency arc (3 serial collects → 2: bucket pages
     // carry their vectors) as a load-immune invariant: wall clock on a
@@ -219,26 +218,13 @@ class EmbedIndexSpec extends SparkSpec {
       // warm once: first-touch one-time work (file listing thresholds,
       // codegen) must not count against the steady-state shape
       pairs(EmbedIndex.probe(batch, path, "vec_id", "embedding", 0.9))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.sql.graftshim.GraftShims
-        .waitListenerBusEmpty(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val got = pairs(EmbedIndex.probe(batch, path, "vec_id",
-          "embedding", 0.9))
-        org.apache.spark.sql.graftshim.GraftShims
-          .waitListenerBusEmpty(spark.sparkContext)
-        assert(got.map(x => (x._1, x._2)) == Set((100L, 1L)))
-        assert(jobs.get == 2,
-          s"point probe submitted ${jobs.get} jobs; the shape is TWO " +
-            "serial single-stage collects (batch band rows, then bucket " +
-            "pages carrying their vectors)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val run = CpuMeter.measure(spark.sparkContext)(
+        pairs(EmbedIndex.probe(batch, path, "vec_id", "embedding", 0.9)))
+      assert(run.value.map(x => (x._1, x._2)) == Set((100L, 1L)))
+      assert(run.jobs == 2,
+        s"point probe submitted ${run.jobs} jobs; the shape is TWO " +
+          "serial single-stage collects (batch band rows, then bucket " +
+          "pages carrying their vectors)")
     } finally EmbedIndex.delete(spark, root)
   }
 

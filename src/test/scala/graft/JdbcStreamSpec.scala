@@ -393,12 +393,10 @@ class JdbcStreamSpec extends SparkSpec {
   }
 
   test("one apply plan per batch: jobs and exchanges are constant in the table count; a clean batch runs no DLQ job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
-    import org.apache.spark.sql.graftshim.GraftShims
     object Plans extends AdaptiveSparkPlanHelper
     val tables = Seq("T_A", "T_B", "T_C", "T_D")
     val cfg = (db: String) => sinkCfg(db).copy(
@@ -419,27 +417,22 @@ class JdbcStreamSpec extends SparkSpec {
       val wire = spark.createDataFrame(
         spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
       val norm = CdcNormalize(wire, CdcConfig())
-      val jobs, exchanges = new java.util.concurrent.atomic.AtomicInteger
-      val jobListener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      }
+      val exchanges = new java.util.concurrent.atomic.AtomicInteger
       val planListener = new QueryExecutionListener {
         override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
           exchanges.addAndGet(Plans.collectWithSubqueries(qe.executedPlan) {
             case x: ShuffleExchangeLike => x }.length)
         override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
       }
-      GraftShims.waitListenerBusEmpty(spark.sparkContext)
-      spark.sparkContext.addSparkListener(jobListener)
-      spark.listenerManager.register(planListener)
-      try {
-        JdbcApply.applyBatch(norm, cfg(db))
-        GraftShims.waitListenerBusEmpty(spark.sparkContext)
-      } finally {
-        spark.sparkContext.removeSparkListener(jobListener)
-        spark.listenerManager.unregister(planListener)
-      }
-      (jobs.get, exchanges.get)
+      // registered inside the measured body, after the meter's first
+      // drain, so no earlier execution reaches it
+      val jobs =
+        try CpuMeter.measure(spark.sparkContext) {
+          spark.listenerManager.register(planListener)
+          JdbcApply.applyBatch(norm, cfg(db))
+        }.jobs.toInt
+        finally spark.listenerManager.unregister(planListener)
+      (jobs, exchanges.get)
     }
     val corruptRow = wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A")
     val one = census(rowsFor(tables.take(1)), "plan1db")
