@@ -37,9 +37,9 @@ object SparkEntry {
    * query. Without the barrier, Catalyst pushes each query's
    * `corrupt_reason`/`op` predicates below the normalize projections
    * and re-inlines the whole header-extraction chain ~20× into a
-   * single Filter (observed via explain) — the same reason
-   * JdbcApply.applyBatch persists its micro-batch before splitting
-   * valid/corrupt branches.
+   * single Filter (observed via explain). JdbcApply.applyBatch needs
+   * no such barrier: it filters nothing below its window, and its
+   * plan computes the header chain once.
    */
   private val normCache = Tables.registerSessionCache(
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])

@@ -337,16 +337,24 @@ object CdcOps {
       offset: Column, recordKey: Column, recordValue: Column,
       headersJson: Column, reason: Column, tableName: Column,
       entryType: Column): DataFrame =
-    df.filter(reason.isNotNull).select(
-      topic.as("topic"),
-      partition.as("kafka_partition"),
-      offset.as("kafka_offset"),
-      recordKey.as("record_key"),
-      recordValue.as("record_value"),
-      headersJson.as("headers"),
-      substring(reason, 1, 1000).as("error_reason"),
-      tableName.as("table_name"),
-      entryType.as("entry_type"))
+    df.filter(reason.isNotNull).select(corruptEventColumns(topic, partition,
+      offset, recordKey, recordValue, headersJson, reason, tableName, entryType): _*)
+
+  /** The `streaming_corrupt_events` columns of [[toCorruptEvents]], for
+    * a caller that carries them beside other rows. */
+  def corruptEventColumns(topic: Column, partition: Column,
+      offset: Column, recordKey: Column, recordValue: Column,
+      headersJson: Column, reason: Column, tableName: Column,
+      entryType: Column): Seq[Column] = Seq(
+    topic.as("topic"),
+    partition.as("kafka_partition"),
+    offset.as("kafka_offset"),
+    recordKey.as("record_key"),
+    recordValue.as("record_value"),
+    headersJson.as("headers"),
+    substring(reason, 1, 1000).as("error_reason"),
+    tableName.as("table_name"),
+    entryType.as("entry_type"))
 
   /**
    * Offset-continuity audit — the lost-event detector a CDC consumer

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -97,8 +98,40 @@ object SchemaInfer {
       .limit(sampleSize)       // TakeOrdered — one bounded job
       .select(col(jsonCol))
       .as(Encoders.STRING)
+    inferSample(spark, sample)
+  }
+
+  /** Spark's JSON inference over an already-drawn sample (one job),
+    * clamped to the ladder: [[infer]]'s second half. */
+  def inferSample(spark: SparkSession, sample: Dataset[String]): StructType =
     StructType(spark.read.json(sample).schema.fields
       .filterNot(_.name == "_corrupt_record")
       .map(f => StructField(f.name, ladder(f.dataType), nullable = true)))
+
+  /** [[inferPerTable]]'s result: a schema per table with a payload, and
+    * every value of the table column the frame carries. */
+  final case class PerTable(schemas: Map[String, StructType], present: Set[Option[String]])
+
+  /** [[infer]] for each of `tables` over the rows `tableCol` routes to
+    * it, in ONE narrow job over a single partition: it draws each
+    * table's sample (the first `sampleSize` non-null payloads by
+    * (`offset`, payload), [[infer]]'s own) and one row of every other
+    * table column value, so the caller also learns what the frame
+    * carries. Then one inference job per table with a payload. `df`
+    * must carry an `offset` column. */
+  def inferPerTable(df: DataFrame, tableCol: String, jsonCol: String,
+      tables: Seq[String], sampleSize: Int = DefaultSampleSize): PerTable = {
+    val (t, json) = (col(tableCol), col(jsonCol))
+    val rows = df.coalesce(1)
+      .withColumn("__rn", row_number().over(Window.partitionBy(t)
+        .orderBy(json.isNull, col("offset"), json)))
+      .filter(col("__rn") <= when(t.isin(tables: _*), sampleSize).otherwise(1))
+      .select(t, json).collect()
+    val schemas = rows.filter(r => !r.isNullAt(1) && tables.contains(r.getString(0)))
+      .groupBy(_.getString(0)).map { case (table, sample) =>
+        table -> inferSample(df.sparkSession,
+          df.sparkSession.createDataset(sample.map(_.getString(1)).toSeq)(Encoders.STRING))
+      }
+    PerTable(schemas, rows.map(r => Option(r.getString(0))).toSet)
   }
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType, DateType,
-  DayTimeIntervalType, StringType, TimestampType, YearMonthIntervalType}
+  DayTimeIntervalType, StringType, StructType, TimestampType, YearMonthIntervalType}
+
+import graft.model.Cdc
 
 /**
  * `field.type.overrides` (SURVEY.md §2.4; IidrToJdbcSinkTransform
@@ -203,6 +205,25 @@ object TypeOverrides {
   /** Optional integer regex group: 0 when the group is absent. */
   private def part(b: Column, re: String): Column =
     coalesce(nullif(regexp_extract(b, re, 1), lit("")).cast("int"), lit(0))
+
+  /** A normalized CDC frame with override failures marked corrupt:
+    * `corrupt_reason` gains [[failureReason]] for each overridden field
+    * of a row whose table's PINNED schema declares the field STRING —
+    * a same-named numeric field on another table must parse under ITS
+    * type, not the override (the reference SMT coerces only string
+    * values). Inferred-schema tables are never marked: their string
+    * fields coerce best-effort without the corrupt route. */
+  def markFailures(df: DataFrame, tableSchemas: Map[String, StructType],
+      overrides: Map[String, String]): DataFrame = {
+    val reasons = for {
+      (table, schema) <- tableSchemas.toSeq.sortBy(_._1)
+      (f, t) <- overrides.toSeq.sortBy(_._1)
+      if schema.fields.exists(sf => sf.name == f && sf.dataType == StringType)
+    } yield when(col(Cdc.Cols.TargetTable) === table,
+      failureReason(get_json_object(col(Cdc.Cols.ValueJson), s"$$.$f"), t))
+    if (reasons.isEmpty) df
+    else df.withColumn(Cdc.Cols.CorruptReason, coalesce(col(Cdc.Cols.CorruptReason) +: reasons: _*))
+  }
 
   /** Reason string when a NON-blank value matches no pattern (mirrors
     * the reference's DataException text, IidrToJdbcSinkTransform

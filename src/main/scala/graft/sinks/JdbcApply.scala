@@ -2,13 +2,16 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RowProjection
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 import graft.model.Cdc
-import graft.operators.CdcOps
+import graft.operators.{CdcOps, SchemaInfer, TypeOverrides}
 
 /**
  * Batch CDC → JDBC apply: the Spark rebuild of the reference's
@@ -16,33 +19,36 @@ import graft.operators.CdcOps
  * IidrCdcSinkTask.java:94-155), designed to be called from
  * `foreachBatch` (streaming) or directly (batch backfill).
  *
- * Scale shape per micro-batch — two Spark jobs for any number of
- * tables, like the reference's single task that applies a whole poll,
- * routing corrupt records to the DLQ and grouping the rest by table
- * (IidrCdcSinkTask.java:94-155, 236-264):
- *  1. one narrow census job, which also fills the batch's cache: the
- *     corrupt count, the tables with valid rows, and the WARN sample;
- *  2. one write job on ONE task: the batch is read coalesced to one
- *     partition, so last-write-wins on (table, pk), the order-
- *     insensitive equivalent of offset-order apply (SURVEY.md §2.6),
- *     needs no exchange and no two connections ever race on a key; the
- *     corrupt rows ride the same job as a narrow DLQ branch. Under
- *     tolerance=none a dirty batch writes the DLQ branch alone, then
- *     fails;
- *  3. one JDBC transaction over every table and the DLQ rows, PS
- *     reuse, `addBatch`/`executeBatch` every `batchSize` rows
- *     (JdbcWriter.java:102-108), rollback + rethrow on failure
- *     (IidrCdcSinkTask.java:143-154). Exactly-once EFFECT comes from
- *     idempotent upsert replay, not 2PC (sink README.md:8). A transient
- *     failure re-runs the write job from the driver (W17,
- *     [[Config.maxRetries]]) over the cached batch.
+ * Scale shape per micro-batch — ONE Spark job on one task for any
+ * number of tables, like the reference's single task that applies a
+ * whole poll (IidrCdcSinkTask.java:94-155, 236-264). The batch is read
+ * once, coalesced to one partition, so last-write-wins on (table, pk),
+ * the order-insensitive equivalent of offset-order apply (SURVEY.md
+ * §2.6), needs no exchange and no two connections race on a key. The
+ * task meets the corrupt and skipped rows (no resolvable PK,
+ * unconfigured table) first: it counts them and dead-letters the
+ * corrupt ones. Then it parses each data row with its table's
+ * `from_json` projection ([[RowProjection]]) and upserts or deletes
+ * it — unless tolerance=none met a corrupt row: then the batch writes
+ * its DLQ rows alone and fails. One JDBC transaction covers every
+ * table and the DLQ, with PS reuse, `addBatch`/`executeBatch` every
+ * `batchSize` rows (JdbcWriter.java:102-108) and rollback + rethrow on
+ * failure (IidrCdcSinkTask.java:143-154); the task returns one
+ * [[Summary]] row, from which the driver builds [[ApplyStats]] and
+ * its warnings. Exactly-once EFFECT comes from idempotent upsert
+ * replay, not 2PC (sink README.md:8). A transient failure re-runs the
+ * job from the driver (W17, [[Config.maxRetries]]).
  *
- * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs on the
- * DRIVER, for every present table and the DLQ table (only when the
- * census counted corrupt rows) on one connection, before any executor
- * work — the reference can DDL inline in its task; here the writer
- * runs on an executor, so the driver serializes DDL ahead of it
- * (SURVEY.md §7.4).
+ * DDL (auto-create / auto-evolve, JdbcWriter.java:326-372) runs in the
+ * task at the first row of each table — the DLQ table's at the first
+ * corrupt row, so a clean batch never creates it — on a separate
+ * autocommit connection: MySQL commits DDL implicitly, so DDL never
+ * shares the data transaction. A per-JVM cache of each table's known
+ * columns, the reference's columnTypeCache (JdbcWriter.java:225-240),
+ * spares a known table every metadata call; an evolve refreshes its
+ * entry and a failed attempt drops the entries it used. Its limit is
+ * the reference's: a table dropped out of band behind a warm entry
+ * fails its batch, and the next attempt re-creates it.
  */
 object JdbcApply {
 
@@ -89,17 +95,13 @@ object JdbcApply {
       /** `max.retries` / `retry.backoff.ms` (IidrCdcSinkConfig.java:77-83,
         * defaults 10 / 3000). The reference DECLARES both and never reads
         * them (JdbcWriter.java) — here they are WIRED: when the batch's
-        * write job, or the driver's connect/DDL scope, fails with a
-        * TRANSIENT error (connection loss, deadlock/serialization
-        * rollback — [[isTransient]]), the driver re-runs it up to
-        * `maxRetries` times with `retryBackoffMs` between attempts, each
-        * attempt a fresh connection + transaction (the failed one was
-        * rolled back and the batch is cached, so the re-run re-reads
-        * every row — safe, the whole apply is idempotent
-        * upsert/delete/coordinate-keyed DLQ). Non-transient errors
-        * rethrow immediately; the DLQ/tolerance semantics are untouched
-        * (tolerance decides what happens AFTER retries are exhausted,
-        * exactly as it decides a first failure). 0 disables retry. */
+        * job fails with a TRANSIENT error (connection loss, deadlock/
+        * serialization rollback — [[isTransient]]), the driver re-runs
+        * it up to `maxRetries` times, `retryBackoffMs` apart, each
+        * attempt a fresh connection + transaction that reads every row
+        * again — safe, the apply is idempotent. Non-transient errors
+        * rethrow at once; tolerance decides what happens after the
+        * last attempt, as after a first failure. 0 disables retry. */
       maxRetries: Int = 10,
       retryBackoffMs: Long = 3000)
 
@@ -112,139 +114,99 @@ object JdbcApply {
       s"errors.tolerance must be none|log|all, got '${cfg.errorsTolerance}'")
     require(Set("none", "lower", "upper").contains(cfg.fieldNameCase),
       s"field.name.case must be none|lower|upper, got '${cfg.fieldNameCase}'")
-    // field.type.overrides failures are DATA errors: mark them as
-    // corrupt BEFORE the split, so they ride the same DLQ + tolerance
-    // path as malformed envelopes (the reference throws DataException
-    // from the SMT for exactly these, IidrToJdbcSinkTransform.java:292).
-    // Marking is scoped exactly like the coercion in writeTables: only
-    // rows routed to a table whose PINNED schema declares the field as
-    // STRING — a same-named numeric field on another table must parse
-    // under ITS type, not the override (the reference SMT coerces only
-    // string values). Inferred-schema tables are never marked: their
-    // string fields coerce best-effort without the corrupt route.
-    val marked =
-      if (cfg.fieldTypeOverrides.isEmpty) normalized
-      else {
-        val reasons = for {
-          (table, schema) <- cfg.tableSchemas.toSeq.sortBy(_._1)
-          (f, t) <- cfg.fieldTypeOverrides.toSeq.sortBy(_._1)
-          if schema.fields.exists(sf => sf.name == f && sf.dataType == StringType)
-        } yield when(col(Cdc.Cols.TargetTable) === table,
-          graft.operators.TypeOverrides.failureReason(
-            get_json_object(col(Cdc.Cols.ValueJson), s"$$.$f"), t))
-        if (reasons.isEmpty) normalized
-        else normalized.withColumn(Cdc.Cols.CorruptReason,
-          coalesce(col(Cdc.Cols.CorruptReason) +: reasons: _*))
-      }
-    // Cache the batch for the census, the write and any W17 re-run,
-    // unless the caller already cached it: then that cache serves, and
-    // it is the caller's to drop.
-    val owned = marked.storageLevel == StorageLevel.NONE
-    val batch = if (owned) marked.persist() else marked
-    try {
-      // Census: ONE narrow job over the PERSISTED batch, which also
-      // fills the cache. Tables with no rows this batch skip their DDL
-      // and their slice of the write plan, rows routed to an
-      // UNCONFIGURED table are surfaced (a config typo would otherwise
-      // advance the checkpoint past the data with no signal), and a
-      // clean batch never touches the DLQ.
-      val (nCorrupt, present, sample) = census(batch)
-      // Write from ONE partition. CoalesceExec(1) is SinglePartition,
-      // which satisfies the LWW window's distribution, so the write plan
-      // has no exchange. On embedded Derby (4 vCPUs, local[4]) this
-      // matched the (table, pk) exchange with a writer per shuffle
-      // partition within run-to-run spread at 2,000 and 6,000 rows per
-      // batch, and was faster at 12,000 and 24,000.
-      val src = batch.coalesce(1)
-      // tolerance=none: the corrupt rows still reach the DLQ, data rows
-      // never land, then the batch fails (IidrCdcSinkTask.java:236-264).
-      val strict = nCorrupt > 0 && cfg.errorsTolerance == "none"
-      // Per-record WARN + skip under log (IidrCdcSinkTask.java:254-259),
-      // capped at MaxLoggedCorrupt with a rollup line so the count is
-      // always visible; "all" skips silently.
-      val warned = if (cfg.errorsTolerance != "log") 0L else {
-        sample.foreach(log.warn)
-        if (nCorrupt > sample.length) log.warn(s"... and " +
-          s"${nCorrupt - sample.length} more corrupt record(s) skipped (see DLQ table)")
-        sample.length.toLong
-      }
-      val corrupt = Option.when(nCorrupt > 0)(CdcOps.toCorruptEvents(src,
-        col("topic"), col("partition"), col("offset"),
-        col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
-        to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
-          col(Cdc.Cols.SourceTs))),
-        col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType)))
+    // field.type.overrides failures are DATA errors: they ride the same
+    // DLQ + tolerance path as malformed envelopes (the reference throws
+    // DataException from the SMT for exactly these,
+    // IidrToJdbcSinkTransform.java:292), scoped like the coercion in
+    // parsedValue: pinned STRING fields only.
+    val marked = TypeOverrides.markFailures(normalized, cfg.tableSchemas, cfg.fieldTypeOverrides)
+    // A table with a PK but no pinned schema is still applied — its
+    // value schema is INFERRED from the batch's own payloads (C1
+    // fallback, IidrToJdbcSinkTransform.java:299-320), by jobs of their
+    // own before the write; a config with every schema pinned runs none.
+    //
+    // DEFERRED AUTO-CREATE is a consequence operators should expect:
+    // a configured table's DDL runs on the first batch that CARRIES
+    // rows for it, not when the sink starts — after a data-free (or
+    // deletes-only-against-nothing) first batch the table does not
+    // exist yet. Intentional: creating from config alone would need a
+    // schema before the C1 inference fallback has seen any payload.
+    val spark = marked.sparkSession
+    val configured = (cfg.tableSchemas.keySet ++ cfg.primaryKeys.keySet).toSeq.sorted
+    // Corrupt rows scan under a null table.
+    val scan = Option(configured.filterNot(cfg.tableSchemas.contains)).filter(_.nonEmpty)
+      .map(SchemaInfer.inferPerTable(marked.withColumn("__t", when(
+        col(Cdc.Cols.CorruptReason).isNull, col(Cdc.Cols.TargetTable))), "__t", Cdc.Cols.ValueJson, _))
+    // Every table's config checks run before the write, so a
+    // misconfigured table fails the batch before any table lands.
+    val plans = configured.flatMap(t => tablePlan(t, cfg.tableSchemas.getOrElse(t,
+      scan.flatMap(_.schemas.get(t)).getOrElse(new StructType())), cfg))
+    val task = new ApplyTask(cfg, configured.toSet,
+      plans.map(p => p.table -> (p, parser(spark, p))).toMap)
+    // Read from ONE partition. CoalesceExec(1) is SinglePartition,
+    // which satisfies the LWW window's distribution, so the plan has no
+    // exchange. On embedded Derby (4 vCPUs, local[4]) this matched the
+    // (table, pk) exchange with a writer per shuffle partition within
+    // run-to-run spread at 2,000 and 6,000 rows per batch, and was
+    // faster at 12,000 and 24,000.
+    val rows = keyedRows(marked.coalesce(1), plans)
+    import spark.implicits._
+    // W17: a transient failure re-runs the job from the driver. The
+    // failed attempt rolled back its one transaction and dropped the
+    // cache entries it used, and the re-run reads the batch again.
+    // A scan that saw nothing to write (no corrupt row, no valid row of
+    // a planned table) spares the write job.
+    val summary = scan.filter(s => !s.present(None) && !plans.exists(p => s.present(Some(p.table))))
+      .map(s => Summary(unconfigured = (s.present.flatten -- configured).toSeq.sorted))
+      .getOrElse(withTransientRetry("apply write job", cfg.maxRetries, cfg.retryBackoffMs) {
+        rows.mapPartitions(task.run).collect()
+      }.headOption.getOrElse(Summary()))
 
-      // A table with a PK but no pinned schema is still applied — its
-      // value schema is INFERRED from the batch's own payloads (C1
-      // fallback, IidrToJdbcSinkTransform.java:299-320).
-      //
-      // DEFERRED AUTO-CREATE is a consequence operators should expect:
-      // a configured table's DDL runs on the first batch that CARRIES
-      // rows for it, not when the sink starts — after a data-free (or
-      // deletes-only-against-nothing) first batch the table does not
-      // exist yet. Intentional: creating from config alone would need a
-      // schema before the C1 inference fallback has seen any payload.
-      val configured = cfg.tableSchemas.keySet ++ cfg.primaryKeys.keySet
-      val unconfigured = present -- configured
-      if (unconfigured.nonEmpty)
-        log.warn(s"Batch contains rows for unconfigured table(s) " +
-          s"${unconfigured.toSeq.sorted.mkString(", ")} — no schema or " +
-          "primary key is configured, so these rows are NOT applied")
-      // Every table's config checks run before any DDL or write, so a
-      // misconfigured table fails the batch before the others land.
-      val plans = if (strict) Nil else configured.toSeq.sorted
-        .filter(present.contains).flatMap(tablePlan(batch, _, cfg))
-      val unroutable = writeTables(src, plans, corrupt, cfg)
-      if (strict)
-        throw new IllegalStateException(
-          s"$nCorrupt corrupt record(s) in batch and errors.tolerance=none")
-      ApplyStats(nCorrupt, warned, unroutable)
-    } finally if (owned) batch.unpersist()
+    // Per-record WARN + skip under log (IidrCdcSinkTask.java:254-259),
+    // capped at MaxLoggedCorrupt with a rollup line so the count is
+    // always visible; "all" skips silently.
+    val warned = if (cfg.errorsTolerance != "log") 0L else {
+      summary.sample.foreach(log.warn)
+      if (summary.corrupt > summary.sample.length) log.warn(s"... and " +
+        s"${summary.corrupt - summary.sample.length} more corrupt record(s) skipped (see DLQ table)")
+      summary.sample.length.toLong
+    }
+    // Rows routed to an UNCONFIGURED table are surfaced: a config typo
+    // would otherwise advance the checkpoint past the data with no signal.
+    if (summary.unconfigured.nonEmpty)
+      log.warn(s"Batch contains rows for unconfigured table(s) " +
+        s"${summary.unconfigured.mkString(", ")} — no schema or " +
+        "primary key is configured, so these rows are NOT applied")
+    summary.unroutable.toSeq.sorted.foreach { case (t, n) =>
+      log.warn(s"$n record(s) for table $t skipped: no " +
+        s"primary-key value resolvable from key or value payload")
+    }
+    // tolerance=none: the corrupt rows reached the DLQ, no data row
+    // landed, and the batch fails (IidrCdcSinkTask.java:236-264).
+    if (summary.corrupt > 0 && cfg.errorsTolerance == "none")
+      throw new IllegalStateException(
+        s"${summary.corrupt} corrupt record(s) in batch and errors.tolerance=none")
+    ApplyStats(summary.corrupt, warned, summary.unroutable.values.sum)
   }
 
-  /** ONE narrow job (no exchange, so AQE adds no stages): the corrupt
-    * count, the tables with valid rows, and WARN lines for the first
-    * [[MaxLoggedCorrupt]] corrupt rows, merged from per-partition
-    * summaries on the driver. */
-  private def census(batch: DataFrame): (Long, Set[String], Seq[String]) = {
-    import batch.sparkSession.implicits._
-    val parts = batch.select(substring(col(Cdc.Cols.CorruptReason), 1, 1000),
-        col(Cdc.Cols.TargetTable), col("topic"), col("partition"), col("offset"))
-      .mapPartitions { (rows: Iterator[Row]) =>
-        var n = 0L
-        val (tables, sample) = (scala.collection.mutable.Set.empty[String], Seq.newBuilder[String])
-        rows.foreach { r =>
-          if (r.isNullAt(0)) { if (!r.isNullAt(1)) tables += r.getString(1) }
-          else {
-            if (n < MaxLoggedCorrupt) sample += s"Corrupt record skipped: " +
-              s"${r.get(0)} (topic=${r.get(2)}, partition=${r.get(3)}, offset=${r.get(4)})"
-            n += 1
-          }
-        }
-        Iterator((n, tables.toSeq, sample.result()))
-      }.collect()
-    (parts.map(_._1).sum, parts.flatMap(_._2).toSet,
-      parts.toSeq.flatMap(_._3).take(MaxLoggedCorrupt))
-  }
+  /** What the write task saw: the corrupt count and the first
+    * [[MaxLoggedCorrupt]] WARN lines, the rows skipped per table for
+    * lack of a PK value, and the unconfigured tables that had rows. */
+  private[sinks] final case class Summary(corrupt: Long = 0L, sample: Seq[String] = Nil,
+      unroutable: Map[String, Long] = Map.empty, unconfigured: Seq[String] = Nil)
 
-  /** One present table: parse schema, STRING-field overrides, key
+  /** One configured table: parse schema, STRING-field overrides, key
     * schema, wire PKs, and the cased schema/PKs of the JDBC edge. */
   private final case class TablePlan(table: String, schema: StructType,
       overrides: Map[String, String], keySchema: StructType, pks: Seq[String],
       jdbcSchema: StructType, jdbcPks: Seq[String])
 
-  /** Resolve one table's schemas and check its config; None when
-    * nothing is inferable (no payloads for the table in this batch —
-    * e.g. deletes only against a table that was never created). */
-  private def tablePlan(batch: DataFrame, table: String,
+  /** Check one table's config and resolve its schemas; None when
+    * nothing is inferable (no payloads for an unpinned table in this
+    * batch — e.g. deletes only against a table that was never
+    * created). */
+  private def tablePlan(table: String, schema: StructType,
       cfg: Config): Option[TablePlan] = {
-    val schema = cfg.tableSchemas.getOrElse(table,
-      graft.operators.SchemaInfer.infer(
-        batch.sparkSession,
-        batch.filter(col(Cdc.Cols.TargetTable) === table &&
-          col(Cdc.Cols.CorruptReason).isNull),
-        Cdc.Cols.ValueJson))
     if (schema.isEmpty) return None
     // Overrides hit STRING-declared fields only (the reference coerces
     // only string values, IidrToJdbcSinkTransform.java:246-252); the
@@ -254,7 +216,7 @@ object JdbcApply {
       schema.fields.exists(sf => sf.name == f && sf.dataType == StringType) }
     val effSchema = StructType(schema.fields.map(f =>
       overrides.get(f.name)
-        .map(t => f.copy(dataType = graft.operators.TypeOverrides.sparkType(t)))
+        .map(t => f.copy(dataType = TypeOverrides.sparkType(t)))
         .getOrElse(f)))
     val keySchema = cfg.keySchemas.getOrElse(table, new StructType())
     val pks = cfg.primaryKeys.getOrElse(table, Seq.empty)
@@ -272,7 +234,7 @@ object JdbcApply {
     }
     // A PK carried only by the KEY schema (value payloads never repeat
     // it — the compacted-topic shape) still needs a column: append it
-    // so DDL declares it and the writer binds it from its PK column.
+    // so DDL declares it and the writer binds it from its PK value.
     val ddlSchema = StructType(effSchema.fields ++
       pks.filterNot(effSchema.fieldNames.contains)
         .flatMap(p => keySchema.fields.find(_.name == p)))
@@ -300,146 +262,200 @@ object JdbcApply {
     Some(TablePlan(table, schema, overrides, keySchema, pks, jdbcSchema, pks.map(cased)))
   }
 
-  /** DDL for every present table (and the DLQ table, given `corrupt`
-    * rows) on one driver connection, then ONE write job over the
-    * one-partition `batch`: the LWW window on (table, pk) needs no
-    * exchange, and the corrupt rows ride it as a narrow `__dlq` branch.
-    * Both legs retry transient failures from the driver (W17).
-    * Returns the unroutable-row count. */
-  private def writeTables(batch: DataFrame, plans: Seq[TablePlan],
-      corrupt: Option[DataFrame], cfg: Config): Long = {
-    if (plans.isEmpty && corrupt.isEmpty) return 0L
-    // DDL on the driver, before executors touch the tables.
-    withConnection(cfg) { conn =>
-      val dialect = Dialects.forConnection(conn)
-      plans.foreach(p => ensureTable(conn, dialect, p.table, p.jdbcSchema, p.jdbcPks, cfg))
-      val dlq = dialect.normalizeIdent(cfg.corruptTable)
-      if (corrupt.nonEmpty && !tableExists(conn, dlq))
-        exec(conn, dialect.createTableSql(dlq, Cdc.corruptEventSchema, Seq.empty))
-    }
-    val slots = plans.zip(plans.scanLeft(2)((o, p) => o + p.pks.length + 1))
-      .map { case (p, offset) => p.table -> (p, offset) }.toMap
-    // W17: a transient failure re-runs the write job from the driver.
-    // The failed attempt rolled back its one transaction and `batch` is
-    // cached, so the re-run re-reads the same rows. Each attempt builds
-    // its own plan and Observation: re-running a failed action on an
-    // observed frame can report zero for the metrics of the retry.
-    val counts = withTransientRetry("apply write job", cfg.maxRetries, cfg.retryBackoffMs) {
-      val unroutable = Observation()
-      // Union by name: each branch's rows read null in the other's
-      // columns, so a row is a DLQ row exactly when `__dlq` is set.
-      val out = (Option.when(plans.nonEmpty)(lwwRows(batch, plans, unroutable)) ++
-        corrupt.map(c => c.select(struct(c.columns.map(col): _*).as("__dlq"))))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      // No repartition: the one partition holds every (table, pk), and
-      // one transaction covers every table and the DLQ rows.
-      writePartitions(out, slots, out.schema.fieldNames.indexOf("__dlq"), cfg)
-      if (plans.isEmpty) Map.empty[String, Any] else unroutable.get
-    }
-    plans.indices.map { i =>
-      val n = counts(s"u$i").asInstanceOf[Long]
-      if (n > 0)
-        log.warn(s"$n record(s) for table ${plans(i).table} skipped: no " +
-          s"primary-key value resolvable from key or value payload")
-      n
-    }.sum
-  }
-
-  /** Valid rows after last-write-wins on (table, pk): op, table, then
-    * per table its PK columns and value struct. `unroutable` counts,
-    * per table, the rows skipped for lack of a PK value. */
-  private def lwwRows(batch: DataFrame, plans: Seq[TablePlan],
-      unroutable: Observation): DataFrame = {
-    val tableCol = col(Cdc.Cols.TargetTable)
-    val ix = plans.indices
-    val mine = plans.map(p => tableCol === p.table)
-    // Table i's columns parse only table i's rows: `__v<i>`/`__k<i>`
-    // (and so every `__pk<i>_<j>`) read null on other tables' rows, so
-    // the window below compares each table's keys with its own typed
-    // equality and keys need no string encoding.
-    val parsed = batch
-      .filter(col(Cdc.Cols.CorruptReason).isNull &&
-        tableCol.isin(plans.map(_.table): _*))
-      .withColumns(ix.flatMap(i => Seq(
-        s"__v$i" -> when(mine(i), from_json(col(Cdc.Cols.ValueJson), plans(i).schema)),
-        s"__k$i" -> when(mine(i), from_json(col(Cdc.Cols.KeyJson), plans(i).keySchema))
-      )).toMap)
-      .withColumns(ix.filter(plans(_).overrides.nonEmpty).map(i => s"__v$i" ->
-        plans(i).overrides.foldLeft(col(s"__v$i")) { case (v, (f, t)) =>
-          v.withField(f, graft.operators.TypeOverrides.coerce(v.getField(f), t))
-        }).toMap)
-    // PK columns: key struct for deletes, value struct otherwise
-    // (IidrCdcSinkTask.java:186-195 / JdbcWriter.java:208-221). Either
-    // struct may LACK the field (pinned value schema without the PK,
-    // or no key schema configured) — referencing a missing struct
-    // field would fail analysis, so both sides are schema-guarded.
-    val pkCols = ix.map(i => plans(i).pks.indices.map(j => s"__pk${i}_$j"))
-    val keyed = parsed.withColumns(ix.flatMap { i =>
-      val p = plans(i)
-      def field(s: StructType, struct: String, pk: String) =
-        if (s.fieldNames.contains(pk)) Some(col(struct).getField(pk)) else None
-      p.pks.zip(pkCols(i)).map { case (pk, name) =>
-        val fromKey = field(p.keySchema, s"__k$i", pk)
-        val fromValue = field(p.schema, s"__v$i", pk)
-        name -> when(col(Cdc.Cols.Op) === Cdc.Op.Delete,
-          fromKey.orElse(fromValue).getOrElse(lit(null)))
-          .otherwise(coalesce((fromValue.toSeq ++ fromKey.toSeq :+ lit(null)): _*))
+  /** Table `p`'s value struct: `value_json` parsed under `schema` (the
+    * table's schema or a part of it), with the STRING-field overrides
+    * coerced. */
+  private def parsedValue(p: TablePlan, schema: StructType): Column =
+    p.overrides.filter { case (f, _) => schema.fieldNames.contains(f) }
+      .foldLeft(from_json(col(Cdc.Cols.ValueJson), schema)) { case (v, (f, t)) =>
+        v.withField(f, TypeOverrides.coerce(v.getField(f), t))
       }
-    }.toMap)
 
-    // Valid JSON that lacks the PK fields cannot be routed: warn +
-    // skip + count, like the reference's "no PK fields => warn + skip"
-    // (JdbcWriter.java:208-221) — never a silent drop. An Observation
-    // counts them per table on the write plan itself, so the count
-    // rides the write job instead of costing one of its own.
-    val routable = ix.map(i => mine(i) && pkCols(i).map(col(_).isNotNull).reduce(_ && _))
-    val metrics = ix.map(i => count(when(mine(i) && !routable(i), true)).as(s"u$i"))
-    CdcOps.lastWriteWins(
-      keyed.observe(unroutable, metrics.head, metrics.tail: _*)
-        .filter(routable.reduce(_ || _)),
-      Cdc.Cols.TargetTable, pkCols.flatten, "offset")
-      .select((col(Cdc.Cols.Op) +: tableCol +:
-        ix.flatMap(i => pkCols(i).map(col) :+ col(s"__v$i"))): _*)
+  /** Table `p`'s PK values: key struct for deletes, value struct first
+    * otherwise (IidrCdcSinkTask.java:186-195 / JdbcWriter.java:208-221).
+    * Either struct may LACK the field (pinned value schema without the
+    * PK, or no key schema configured) — referencing a missing struct
+    * field would fail analysis, so both sides are schema-guarded. */
+  private def pkValues(p: TablePlan, value: Column): Seq[Column] = {
+    val key = from_json(col(Cdc.Cols.KeyJson), pkOnly(p, p.keySchema))
+    p.pks.map { pk =>
+      val fromKey = Option.when(p.keySchema.fieldNames.contains(pk))(key.getField(pk))
+      val fromValue = Option.when(p.schema.fieldNames.contains(pk))(value.getField(pk))
+      when(col(Cdc.Cols.Op) === Cdc.Op.Delete, fromKey.orElse(fromValue).getOrElse(lit(null)))
+        .otherwise(coalesce((fromValue.toSeq ++ fromKey.toSeq :+ lit(null)): _*))
+    }
   }
 
-  /** Write every nonempty partition of `out` on a fresh connection
-    * inside one transaction: commit on success, rollback + rethrow on
-    * failure (IidrCdcSinkTask.java:143-154). A row whose `__dlq` column
-    * (`dlqIx`, -1 when absent) is set goes to the [[DlqWriter]], any
-    * other to its table's [[TableWriter]]. The rows stream once: a
-    * retry re-runs the whole job from the driver (see [[writeTables]]). */
-  private def writePartitions(out: DataFrame, slots: Map[String, (TablePlan, Int)],
-      dlqIx: Int, cfg: Config): Unit =
-    out.foreachPartition { (rows: Iterator[Row]) =>
-      if (rows.hasNext) {
-        val conn = connect(cfg.url, cfg.user, cfg.password)
-        try {
-          conn.setAutoCommit(false)
-          val dialect = Dialects.forConnection(conn)
-          val writers = scala.collection.mutable.Map.empty[Option[String], RowWriter]
-          rows.foreach { row => // key None: the DLQ
-            val key = if (dlqIx >= 0 && !row.isNullAt(dlqIx)) None else Some(row.getString(1))
-            writers.getOrElseUpdate(key, key.fold[RowWriter](new DlqWriter(conn, dialect, cfg, dlqIx)) {
-              t => new TableWriter(conn, dialect, slots(t)._1, slots(t)._2, cfg.batchSize)
-            }).write(row)
+  private def pkOnly(p: TablePlan, schema: StructType): StructType =
+    StructType(schema.fields.filter(f => p.pks.contains(f.name)))
+
+  /** The batch after last-write-wins: (data-row flag, op, table, key
+    * json, value json, DLQ struct). A data row (valid, planned table,
+    * PK resolved) is keyed by the JSON of its typed PK values, parsed
+    * alone. Any other row — corrupt, no resolvable PK (warn + skip +
+    * count, like JdbcWriter.java:208-221), unconfigured table — is
+    * keyed by its Kafka coordinates, so it survives alone, and the flag
+    * leads the window's key, so they all sort before any data row. */
+  private def keyedRows(batch: DataFrame, plans: Seq[TablePlan]): DataFrame = {
+    val table = col(Cdc.Cols.TargetTable)
+    // One CASE branch per PK shape: tables whose PKs parse alike share it.
+    val branches = plans.groupBy(p => (pkOnly(p, p.keySchema), pkOnly(p, p.schema), p.pks,
+        p.overrides.filter { case (f, _) => p.pks.contains(f) }))
+      .values.toSeq.sortBy(_.head.table).map { ps =>
+        val pks = pkValues(ps.head, parsedValue(ps.head, pkOnly(ps.head, ps.head.schema)))
+        table.isin(ps.map(_.table): _*) -> when(pks.map(_.isNotNull).reduce(_ && _),
+          to_json(struct(pks.zipWithIndex.map { case (c, j) => c.as(s"k$j") }: _*)))
+      }
+    val pkKey = branches.foldRight(lit(null).cast(StringType)) { case ((c, k), otherwise) =>
+      when(c, k).otherwise(otherwise) }
+    val data = col(Cdc.Cols.CorruptReason).isNull && col("__key").isNotNull
+    val keyed = batch.withColumn("__key", pkKey).withColumns(Map("__data" -> data,
+      "__key" -> when(data, col("__key"))
+        .otherwise(to_json(struct(col("topic"), col("partition"), col("offset"))))))
+    CdcOps.lastWriteWins(keyed, "__data", Seq(Cdc.Cols.TargetTable, "__key"), "offset")
+      .select(col("__data"), col(Cdc.Cols.Op), table, col(Cdc.Cols.KeyJson),
+        col(Cdc.Cols.ValueJson),
+        when(col(Cdc.Cols.CorruptReason).isNotNull, struct(CdcOps.corruptEventColumns(
+          col("topic"), col("partition"), col("offset"),
+          col(Cdc.Cols.KeyJson), col(Cdc.Cols.ValueJson),
+          to_json(struct(col(Cdc.Cols.TableName), col(Cdc.Cols.EntryType),
+            col(Cdc.Cols.SourceTs))),
+          col(Cdc.Cols.CorruptReason), col(Cdc.Cols.TableName),
+          col(Cdc.Cols.EntryType)): _*)).as("__dlq"))
+  }
+
+  /** Table parsers, planned once per (schema, overrides, key schema,
+    * PKs, session time zone) in this JVM: tables of one shape share one. */
+  private val parsers = TrieMap.empty[Any, RowProjection]
+
+  /** Table `p`'s parse, run in the task on each of its data rows:
+    * (op, key json, value json) → its PK values, then its value struct. */
+  private def parser(spark: SparkSession, p: TablePlan): RowProjection = {
+    if (parsers.size >= 1024) parsers.clear()
+    parsers.getOrElseUpdate((p.schema, p.overrides, p.keySchema, p.pks,
+        spark.conf.get("spark.sql.session.timeZone")), {
+      val v = parsedValue(p, p.schema)
+      RowProjection(spark, StructType(Seq(Cdc.Cols.Op, Cdc.Cols.KeyJson, Cdc.Cols.ValueJson)
+        .map(StructField(_, StringType))), pkValues(p, v) :+ v)
+    })
+  }
+
+  /** The write job's one task: reads the keyed batch in its window
+    * order — DLQ and skipped rows first, then data rows — counts,
+    * dead-letters and writes them in one transaction, and returns one
+    * [[Summary]]. */
+  private final class ApplyTask(cfg: Config, configured: Set[String],
+      plans: Map[String, (TablePlan, RowProjection)]) extends Serializable {
+    def run(rows: Iterator[Row]): Iterator[Summary] = {
+      val sink = new Sink(cfg)
+      var corrupt = 0L
+      val sample = Seq.newBuilder[String]
+      val unroutable = mutable.Map.empty[String, Long]
+      val unconfigured = mutable.SortedSet.empty[String]
+      var inData = false
+      try {
+        rows.foreach { r =>
+          val table = r.getString(2)
+          if (r.getBoolean(0)) {
+            inData = true
+            // tolerance=none: every corrupt row is counted by now, and a
+            // batch that has any writes no data row
+            if (corrupt == 0 || cfg.errorsTolerance != "none") {
+              val (p, parse) = plans(table)
+              sink.table(p).write(r.getString(1), parse(r.getString(1), r.getString(3), r.getString(4)))
+            }
+          } else {
+            if (inData) throw new IllegalStateException(
+              "apply task: a DLQ or skipped row arrived after a data row")
+            if (!r.isNullAt(5)) {
+              val d = r.getStruct(5)
+              if (corrupt < MaxLoggedCorrupt) sample += s"Corrupt record skipped: " +
+                s"${d.getString(6)} (topic=${d.get(0)}, partition=${d.get(1)}, offset=${d.get(2)})"
+              corrupt += 1
+              sink.dlq().write(d)
+            } else if (plans.contains(table)) unroutable(table) = unroutable.getOrElse(table, 0L) + 1
+            else if (table != null && !configured(table)) unconfigured += table
           }
-          writers.values.foreach(_.finish())
-          conn.commit()
-        } catch { case e: Throwable => rollbackQuietly(conn); throw e }
-        finally closeQuietly(conn)
+        }
+        sink.commit()
+      } catch { case e: Throwable => sink.fail(); throw e }
+      finally sink.close()
+      Iterator(Summary(corrupt, sample.result(), unroutable.toMap, unconfigured.toSeq))
+    }
+  }
+
+  /** Columns known to exist per (url, user, table), in this JVM —
+    * the reference's columnTypeCache (JdbcWriter.java:225-240): a table
+    * whose columns are all known costs no metadata call. */
+  private val knownColumns = TrieMap.empty[(String, Option[String], String), Set[String]]
+  /** The dialect per url, so a warm batch makes no metadata call. */
+  private val dialects = TrieMap.empty[String, Dialect]
+
+  /** One attempt's JDBC side: the data transaction, opened at the first
+    * row written; the autocommit DDL connection, opened at the first
+    * cache miss (DDL never shares the data transaction — MySQL commits
+    * DDL implicitly); a writer per table met; and the cache entries the
+    * attempt used, all dropped if it fails. */
+  private final class Sink(cfg: Config) {
+    private var conn, ddlConn: Connection = _
+    private val writers = mutable.LinkedHashMap.empty[String, TableWriter]
+    private var dlqWriter = Option.empty[DlqWriter]
+    private val used = mutable.Set.empty[(String, Option[String], String)]
+
+    private def data: Connection = {
+      if (conn == null) {
+        conn = connect(cfg)
+        conn.setAutoCommit(false)
+      }
+      conn
+    }
+    private lazy val dialect = dialects.getOrElseUpdate(cfg.url, Dialects.forConnection(data))
+
+    /** Make sure `table` has `schema`'s columns: free when the cache
+      * knows them all, else auto-create / auto-evolve on the DDL
+      * connection and record the columns that exist now. */
+    private def ensure(table: String, schema: StructType, pks: Seq[String],
+        isDlq: Boolean): Unit = {
+      val key = (cfg.url, cfg.user, table)
+      used += key
+      val known = knownColumns.getOrElse(key, Set.empty[String])
+      if (!schema.fieldNames.forall(f => known(lower(f)))) {
+        if (ddlConn == null) ddlConn = connect(cfg)
+        knownColumns(key) = ensureTable(ddlConn, dialect, table, schema, pks, cfg, isDlq)
       }
     }
 
-  /** One table's statements inside a partition's transaction:
-    * PreparedStatement reuse and batched ops over the table's slice of
-    * each row, which starts at `offset` (PK values, then the value
-    * struct). */
-  private sealed trait RowWriter { def write(row: Row): Unit; def finish(): Unit }
+    def table(p: TablePlan): TableWriter = writers.getOrElseUpdate(p.table, {
+      val t = dialect.normalizeIdent(p.table)
+      ensure(t, p.jdbcSchema, p.jdbcPks, isDlq = false)
+      new TableWriter(data, dialect, t, p, cfg.batchSize)
+    })
 
-  private final class TableWriter(conn: Connection, dialect: Dialect,
-      p: TablePlan, offset: Int, batchSize: Int) extends RowWriter {
+    def dlq(): DlqWriter = dlqWriter.getOrElse {
+      ensure(dialect.normalizeIdent(cfg.corruptTable), Cdc.corruptEventSchema, Nil, isDlq = true)
+      dlqWriter = Some(new DlqWriter(data, dialect, cfg))
+      dlqWriter.get
+    }
+
+    def commit(): Unit = if (conn != null) {
+      dlqWriter.foreach(_.finish())
+      writers.values.foreach(_.finish())
+      conn.commit()
+    }
+
+    def fail(): Unit = {
+      if (conn != null) rollbackQuietly(conn)
+      used.foreach(knownColumns.remove)
+    }
+
+    def close(): Unit = Seq(conn, ddlConn).filter(_ != null).foreach(closeQuietly)
+  }
+
+  /** One table's statements inside the attempt's transaction, with
+    * PreparedStatement reuse and batched ops. */
+  private final class TableWriter(conn: Connection, dialect: Dialect, t: String,
+      p: TablePlan, batchSize: Int) {
     private val (valueCols, pks) = (p.jdbcSchema.fieldNames.toSeq, p.jdbcPks)
-    private val t = dialect.normalizeIdent(p.table)
     private val delete = conn.prepareStatement(dialect.deleteSql(t, pks))
     private var nDel = 0
     private val plan = dialect.upsertSql(t, valueCols, pks)
@@ -496,15 +512,15 @@ object JdbcApply {
       pending.clear()
     }
 
-    def write(row: Row): Unit = {
-      val op = row.getString(0)
-      val pkVals = pks.indices.map(i => jdbcValue(row.get(offset + i)))
+    /** `parsed`: the table's PK values, then its value struct. */
+    def write(op: String, parsed: Row): Unit = {
+      val pkVals = pks.indices.map(i => jdbcValue(parsed.get(i)))
       if (op == Cdc.Op.Delete) {
         pkVals.zipWithIndex.foreach { case (v, i) => delete.setObject(i + 1, v) }
         delete.addBatch(); nDel += 1
         if (nDel % batchSize == 0) delete.executeBatch()
       } else {
-        val v = row.getStruct(offset + pks.length)
+        val v = parsed.getStruct(pks.length)
         // PK columns bind from the ROUTING values (the PK columns,
         // already key/value-coalesced): a PK riding only the record key
         // would otherwise insert as NULL from the value struct —
@@ -553,36 +569,42 @@ object JdbcApply {
       case e: Exception => log.warn(s"close after attempt: $e")
     }
 
-  /** Auto-create / auto-evolve (JdbcWriter.java:326-372). */
-  private def ensureTable(conn: Connection, dialect: Dialect, table: String,
-      schema: StructType, pks: Seq[String], cfg: Config): Unit = {
-    val t = dialect.normalizeIdent(table)
-    if (!tableExists(conn, t)) {
-      if (!cfg.autoCreate)
+  /** Auto-create / auto-evolve (JdbcWriter.java:326-372); returns the
+    * columns the table has afterwards, lower-cased. The DLQ table is
+    * created whatever `autoCreate` says and never evolved: its shape is
+    * the sink's own. */
+  private def ensureTable(conn: Connection, dialect: Dialect, t: String,
+      schema: StructType, pks: Seq[String], cfg: Config, isDlq: Boolean): Set[String] = {
+    val names = schema.fieldNames.map(lower).toSet
+    val existing = columnsOf(conn, t).map(lower).toSet
+    if (existing.isEmpty) {
+      if (!isDlq && !cfg.autoCreate)
         throw new IllegalStateException(s"table $t missing and autoCreate=false")
       exec(conn, dialect.createTableSql(t, schema, pks))
-    } else if (cfg.autoEvolve) {
-      // Locale.ROOT like every identifier fold in this file — the
-      // default-locale toLowerCase would mis-compare "ID" under tr-TR
-      // and spuriously ADD a duplicate column.
-      val existing = columnsOf(conn, t).map(_.toLowerCase(java.util.Locale.ROOT))
-      schema.fields.filterNot(f =>
-          existing.contains(f.name.toLowerCase(java.util.Locale.ROOT)))
+      names
+    } else if (isDlq) names
+    else if (cfg.autoEvolve) {
+      schema.fields.filterNot(f => existing(lower(f.name)))
         .foreach(f => exec(conn, dialect.addColumnSql(t, f)))
-    }
+      existing ++ names
+    } else existing
   }
 
-  /** The DLQ table's statements inside a partition's transaction.
+  // Locale.ROOT like every identifier fold in this file — the
+  // default-locale toLowerCase would mis-compare "ID" under tr-TR and
+  // spuriously ADD a duplicate column.
+  private def lower(name: String): String = name.toLowerCase(java.util.Locale.ROOT)
+
+  /** The DLQ table's statements inside the attempt's transaction.
     * REPLAY-IDEMPOTENT: Kafka coordinates (topic, partition, offset)
     * identify a corrupt row globally, so a redelivered foreachBatch or
     * a retried attempt REPLACES its own DLQ rows instead of appending
     * duplicates, where the reference blind-inserts
     * (CorruptEventWriter.java:37-114). Delete-then-insert by
     * coordinates, chunked so memory stays at batchSize rows, inside the
-    * partition's one transaction so a crash between the phases can't
+    * attempt's one transaction so a crash between the phases can't
     * lose rows. */
-  private final class DlqWriter(conn: Connection, dialect: Dialect, cfg: Config,
-      dlqIx: Int) extends RowWriter {
+  private final class DlqWriter(conn: Connection, dialect: Dialect, cfg: Config) {
     private val fields = Cdc.corruptEventSchema.fieldNames.toSeq
     private val t = dialect.quote(dialect.normalizeIdent(cfg.corruptTable))
     private val ins = conn.prepareStatement(
@@ -593,8 +615,9 @@ object JdbcApply {
         .map(c => s"${dialect.quote(c)} = ?").mkString(" AND "))
     private val chunk = scala.collection.mutable.ArrayBuffer.empty[Row]
 
+    /** `row`: one `streaming_corrupt_events` row. */
     def write(row: Row): Unit = {
-      chunk += row.getStruct(dlqIx)
+      chunk += row
       if (chunk.length >= cfg.batchSize) finish()
     }
 
@@ -709,34 +732,16 @@ object JdbcApply {
       Set(1062, 1, 2601, 2627)(e.getErrorCode) &&
         Option(e.getSQLState).exists(_.startsWith("23"))
 
-  /** Credentialed connect (serializable inputs only — executors call
-    * this with plain strings captured in the task closure). Properties
-    * form so a password WITHOUT a user (username riding the URL) is
-    * still forwarded instead of silently dropped. */
-  private def connect(url: String, user: Option[String],
-      password: Option[String]): Connection =
-    if (user.isEmpty && password.isEmpty) DriverManager.getConnection(url)
+  /** Credentialed connect. Properties form so a password WITHOUT a
+    * user (username riding the URL) is still forwarded instead of
+    * silently dropped. */
+  private def connect(cfg: Config): Connection =
+    if (cfg.user.isEmpty && cfg.password.isEmpty) DriverManager.getConnection(cfg.url)
     else {
       val p = new java.util.Properties()
-      user.foreach(p.setProperty("user", _))
-      password.foreach(p.setProperty("password", _))
-      DriverManager.getConnection(url, p)
-    }
-
-  /** Driver-side connection scope with the same W17 transient retry
-    * as the write job: the connect itself is the failure mode a
-    * flapping database shows FIRST (SQLState 08xxx before any write),
-    * and without retry here an epoch dies in `ensureTable` while its
-    * write job would have retried. A transient failure re-runs
-    * `f` on a fresh connection, so `f` must be idempotent from scratch
-    * (the DDL body is: existence-guarded CREATE/ALTER). A close()
-    * failure AFTER `f` completed logs and returns: one leaked
-    * connection, not a duplicated DDL execution. */
-  private def withConnection[A](cfg: Config)(f: Connection => A): A =
-    withTransientRetry(s"driver connection/DDL to ${cfg.url}",
-      cfg.maxRetries, cfg.retryBackoffMs) {
-      val conn = connect(cfg.url, cfg.user, cfg.password)
-      try f(conn) finally closeQuietly(conn)
+      cfg.user.foreach(p.setProperty("user", _))
+      cfg.password.foreach(p.setProperty("password", _))
+      DriverManager.getConnection(cfg.url, p)
     }
 
   /** Escape JDBC metadata search-pattern wildcards ('_' and '%') so
@@ -744,12 +749,6 @@ object JdbcApply {
   private def escapePattern(conn: Connection, name: String): String = {
     val esc = conn.getMetaData.getSearchStringEscape
     name.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
-  }
-
-  private def tableExists(conn: Connection, table: String): Boolean = {
-    val rs = conn.getMetaData.getTables(
-      null, null, escapePattern(conn, table), Array("TABLE"))
-    try rs.next() finally rs.close()
   }
 
   private def columnsOf(conn: Connection, table: String): Seq[String] = {

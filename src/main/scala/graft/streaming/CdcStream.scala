@@ -24,11 +24,11 @@ import graft.sinks.JdbcApply
  * sink README.md:8). Parallelism = Kafka partitions for the narrow
  * stages. The apply writes a micro-batch from ONE task with no shuffle,
  * whatever the number of tables, like the reference's one-task poll:
- * two Spark jobs (census, write), the DLQ rows riding the write job.
+ * one Spark job, whose task counts, dead-letters, runs DDL and writes.
  *
  * W17 retry (`JdbcApply.Config.maxRetries`) re-runs a failed write job
- * from the driver over the cached micro-batch; the task itself writes
- * its rows once. On a cluster, Spark's own task retries
+ * from the driver, which reads the micro-batch again; the task itself
+ * writes its rows once. On a cluster, Spark's own task retries
  * (`spark.task.maxFailures`, 4 by default; 1 under `local[N]`) run
  * inside each W17 attempt, so a transient failure can be tried up to
  * maxFailures × (maxRetries + 1) times before the epoch fails. Set

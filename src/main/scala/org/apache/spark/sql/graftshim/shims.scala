@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Bridge between graft's native Catalyst expressions and the public
@@ -45,4 +49,43 @@ object GraftShims {
     * of one batch's work is misattributed to the next. */
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+}
+
+/**
+ * Column expressions over a fixed all-STRING input, planned ONCE on the
+ * driver (analyzer and optimizer, so `RuntimeReplaceable` and common-
+ * expression rewrites are resolved like in any query) and evaluated row
+ * by row inside a task, with no Spark plan around them: the way a task
+ * that writes rows itself can run `from_json` and friends with exactly
+ * their query semantics. The projections compile lazily, on the first
+ * row a deserialized instance sees.
+ */
+final class RowProjection private (
+    stages: Seq[(Seq[Expression], Seq[Attribute])], out: StructType) extends Serializable {
+  @transient private lazy val eval: InternalRow => Row = {
+    val projections = stages.map { case (exprs, in) => UnsafeProjection.create(exprs, in) }
+    val toRow = CatalystTypeConverters.createToScalaConverter(out)
+    r => toRow(projections.foldLeft(r)((row, p) => p(row))).asInstanceOf[Row]
+  }
+
+  /** The output row for one input row, as external (Row) values. */
+  def apply(values: String*): Row =
+    eval(InternalRow.fromSeq(values.map(v => if (v == null) null else UTF8String.fromString(v))))
+}
+
+object RowProjection {
+  def apply(spark: SparkSession, input: StructType, cols: Seq[Column]): RowProjection = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // An RDD leaf, not a LocalRelation: the optimizer cannot fold the
+    // projection away into a constant relation.
+    val df = classic.internalCreateDataFrame(
+      classic.sparkContext.emptyRDD[InternalRow], input, isStreaming = false).select(cols: _*)
+    def stages(plan: LogicalPlan): List[(Seq[Expression], Seq[Attribute])] = plan match {
+      case Project(exprs, child) => stages(child) :+ (exprs -> child.output)
+      case _: LeafNode => Nil
+      case other => throw new IllegalStateException(
+        s"a row projection plans to ${other.nodeName}, not to projections")
+    }
+    new RowProjection(stages(df.queryExecution.optimizedPlan), df.schema)
+  }
 }

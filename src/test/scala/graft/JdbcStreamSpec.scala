@@ -413,7 +413,7 @@ class JdbcStreamSpec extends SparkSpec {
     }
     /** (Spark jobs, shuffle exchanges in the executed plans) of one
       * applyBatch under errors.tolerance=log. */
-    def census(rows: Seq[Row], db: String): (Int, Int) = {
+    def shape(rows: Seq[Row], db: String): (Int, Int) = {
       val wire = spark.createDataFrame(
         spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema)
       val norm = CdcNormalize(wire, CdcConfig())
@@ -435,17 +435,18 @@ class JdbcStreamSpec extends SparkSpec {
       (jobs, exchanges.get)
     }
     val corruptRow = wireRow(99, null, """{"ID":9}""", """{"ID":9}""", "T_A")
-    val one = census(rowsFor(tables.take(1)), "plan1db")
-    val four = census(rowsFor(tables), "plan4db")
+    val one = shape(rowsFor(tables.take(1)), "plan1db")
+    val four = shape(rowsFor(tables), "plan4db")
     // a corrupt row beside the valid ones: the DLQ branch rides the
     // write job, so the batch costs what a clean one does
-    val dirty = census(rowsFor(tables.take(1)) :+ corruptRow, "plandirtydb")
+    val dirty = shape(rowsFor(tables.take(1)) :+ corruptRow, "plandirtydb")
     info(s"(jobs, exchanges): 1 table $one, 4 tables $four, 1 table + 1 corrupt row $dirty")
-    // census (1 narrow job) + ONE write job on one task: the batch is
-    // coalesced to one partition, so the LWW window needs no exchange
-    assert(one == ((2, 0)), s"1 table: $one")
-    assert(four == ((2, 0)), s"4 tables: $four")
-    assert(dirty == ((2, 0)), s"1 table + 1 corrupt row: $dirty")
+    // ONE job on one task: the batch is coalesced to one partition, so
+    // the LWW window needs no exchange, and the task counts, DLQs, runs
+    // DDL and writes
+    assert(one == ((1, 0)), s"1 table: $one")
+    assert(four == ((1, 0)), s"4 tables: $four")
+    assert(dirty == ((1, 0)), s"1 table + 1 corrupt row: $dirty")
     // the dirty batch's corrupt row reached the DLQ; a clean batch
     // never creates the DLQ table
     assert(dlqCount("jdbc:derby:memory:plandirtydb") == 1)
@@ -453,20 +454,129 @@ class JdbcStreamSpec extends SparkSpec {
     // and every table landed: ID 2 survives, the delete removed ID 1
     tables.foreach(t => assert(idsOf("jdbc:derby:memory:plan4db", t) == Seq(2L), t))
     assert(idsOf("jdbc:derby:memory:plandirtydb", "T_A") == Seq(2L))
-    // one connection and one transaction carry the data and the DLQ
-    // row, over 4 input slices: the driver's DDL connection plus ONE
-    // writer
+    // one transaction carries the data and the DLQ row, over 4 input
+    // slices: the first batch into a database opens the task's data
+    // connection and its DDL connection; once the tables are cached, a
+    // batch opens ONE connection and makes no metadata call
     FlakyJdbc.register()
-    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
     val wire = spark.createDataFrame(spark.sparkContext.parallelize(
       rowsFor(tables.take(1)) :+ corruptRow, 4), Cdc.kafkaWireSchema)
-    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg("planflakydb").copy(
-      url = s"${FlakyJdbc.Prefix}memory:planflakydb;create=true"))
-    assert((FlakyJdbc.connectAttempts.get(), FlakyJdbc.commitAttempts.get()) == ((2, 1)),
-      "a dirty batch opens 2 connections and commits once, got " +
-        s"(${FlakyJdbc.connectAttempts.get()}, ${FlakyJdbc.commitAttempts.get()})")
+    def flaky(): (Int, Int, Int) = {
+      FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg("planflakydb").copy(
+        url = s"${FlakyJdbc.Prefix}memory:planflakydb;create=true"))
+      (FlakyJdbc.connectAttempts.get(), FlakyJdbc.commitAttempts.get(),
+        FlakyJdbc.metadataCalls.get())
+    }
+    val (cold, warm) = (flaky(), flaky())
+    info(s"(connections, commits, metadata calls): first batch $cold, cached $warm")
+    assert((cold._1, cold._2) == ((2, 1)),
+      s"a first dirty batch opens 2 connections and commits once, got $cold")
+    assert(warm == ((1, 1, 0)),
+      s"a cached batch opens 1 connection, commits once, makes 0 metadata calls, got $warm")
     assert(dlqCount("jdbc:derby:memory:planflakydb") == 1)
     assert(idsOf("jdbc:derby:memory:planflakydb", "T_A") == Seq(2L))
+  }
+
+  test("DDL runs in the write task at a table's first sight; a wider schema on a cached table adds its column") {
+    FlakyJdbc.register()
+    val url = s"${FlakyJdbc.Prefix}memory:firstsightdb;create=true"
+    def apply(rows: Seq[Row], schema: StructType): Int = {
+      FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+      JdbcApply.applyBatch(CdcNormalize(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows), Cdc.kafkaWireSchema), CdcConfig()),
+        sinkCfg("firstsightdb").copy(url = url, tableSchemas = Map("TEST_ORDERS" -> schema)))
+      assert(FlakyJdbc.driverConnects.get() == 0,
+        "every connection, the DDL one too, must be opened by the write task")
+      FlakyJdbc.metadataCalls.get()
+    }
+    assert(!tableExists("jdbc:derby:memory:firstsightdb;create=true", "TEST_ORDERS"))
+    assert(apply(fixture.take(3), orderSchema) > 0, "the first batch looks the table up")
+    assert(idsOf("jdbc:derby:memory:firstsightdb", "TEST_ORDERS") == Seq(1L, 2L, 3L))
+    assert(apply(fixture.slice(3, 4), orderSchema) == 0, "a cached table costs no metadata call")
+    val wider = StructType.fromDDL(
+      "ID BIGINT, ORDER_NAME STRING, AMOUNT DOUBLE, STATUS STRING, NOTES STRING")
+    val noted = Seq(wireRow(10, "UP", """{"ID":1}""",
+      """{"ID":1,"ORDER_NAME":"Order-001","AMOUNT":100.50,"STATUS":"NEW","NOTES":"evolved"}"""))
+    assert(apply(noted, wider) > 0, "a column the cache does not know is looked up")
+    val conn = DriverManager.getConnection("jdbc:derby:memory:firstsightdb")
+    try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT "NOTES" FROM "TEST_ORDERS" WHERE "ID" = 1""")
+      rs.next(); assert(rs.getString(1) == "evolved")
+    } finally conn.close()
+    assert(apply(noted, wider) == 0, "the evolve refreshed the cached columns")
+  }
+
+  test("a failed attempt drops its cache entries: a table dropped behind a warm cache fails one batch, and the next re-creates it") {
+    FlakyJdbc.register()
+    val cfg = sinkCfg("dropdb").copy(url = s"${FlakyJdbc.Prefix}memory:dropdb;create=true",
+      maxRetries = 0)
+    val wire = spark.createDataFrame(
+      spark.sparkContext.parallelize(fixture.take(3)), Cdc.kafkaWireSchema)
+    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
+    // dropped out of band: the warm cache still lists its columns
+    val conn = DriverManager.getConnection("jdbc:derby:memory:dropdb")
+    try conn.createStatement().executeUpdate("""DROP TABLE "TEST_ORDERS"""")
+    finally conn.close()
+    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+    intercept[Exception](JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg))
+    assert(FlakyJdbc.metadataCalls.get() == 0, "the failed batch trusted its warm entry")
+    FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
+    JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), cfg)
+    assert(FlakyJdbc.metadataCalls.get() > 0, "the failed attempt dropped the entry")
+    assert(idsOf("jdbc:derby:memory:dropdb", "TEST_ORDERS") == Seq(1L, 2L, 3L))
+  }
+
+  test("errors.tolerance=none with the corrupt rows last: no data table is created and no data row written") {
+    val db = "strictlastdb"
+    val url = s"jdbc:derby:memory:$db"
+    // the data rows come first in the input, the corrupt rows last and
+    // in another slice
+    val rows = fixture.take(5) ++ Seq(
+      wireRow(6, null, """{"ID":8}""", """{"ID":8}"""),
+      wireRow(7, null, """{"ID":9}""", """{"ID":9}"""))
+    val wire = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), Cdc.kafkaWireSchema)
+    val e = intercept[IllegalStateException] {
+      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()),
+        sinkCfg(db).copy(errorsTolerance = "none"))
+    }
+    assert(e.getMessage.contains("2 corrupt record(s)"), e.getMessage)
+    assert(dlqCount(url) == 2)
+    assert(!tableExists(url, "TEST_ORDERS"), "no data-table DDL may run for a failed batch")
+  }
+
+  test("an unpinned table costs no more Spark jobs than before: one scan job, one inference job per unpinned table present, the write job if anything is to be written") {
+    val tables = Seq("T_A", "T_B", "T_C")
+    def rowsFor(ts: Seq[String]): Seq[Row] = ts.zipWithIndex.flatMap { case (t, i) =>
+      Seq(wireRow(2L * i, "PT", """{"ID":1}""",
+          """{"ID":1,"ORDER_NAME":"A","AMOUNT":1.0,"STATUS":"NEW"}""", t),
+        wireRow(2L * i + 1, "DL", """{"ID":1}""", null, t))
+    }
+    def jobs(rows: Seq[Row], pinned: Seq[String], db: String): Long = {
+      val wire = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), Cdc.kafkaWireSchema)
+      val norm = CdcNormalize(wire, CdcConfig())
+      CpuMeter.measure(spark.sparkContext) {
+        JdbcApply.applyBatch(norm, sinkCfg(db).copy(
+          tableSchemas = pinned.map(_ -> orderSchema).toMap,
+          keySchemas = tables.map(_ -> StructType.fromDDL("ID BIGINT")).toMap,
+          primaryKeys = tables.map(_ -> Seq("ID")).toMap))
+      }.jobs
+    }
+    val corrupt = wireRow(9, null, """{"ID":9}""", """{"ID":9}""", "T_A")
+    // Before the write task ran DDL, a census job found the present
+    // tables, one inference job ran per present unpinned table, and one
+    // write job followed when there was anything to write: 3, 3, 4, 1
+    // and 2 jobs for these five batches.
+    assert(jobs(rowsFor(Seq("T_A")), Seq("T_B", "T_C"), "unpin1db") == 3)
+    assert(jobs(rowsFor(Seq("T_A")), Nil, "unpin2db") == 3)
+    assert(jobs(rowsFor(Seq("T_A", "T_B")), Nil, "unpin3db") == 4)
+    assert(jobs(Nil, Nil, "unpin4db") == 1)
+    assert(jobs(Seq(corrupt), Nil, "unpin5db") == 2)
+    assert(dlqCount("jdbc:derby:memory:unpin5db") == 1)
+    assert(idsOf("jdbc:derby:memory:unpin3db", "T_B").isEmpty)
+    assert(tableExists("jdbc:derby:memory:unpin3db", "T_B"))
   }
 
   test("the WARN cap holds across partitions; DLQ and targets survive a replay unchanged") {
@@ -821,35 +931,34 @@ class JdbcStreamSpec extends SparkSpec {
       s"one task: 2 injected failures + 1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
     assertTerminal("jdbc:derby:memory:w17onedb")
 
-    // Every attempt builds its own plan and Observation: a batch with
-    // unroutable rows reports, after 2 injected failures, the count the
-    // same batch reports with none. The attempts read the cached batch:
-    // the source is read once, by the census.
-    val reads = spark.sparkContext.longAccumulator("w17 source reads")
+    // Every attempt counts afresh: a batch with unroutable rows
+    // reports, after 2 injected failures, the count the same batch
+    // reports with none. Each attempt reads the source once (a JVM-wide
+    // counter, so the failed attempts' reads count too).
     val orphans = spark.createDataFrame(spark.sparkContext
-      .parallelize(unroutableRows, 2).map { r => reads.add(1); r }, Cdc.kafkaWireSchema)
+      .parallelize(unroutableRows, 2).map { r => FlakyJdbc.sourceReads.incrementAndGet(); r },
+      Cdc.kafkaWireSchema)
     def applyOrphans(db: String) = JdbcApply.applyBatch(CdcNormalize(orphans, CdcConfig()),
       twoTableCfg(db).copy(url = s"${FlakyJdbc.Prefix}memory:$db;create=true",
         maxRetries = 3, retryBackoffMs = 10L))
     FlakyJdbc.reset(failCommits = 0, transientFlavor = true)
     val clean = applyOrphans("w17u0db")
     FlakyJdbc.reset(failCommits = 2, transientFlavor = true)
-    reads.reset()
     val retried = applyOrphans("w17u2db")
     assert(FlakyJdbc.commitAttempts.get() == 3,
       s"2 injected failures + 1 success = 3 attempts, got ${FlakyJdbc.commitAttempts.get()}")
     assert(clean.unroutableSkipped == 3 && retried == clean,
       s"a retried batch must report its unroutable rows: clean $clean, retried $retried")
-    assert(reads.value == unroutableRows.length,
-      s"the retried write must read the cache, got ${reads.value} source reads")
+    assert(FlakyJdbc.sourceReads.get() == 3 * unroutableRows.length,
+      s"3 attempts must read the source 3 times, got ${FlakyJdbc.sourceReads.get()} row reads")
     assert(idsOf("jdbc:derby:memory:w17u2db", "TEST_SHIPMENTS") == Seq(7L))
   }
 
   test("W17: transient CONNECT failures retry the driver DDL leg too") {
     // A flapping database fails at connect (SQLState 08001) BEFORE any
-    // write runs — the first connection an epoch opens is applyBatch's
-    // driver-side DDL scope (ensureTable), so without retry there the
-    // epoch dies while its partition writes would have retried.
+    // write runs — the first connection an epoch opens is the write
+    // task's, before its first DDL; the job-level W17 retry re-runs the
+    // task past the flap.
     FlakyJdbc.register()
     FlakyJdbc.reset(failCommits = 0, transientFlavor = true, failConnects = 2)
     val wire = spark.createDataFrame(
@@ -945,6 +1054,12 @@ object FlakyJdbc {
   val Prefix = "jdbc:graftflaky:"
   val commitAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
   val connectAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Connections opened outside any Spark task (on the driver). */
+  val driverConnects = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** `Connection.getMetaData` calls. */
+  val metadataCalls = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Rows a spec's source produced, counted by the spec itself. */
+  val sourceReads = new java.util.concurrent.atomic.AtomicInteger(0)
   val attemptNanos = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
   @volatile private var failCommitsLeft = 0
   @volatile private var failConnectsLeft = 0
@@ -954,6 +1069,7 @@ object FlakyJdbc {
   def reset(failCommits: Int, transientFlavor: Boolean,
       failConnects: Int = 0): Unit = synchronized {
     commitAttempts.set(0); connectAttempts.set(0); attemptNanos.clear()
+    driverConnects.set(0); metadataCalls.set(0); sourceReads.set(0)
     failCommitsLeft = failCommits; failConnectsLeft = failConnects
     transientMode = transientFlavor
   }
@@ -967,6 +1083,7 @@ object FlakyJdbc {
 
   private[graft] def onConnect(): Unit = {
     val n = connectAttempts.incrementAndGet()
+    if (org.apache.spark.TaskContext.get() == null) driverConnects.incrementAndGet()
     val shouldFail = synchronized {
       if (failConnectsLeft > 0) { failConnectsLeft -= 1; true } else false
     }
@@ -1005,6 +1122,7 @@ class FlakyJdbcDriver extends java.sql.Driver {
       getClass.getClassLoader, Array(classOf[Connection]),
       (_, method, args) => {
         if (method.getName == "commit") FlakyJdbc.onCommit()
+        if (method.getName == "getMetaData") FlakyJdbc.metadataCalls.incrementAndGet()
         try {
           if (args == null) method.invoke(real)
           else method.invoke(real, args: _*)

@@ -49,4 +49,12 @@ class SqlFunctionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("string literal"))
   }
+
+  test("DESCRIBE FUNCTION prints each registered function's usage") {
+    GraftFunctions.registerAll(spark)
+    GraftFunctions.builders.foreach { case (name, usage, _) =>
+      val lines = spark.sql(s"DESCRIBE FUNCTION $name").collect().map(_.getString(0))
+      assert(lines.contains(s"Usage: $usage"), s"$name: ${lines.mkString(" | ")}")
+    }
+  }
 }
