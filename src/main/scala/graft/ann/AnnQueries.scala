@@ -76,8 +76,9 @@ object AnnQueries {
   /** The STANDING corpus-side embedding index of
     * q_dedup_incremental_embed, built and persisted once per
     * (session, sf-dir) — the same session-scoped standing-structure
-    * pattern as DedupQueries' corpus signature index (the streaming
-    * face in EventTimeOps carries the per-snapshot release handle). */
+    * pattern as DedupQueries' corpus signature index (a stream builds
+    * it with `Similarity.corpusEmbedIndex`, whose handle releases it
+    * per snapshot). */
   /** Trained-IVF resident state per (session, sf-dir): index path +
     * centroid matrix + query vectors. TRAIN + at-rest layout run once
     * per corpus snapshot (to /tmp — testdata is never written); the

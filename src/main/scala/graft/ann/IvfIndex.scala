@@ -70,7 +70,7 @@ object IvfIndex {
    * snapshot-keyed index roots, closing the accumulate-forever gap
    * the drift loop's delete-on-swap shortcut leaves for deployments
    * that RETAIN versions so in-flight probers are never raced
-   * (the production story [[graft.streaming.EventTimeOps.ivfMaintainStream]]'s
+   * (the production story [[graft.streaming.EventTimeOps.ivfMaintainOnce]]'s
    * scaladoc gestures at). Snapshot ids are opaque, so COMMIT order
    * is the version order: indexes rank by their CENTROIDS `_SUCCESS`
    * marker's time (name-tiebroken) — centroids are written once per
@@ -353,7 +353,7 @@ object IvfIndex {
     * across the prune) fails and should retry; a deployment that must
     * serve probes through maintenance retains versions instead (the
     * `Resident` swap-then-retire pattern in
-    * [[graft.streaming.EventTimeOps.ivfMaintainStream]]). */
+    * [[graft.streaming.EventTimeOps.ivfMaintainOnce]]). */
   def compactThrough(spark: SparkSession, path: String,
       throughBatch: Long, retractIdCol: Option[String] = None): Unit =
     graft.sources.Lease.withLease(spark, path) {
@@ -443,7 +443,7 @@ object IvfIndex {
     * the at-rest path, the centroid matrix probes prune with, and the
     * standing embedding profile the drift gate measures against (with
     * its release handle). The retrain-and-swap loop
-    * ([[graft.streaming.EventTimeOps.ivfMaintainStream]]) holds one of
+    * ([[graft.streaming.EventTimeOps.ivfMaintainOnce]]) holds one of
     * these in an `AtomicReference`: probers read whatever version is
     * current, a retrain installs the successor in one `set`, and only
     * then is the predecessor's path retired — the

@@ -84,8 +84,9 @@ object DedupQueries {
     * corpus signature plan, which is exactly the per-batch rebuild an
     * ingest pipeline must not pay. Session-scoped like [[pairsCache]]:
     * these ARE the standing structures, released when the session
-    * stops (the streaming faces in EventTimeOps/IngestStream carry
-    * per-snapshot release handles for long-lived processes). */
+    * stops (the index builders a stream runs on — `Dedup.corpusNearDupIndex`
+    * and kin — return per-snapshot release handles for long-lived
+    * processes). */
   private val corpusIdxCache =
     graft.Tables.registerSessionCache(
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])

@@ -1,19 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /**
  * Declarative data-quality gate: row-level rules (a violation
  * predicate per rule) plus an optional key-uniqueness rule, compiled
  * into counting aggregates over ONE scan and unpivoted into
  * (constraint, violations, pass) rows. `ProfileQueries.q_dq_orders`
- * is the batch face; [[gateStream]] runs the same verdict aggregation
- * per micro-batch and hands the caller the batch plus its verdicts so
- * a failing batch can be QUARANTINED (written aside for triage), not
- * silently dropped — at ingest scale a bad upstream deploy shows up
- * as a run of failing batches, and the quarantine is the evidence.
+ * is the batch face; [[collectVerdicts]] is the per-micro-batch step
+ * — `EventTimeOps.persistedBatches` around it (or the composed
+ * `IngestStream.gated` stack) hands the caller the batch plus its
+ * verdicts so a failing batch can be QUARANTINED (written aside for
+ * triage), not silently dropped — at ingest scale a bad upstream
+ * deploy shows up as a run of failing batches, and the quarantine is
+ * the evidence.
  *
  * Scale shape: the verdict pass is a single aggregation whose
  * exchange carries one partial row per partition (the uniqueness rule
@@ -67,32 +68,11 @@ object DqGate {
   }
 
   /** [[verdicts]] collected to the driver as [[Verdict]]s — the
-    * per-micro-batch form shared by [[gateStream]] and the composed
+    * per-micro-batch step of the streaming gate and the composed
     * ingest stack. */
   def collectVerdicts(df: DataFrame, rules: Seq[Rule],
       uniqueKey: Option[(String, String)] = None): Seq[Verdict] =
     verdicts(df, rules, uniqueKey).collect()
       .map(r => Verdict(r.getString(0), r.getLong(1), r.getBoolean(2)))
       .toSeq
-
-  /**
-   * Streaming gate: per micro-batch, run [[verdicts]] and hand
-   * `route` the batch, its verdicts, and the batch id. The caller
-   * decides routing (typical: all-pass → ingest sink, any-fail →
-   * quarantine sink plus the verdict rows to an audit table). The
-   * batch is persisted across the verdict pass and the route call
-   * (both consume it) and released before the next batch.
-   */
-  def gateStream(stream: DataFrame, rules: Seq[Rule],
-      uniqueKey: Option[(String, String)] = None)(
-      route: (DataFrame, Seq[Verdict], Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          route(batch, collectVerdicts(batch, rules, uniqueKey), batchId)
-        } finally batch.unpersist()
-        ()
-      }
 }

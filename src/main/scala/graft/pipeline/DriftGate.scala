@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.text.TextAnalysis
 
@@ -20,7 +19,11 @@ import graft.text.TextAnalysis
  * same standing-index contract as the dedup corpus indexes: release it
  * when the corpus snapshot is superseded); per batch the gate pays one
  * token aggregation over the BATCH plus a vocabulary-sized join —
- * the shuffle carries the vocabularies, never the documents.
+ * the shuffle carries the vocabularies, never the documents. The
+ * per-batch step is [[tvd]] ([[cappedTvd]], [[embeddingDist]]); the
+ * stream is `EventTimeOps.persistedBatches` around it, routing each
+ * batch by its distance (typical: over threshold → quarantine + alert,
+ * else ingest), or the composed `IngestStream.gated` stack.
  */
 object DriftGate {
 
@@ -208,12 +211,6 @@ object DriftGate {
     tvdOfFreqs(profile, folded)
   }
 
-  /** Per micro-batch [[cappedTvd]] against a standing capped profile —
-    * the gate a corpus with an unbounded vocabulary runs. */
-  def cappedGateStream(docs: DataFrame, profile: DataFrame, textCol: String)(
-      route: (DataFrame, Double, Long) => Unit): DataStreamWriter[Row] =
-    measuredStream(docs, b => cappedTvd(profile, b, textCol))(route)
-
   private def corpusFreq(corpus: DataFrame, textCol: String): DataFrame =
     corpus
       .select(explode(TextAnalysis.tokens(col(textCol))).as("token"))
@@ -248,13 +245,6 @@ object DriftGate {
       }
     } finally { joined.unpersist(); () }
   }
-
-  /** Per micro-batch: compute [[tvd]] against the standing profile and
-    * hand `route` the batch, its distance, and the batch id (typical:
-    * distance > threshold → quarantine + alert, else ingest). */
-  def gateStream(docs: DataFrame, profile: DataFrame, textCol: String)(
-      route: (DataFrame, Double, Long) => Unit): DataStreamWriter[Row] =
-    measuredStream(docs, b => tvd(profile, b, textCol))(route)
 
   // ------------------------------------------------------- embeddings
 
@@ -303,12 +293,6 @@ object DriftGate {
     else r.getDecimal(2).doubleValue() / r.getLong(3)
   }
 
-  /** Per micro-batch [[embeddingDist]] against the standing profile. */
-  def embeddingGateStream(docs: DataFrame, profile: DataFrame,
-      vecCol: String)(
-      route: (DataFrame, Double, Long) => Unit): DataStreamWriter[Row] =
-    measuredStream(docs, b => embeddingDist(profile, b, vecCol))(route)
-
   /** Per-dim (dim, non-null count, DECIMAL sum) of an embedding
     * column — the q_ann_embedding_drift aggregation shape: one narrow
     * posexplode, dims-row shuffle, map-side combined. The count is of
@@ -322,17 +306,4 @@ object DriftGate {
         col("__v").cast("decimal(28,10)").as("v"))
       .groupBy("dim")
       .agg(count(col("v")).as(nName), sum(col("v")).as(sName))
-
-  /** The shared foreachBatch shell: persist the batch, run `measure`,
-    * hand (batch, measure, batchId) to the router, release. */
-  private def measuredStream(docs: DataFrame, measure: DataFrame => Double)(
-      route: (DataFrame, Double, Long) => Unit): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try route(batch, measure(batch), batchId)
-        finally batch.unpersist()
-        ()
-      }
 }

@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.dedup.Dedup
+import graft.streaming.EventTimeOps
 
 /**
  * The composed streaming INGEST STACK — what a production corpus
- * actually runs on every arriving micro-batch, in one foreachBatch:
+ * actually runs on every arriving micro-batch, in one
+ * [[graft.streaming.EventTimeOps.persistedBatches]] body:
  *
  *   1. constraint verdicts ([[DqGate]]: nulls/domains/uniqueness),
  *   2. distribution drift vs the standing corpus ([[DriftGate]] TVD),
@@ -144,60 +146,54 @@ object IngestStream {
       graft.ann.Similarity.corpusEmbedIndex(corpus, idCol, e.vecCol,
         e.bands, e.planesPerBand, e.dims)
     }
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        def timed[T](body: => T): (T, Double) = {
-          val t0 = System.nanoTime()
-          val r = body
-          (r, (System.nanoTime() - t0) / 1e9)
-        }
-        try {
-          // INSTRUCTION rows (a delete-tagged feed's flagged rows —
-          // NULL reads as not-an-instruction) bypass every gate:
-          // dq/drift/text/embed measure the DOCUMENT rows only, and
-          // the routed batch arrives whole for an instruction-aware
-          // router (acceptIntoCorpusIndexedWithDeletes). This is the
-          // stream-level split that router's contract requires — a
-          // caller cannot split below this foreachBatch.
-          val docRows = instructions
-            .fold(batch)(i => batch.where(!coalesce(i, lit(false))))
-          // an all-instructions batch has no document distribution to
-          // measure — drift over zero rows is degenerate, not drifted
-          lazy val noDocs = instructions.isDefined && docRows.isEmpty
-          val (dq, sDq) = timed(DqGate.collectVerdicts(docRows, rules,
-            uniqueKey = Some((uniqueName, idCol))))
-          val (drift, sDrift) = timed(
-            if (noDocs) 0.0 else measureDrift(docRows))
-          val (nDup, sText) = timed {
-            val (matches, releaseBatch) = Dedup.probeNearDupIndex(
-              docRows, index, idCol, textCol, threshold)
-            try matches.count() finally releaseBatch()
-          }
-          val (nEmb, sEmb) = timed(embed.map { e =>
-            e.atRestPath match {
-              case Some(p) =>
-                // reader-first recovery: the gate reads the table
-                // before any fold's own preamble would heal a
-                // crashed compaction swap (defers to a LIVE leased
-                // maintainer's in-flight swap — DirSwap.recover)
-                graft.ann.EmbedIndex.recoverSwap(batch.sparkSession, p)
-                graft.ann.EmbedIndex.probe(docRows, p, idCol, e.vecCol,
-                  e.threshold).count()
-              case None =>
-                graft.ann.Similarity.probeEmbedIndex(docRows,
-                  embedIdx.get._1, idCol, e.vecCol, e.bands,
-                  e.planesPerBand, e.dims, e.threshold).count()
-            }
-          }.getOrElse(0L))
-          val gates = Seq("dq" -> sDq, "drift" -> sDrift, "text" -> sText) ++
-            (if (embed.isDefined) Seq("embed" -> sEmb) else Nil)
-          route(batch, BatchReport(batchId, batch.count(), dq, drift, nDup,
-            nEmb, gates))
-        } finally batch.unpersist()
-        ()
+    def timed[T](body: => T): (T, Double) = {
+      val t0 = System.nanoTime()
+      val r = body
+      (r, (System.nanoTime() - t0) / 1e9)
+    }
+    val writer = EventTimeOps.persistedBatches(docs) { (batch, batchId) =>
+      // INSTRUCTION rows (a delete-tagged feed's flagged rows —
+      // NULL reads as not-an-instruction) bypass every gate:
+      // dq/drift/text/embed measure the DOCUMENT rows only, and
+      // the routed batch arrives whole for an instruction-aware
+      // router (acceptIntoCorpusIndexedWithDeletes). This is the
+      // stream-level split that router's contract requires — a
+      // caller cannot split below this micro-batch shell.
+      val docRows = instructions
+        .fold(batch)(i => batch.where(!coalesce(i, lit(false))))
+      // an all-instructions batch has no document distribution to
+      // measure — drift over zero rows is degenerate, not drifted
+      lazy val noDocs = instructions.isDefined && docRows.isEmpty
+      val (dq, sDq) = timed(DqGate.collectVerdicts(docRows, rules,
+        uniqueKey = Some((uniqueName, idCol))))
+      val (drift, sDrift) = timed(
+        if (noDocs) 0.0 else measureDrift(docRows))
+      val (nDup, sText) = timed {
+        val (matches, releaseBatch) = Dedup.probeNearDupIndex(
+          docRows, index, idCol, textCol, threshold)
+        try matches.count() finally releaseBatch()
       }
+      val (nEmb, sEmb) = timed(embed.map { e =>
+        e.atRestPath match {
+          case Some(p) =>
+            // reader-first recovery: the gate reads the table
+            // before any fold's own preamble would heal a
+            // crashed compaction swap (defers to a LIVE leased
+            // maintainer's in-flight swap — DirSwap.recover)
+            graft.ann.EmbedIndex.recoverSwap(batch.sparkSession, p)
+            graft.ann.EmbedIndex.probe(docRows, p, idCol, e.vecCol,
+              e.threshold).count()
+          case None =>
+            graft.ann.Similarity.probeEmbedIndex(docRows,
+              embedIdx.get._1, idCol, e.vecCol, e.bands,
+              e.planesPerBand, e.dims, e.threshold).count()
+        }
+      }.getOrElse(0L))
+      val gates = Seq("dq" -> sDq, "drift" -> sDrift, "text" -> sText) ++
+        (if (embed.isDefined) Seq("embed" -> sEmb) else Nil)
+      route(batch, BatchReport(batchId, batch.count(), dq, drift, nDup,
+        nEmb, gates))
+    }
     (writer, () => {
       releaseProfile(); releaseIndex(); embedIdx.foreach(_._2()); ()
     })

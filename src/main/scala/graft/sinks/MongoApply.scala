@@ -22,10 +22,12 @@ import graft.operators.CdcOps
  *     connector's id strategy would fail those; we count them instead;
  *  2. last-write-wins collapse per `_id` on offset — the
  *     order-insensitive equivalent of the connector's per-key Kafka
- *     ordering (ONE shuffle);
- *  3. `repartition(_id)` + per-partition ReplaceOne loop, so no two
- *     connections ever race on one document. Replays are idempotent:
- *     ReplaceOne-upsert of the same document is a no-op.
+ *     ordering (ONE shuffle, hash-partitioned by `_id`);
+ *  3. per-partition ReplaceOne loop over the collapse's own
+ *     partitions: the LWW exchange already puts every version of a
+ *     document in one partition, so no two connections ever race on
+ *     one document, and no second exchange is planned. Replays are
+ *     idempotent: ReplaceOne-upsert of the same document is a no-op.
  *
  * The MongoDB wire driver is NOT part of this library (and not present
  * in this build environment — README "Scope"): executors talk to the
@@ -85,7 +87,6 @@ object MongoApply {
       val opener = cfg.opener
       val replaced = total.sparkSession.sparkContext.longAccumulator("replaced")
       lww.select(col("__id"), col(valueCol).as("__doc"))
-        .repartition(col("__id"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           if (it.hasNext) {
             val store = opener()

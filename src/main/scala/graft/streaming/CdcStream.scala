@@ -21,10 +21,14 @@ import graft.sinks.JdbcApply
  * Effectively-once: offsets are checkpointed per micro-batch and the
  * apply is an idempotent upsert/delete by PK, so replay after failure
  * converges to the same terminal state (reference's exactly-once story,
- * sink README.md:8). Parallelism = Kafka partitions for the narrow
- * stages. The apply writes a micro-batch from ONE task with no shuffle,
- * whatever the number of tables, like the reference's one-task poll:
- * one Spark job, whose task counts, dead-letters, runs DDL and writes.
+ * sink README.md:8). The apply writes a micro-batch from ONE task with
+ * no shuffle, whatever the number of tables, like the reference's
+ * one-task poll: one Spark job, whose task counts, dead-letters, runs
+ * DDL and writes. It coalesces the batch to one partition, and the
+ * coalesce is narrow, so CdcNormalize runs inside that same task: on
+ * this path a micro-batch is normalized by one core, not one task per
+ * Kafka partition. The batch queries over `CdcNormalize` keep the
+ * source's parallelism.
  *
  * W17 retry (`JdbcApply.Config.maxRetries`) re-runs a failed write job
  * from the driver, which reads the micro-batch again; the task itself

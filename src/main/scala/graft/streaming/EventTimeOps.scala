@@ -2,14 +2,17 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /**
  * Event-time streaming operators for the analytics side of the engine:
  * watermarked tumbling/sliding window aggregation and stateful
- * sessionization via `flatMapGroupsWithState`.
+ * sessionization via `flatMapGroupsWithState`, plus
+ * [[persistedBatches]], the one micro-batch shell the
+ * standing-structure faces (probes, gates, index folds) run on.
  *
  * Scale notes: the windowed aggregate is a streaming hash aggregation
  * whose state is bounded by (watermark horizon × key cardinality);
@@ -178,142 +181,57 @@ object EventTimeOps {
   }
 
   /**
-   * Streaming incremental near-dup — the ingestion-time face of
-   * `Dedup.incrementalNearDup`: each micro-batch of arriving documents
-   * probes the STATIC corpus band index and `onMatches` receives that
-   * batch's (batch_id, corpus_id, jaccard) matches (route them to a
-   * quarantine sink, or anti-join them off the ingest path). Built on
-   * foreachBatch because the funnel needs a per-batch `distinct` over
-   * candidates — as a stream-static join that would be unbounded
-   * stateful dedup; per micro-batch it is the plain batch operator,
-   * and offset checkpointing makes redelivery idempotent for any
-   * idempotent sink.
+   * The one micro-batch shell every standing-structure stream face
+   * runs on: `writeStream` in append mode, and per micro-batch
+   * persist the batch, run `body(batch, batchId)`, unpersist in a
+   * `finally` — so a body that reads its batch more than once (count
+   * + append, verdicts + route, gate after gate) scans the source
+   * once, and a body that throws fails the query with nothing left
+   * persisted. foreachBatch is the seam because each body is the
+   * plain BATCH operator: a probe funnel's per-batch `distinct` over
+   * candidates, say, would be unbounded stateful dedup as a
+   * stream-static join.
    *
-   * The corpus signature index (`Dedup.corpusNearDupIndex`) is built
-   * and persisted ONCE here, outside the per-batch path — a stream
-   * re-deriving and re-caching corpus signatures every micro-batch
-   * would pay |corpus| digest work × batches and accumulate cached
-   * frames without bound. It stays persisted for the stream's lifetime
-   * (it IS the standing index); each batch's own signature cache is
-   * released as soon as `onMatches` returns. The returned release
-   * handle drops the standing index — call it after the query stops
-   * when this corpus snapshot is superseded, or the caches of retired
-   * snapshots accumulate until LRU eviction.
+   * Standing structures (a corpus signature, fingerprint, eval-gram
+   * or embedding index; a drift profile) are built and persisted ONCE
+   * by their builder, OUTSIDE `body` — a stream re-deriving them per
+   * micro-batch would pay |corpus| work × batches and accumulate
+   * cached frames without bound. The stream form of a probe is its
+   * builder plus this shell around the probe, e.g.
+   * {{{
+   *   val (index, release) = Dedup.corpusNearDupIndex(corpus, "id", "text")
+   *   persistedBatches(docs) { (batch, _) =>
+   *     val (m, releaseBatch) =
+   *       Dedup.probeNearDupIndex(batch, index, "id", "text", 0.8)
+   *     try quarantine(m) finally releaseBatch()
+   *   }.start()
+   * }}}
+   * and the handle the builder returned drops the index once the
+   * query stops and its corpus snapshot is superseded — else the
+   * caches of retired snapshots accumulate until LRU eviction.
    *
-   * @return (writer, release handle for the standing corpus index)
+   * Delivery is at-least-once: a replayed batch arrives with the same
+   * id, so a body keyed by `batchId` (partition overwrites, folds)
+   * converges. That needs the query to run WITH a
+   * `checkpointLocation` so batch ids stay monotone across restarts —
+   * a checkpointless restart redelivers id 0 with NEW data, which no
+   * overwrite discipline can repair.
    */
-  def dedupAgainstCorpus(docs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, threshold: Double)(
-      onMatches: DataFrame => Unit): (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], () => Unit) = {
-    val (corpusIndex, releaseIndex) =
-      graft.dedup.Dedup.corpusNearDupIndex(corpus, idCol, textCol)
-    val writer = docs.writeStream
+  def persistedBatches(df: DataFrame)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (matches, releaseBatch) = graft.dedup.Dedup.probeNearDupIndex(
-          batch, corpusIndex, idCol, textCol, threshold)
-        try onMatches(matches) finally releaseBatch()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.persist()
+        try body(batch, batchId) finally batch.unpersist()
         ()
       }
-    (writer, releaseIndex)
-  }
-
-  /**
-   * Streaming SimHash dedup-against-corpus — the fingerprint twin of
-   * [[dedupAgainstCorpus]]: each micro-batch probes the STANDING
-   * banded fingerprint index (built and persisted once, outside the
-   * per-batch path) and `onMatches` receives that batch's
-   * (batch_id, corpus_id, hamming) rows. Same foreachBatch rationale:
-   * the funnel's per-batch `distinct` would be unbounded stateful
-   * dedup as a stream-static join; per micro-batch it is the plain
-   * batch operator, idempotent under redelivery for idempotent sinks.
-   * Same release contract as [[dedupAgainstCorpus]]: the returned
-   * handle drops the standing fingerprint index once this corpus
-   * snapshot is superseded.
-   *
-   * @return (writer, release handle for the standing corpus index)
-   */
-  def simhashDedupAgainstCorpus(docs: DataFrame, corpus: DataFrame,
-      idCol: String, textCol: String, maxHamming: Int, bands: Int,
-      words: Int)(
-      onMatches: DataFrame => Unit): (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], () => Unit) = {
-    val (corpusIndex, releaseIndex) = graft.dedup.Dedup.corpusSimhashIndex(
-      corpus, idCol, textCol, maxHamming, bands, words)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onMatches(graft.dedup.Dedup.probeSimhashIndex(
-          batch, corpusIndex, idCol, textCol, maxHamming, bands, words))
-        ()
-      }
-    (writer, releaseIndex)
-  }
-
-  /**
-   * Streaming train/eval DECONTAMINATION — the ingestion-time face of
-   * `Dedup.contamination`: each micro-batch of arriving training
-   * documents is scored against the STANDING eval-gram index
-   * (`Dedup.evalGramIndex`, built and persisted once per eval-suite
-   * revision) and `onScores` receives that batch's (id, n_grams,
-   * n_overlap, contamination, contaminated) rows — route contaminated
-   * docs off the training mix before they poison an eval. Same
-   * standing-structure contract as the dedup faces: the release handle
-   * drops the index when the eval suite is superseded.
-   *
-   * @return (writer, release handle for the standing eval-gram index)
-   */
-  def decontaminateStream(docs: DataFrame, evalDocs: DataFrame,
-      idCol: String, textCol: String, k: Int = 3, threshold: Double = 0.5)(
-      onScores: DataFrame => Unit): (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], () => Unit) = {
-    val (index, releaseIndex) =
-      graft.dedup.Dedup.evalGramIndex(evalDocs, textCol, k)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onScores(graft.dedup.Dedup.contaminationAgainstIndex(
-          batch, idCol, textCol, index, k, threshold))
-        ()
-      }
-    (writer, releaseIndex)
-  }
-
-  /**
-   * Streaming embedding dedup-against-corpus — the vector-side member
-   * of the [[dedupAgainstCorpus]] family, completing it (exact hash /
-   * MinHash-Jaccard / SimHash-Hamming / embedding-cosine): each
-   * micro-batch of arriving vectors probes the STANDING banded-LSH
-   * index (`Similarity.corpusEmbedIndex`, built and persisted once
-   * outside the per-batch path) and `onMatches` receives that batch's
-   * (batch_id, corpus_id, cos) rows. Same foreachBatch rationale as
-   * the text faces (the funnel's per-batch distinct would be unbounded
-   * stateful dedup as a stream-static join), same release contract:
-   * the returned handle drops the standing index once this corpus
-   * snapshot is superseded.
-   *
-   * @return (writer, release handle for the standing corpus index)
-   */
-  def embedDedupAgainstCorpus(docs: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, bands: Int, planesPerBand: Int,
-      dims: Int, threshold: Double)(
-      onMatches: DataFrame => Unit): (org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row], () => Unit) = {
-    val (corpusIndex, releaseIndex) = graft.ann.Similarity.corpusEmbedIndex(
-      corpus, idCol, vecCol, bands, planesPerBand, dims)
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        onMatches(graft.ann.Similarity.probeEmbedIndex(
-          batch, corpusIndex, idCol, vecCol, bands, planesPerBand, dims,
-          threshold))
-        ()
-      }
-    (writer, releaseIndex)
-  }
 
   /**
    * Streaming IVF index MAINTENANCE — the write-side twin of the
-   * probe faces above, completing the standing-structure symmetry:
-   * every standing index here now has both a probe face and an
-   * append-only maintenance path. Each arriving micro-batch of
+   * probe streams ([[persistedBatches]] around a probe), completing
+   * the standing-structure symmetry: every standing index here has
+   * both a probe and an append-only maintenance path. Each arriving micro-batch of
    * vectors is assigned against the RESIDENT centroid matrix (the
    * same argmax the index was built with) and appended to its cells'
    * partitions of the at-rest [[graft.ann.IvfIndex]] — only new
@@ -325,15 +243,12 @@ object EventTimeOps {
    * taken when the embedding drift gate fires — not a per-batch cost.
    *
    * The stream's batch id keys the append's dynamic partition
-   * overwrite, so foreachBatch's at-least-once redelivery REPLACES a
-   * replayed batch's own partitions instead of duplicating rows
-   * (same-id idempotence pinned in AnnLayoutSpec; the stream-restart
-   * case in EventTimeSpec). This requires the production stream to
-   * run WITH a checkpointLocation so batch ids stay monotone across
-   * restarts — a checkpointless restart redelivers id 0 with NEW
-   * data, which no overwrite discipline can repair. The batch is
-   * persisted around its two uses (count + append) so the reported
-   * row count is the appended one.
+   * overwrite, so at-least-once redelivery REPLACES a replayed
+   * batch's own partitions instead of duplicating rows (same-id
+   * idempotence pinned in AnnLayoutSpec; the stream-restart case in
+   * EventTimeSpec) — given [[persistedBatches]]' checkpointLocation
+   * requirement. The shell's persist spans the batch's two uses
+   * (count + append), so the reported row count is the appended one.
    *
    * `onAppended` receives (batchId, rows) after each append commits —
    * the hook a checkpoint/metrics pipeline keys on. No release handle:
@@ -346,42 +261,38 @@ object EventTimeOps {
       centroids: Seq[Array[Double]], indexPath: String,
       compactEvery: Option[Int] = None,
       onMaintenanceSkipped: String => Unit = _ => ())(
-      onAppended: (Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      onAppended: (Long, Long) => Unit): DataStreamWriter[Row] = {
     require(compactEvery.forall(_ >= 1),
       s"compactEvery must be >= 1, got $compactEvery")
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val n = batch.count()
-          graft.ann.IvfIndex.append(batch, idCol, vecCol, centroids,
-            indexPath, batchId)
-          // maintenance dial: once more than compactEvery append
-          // partitions have accumulated, fold the SETTLED ones
-          // (strictly before this batch — the checkpoint has
-          // committed them, so the settle-before-compact contract
-          // holds even though this batch itself may still replay)
-          compactEvery.foreach { dial =>
-            if (graft.ann.IvfIndex.appendBatchCount(
-                batch.sparkSession, indexPath) > dial)
-              graft.sources.Lease.cadenceOrSkip(onMaintenanceSkipped) {
-                graft.ann.IvfIndex.compactThrough(
-                  batch.sparkSession, indexPath, batchId - 1,
-                  retractIdCol = Some(idCol))
-                true
-              }
+    persistedBatches(vecs) { (batch, batchId) =>
+      val n = batch.count()
+      graft.ann.IvfIndex.append(batch, idCol, vecCol, centroids,
+        indexPath, batchId)
+      // maintenance dial: once more than compactEvery append
+      // partitions have accumulated, fold the SETTLED ones
+      // (strictly before this batch — the checkpoint has
+      // committed them, so the settle-before-compact contract
+      // holds even though this batch itself may still replay)
+      compactEvery.foreach { dial =>
+        if (graft.ann.IvfIndex.appendBatchCount(
+            batch.sparkSession, indexPath) > dial)
+          graft.sources.Lease.cadenceOrSkip(onMaintenanceSkipped) {
+            graft.ann.IvfIndex.compactThrough(
+              batch.sparkSession, indexPath, batchId - 1,
+              retractIdCol = Some(idCol))
+            true
           }
-          onAppended(batchId, n)
-        } finally batch.unpersist()
-        ()
       }
+      onAppended(batchId, n)
+    }
   }
 
   /**
-   * DRIFT-TRIGGERED retrain-and-swap — the full standing-index
-   * maintenance loop the [[ivfAppendStream]] scaladoc promises,
-   * wired: per micro-batch, measure embedding drift against the
+   * DRIFT-TRIGGERED retrain-and-swap — one micro-batch of the full
+   * standing-index maintenance loop the [[ivfAppendStream]] scaladoc
+   * promises; the stream is [[persistedBatches]] around this call
+   * (the batch is read by the drift measure and again by the append
+   * or retrain). Per micro-batch: measure embedding drift against the
    * SERVED index's standing profile
    * ([[graft.pipeline.DriftGate.embeddingDist]]); below the threshold
    * the batch APPENDS to the current index (the cheap steady state —
@@ -414,7 +325,7 @@ object EventTimeOps {
    * against the new profile, takes the append branch, and overwrites
    * its own partitions instead of duplicating rows the base already
    * holds (pinned in EventTimeSpec). Same checkpoint requirement as
-   * every foreachBatch maintenance loop here.
+   * every [[persistedBatches]] maintenance loop.
    *
    * `onBatch` receives (batchId, drift, action) with action ∈
    * {"append", "retrain", "retrain-replay", "retrain-skipped",
@@ -439,27 +350,7 @@ object EventTimeOps {
    * the bootstrap path) to mint [[graft.ann.IvfIndex.snapshotPath]]
    * children of `base` — that is what the pruner enumerates.
    */
-  def ivfMaintainStream(vecs: DataFrame, idCol: String, vecCol: String,
-      handle: java.util.concurrent.atomic.AtomicReference[graft.ann.IvfIndex.Resident],
-      driftThreshold: Double, pathForVersion: Long => String,
-      k: Int, refineIters: Int = 1,
-      retainIn: Option[(String, Int)] = None,
-      onMaintenanceSkipped: String => Unit = _ => ())(
-      onBatch: (Long, Double, String) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try ivfMaintainOnce(batch, batchId, idCol, vecCol, handle,
-          driftThreshold, pathForVersion, k, refineIters, retainIn, onBatch,
-          onMaintenanceSkipped)
-        finally batch.unpersist()
-        ()
-      }
-
-  /** One [[ivfMaintainStream]] micro-batch — package-private so the
-    * replay windows are directly testable. */
-  private[graft] def ivfMaintainOnce(batch: DataFrame, batchId: Long,
+  def ivfMaintainOnce(batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String,
       handle: java.util.concurrent.atomic.AtomicReference[graft.ann.IvfIndex.Resident],
       driftThreshold: Double, pathForVersion: Long => String,
@@ -655,7 +546,8 @@ object EventTimeOps {
    * the [[graft.dedup.ClusterIndex]] twin of [[ivfAppendStream]],
    * closing the stream-face symmetry: every standing structure now
    * has one (curated corpus → `IngestStream.acceptIntoCorpus`, IVF →
-   * [[ivfAppendStream]]/[[ivfMaintainStream]], clusters → here) —
+   * [[ivfAppendStream]] or [[persistedBatches]] around
+   * [[ivfMaintainOnce]], clusters → here) —
    * backed ENTIRELY by at-rest tables, no resident session state.
    * Per micro-batch: sign the batch ONCE, derive its near-dup
    * edges — within-batch banded pairs plus a BOUNDED probe of the
@@ -689,7 +581,7 @@ object EventTimeOps {
    * delivery, so the verify always finds its candidates' text.
    * `maintainEvery` drives all three settled-only cadences
    * (`maintainThrough(batchId − 1)`). Same checkpointLocation
-   * requirement as every foreachBatch maintenance loop here. A lease
+   * requirement as every [[persistedBatches]] maintenance loop. A lease
    * refusal inside any cadence (an ad-hoc maintainer on that root)
    * skips THAT tick and surfaces through `onMaintenanceSkipped` —
    * the folds are unleased and unconditional, so the stream keeps
@@ -702,57 +594,50 @@ object EventTimeOps {
       docsPath: String, sigPath: String, clusterPath: String,
       threshold: Double, maintainEvery: Option[Int] = None,
       onMaintenanceSkipped: String => Unit = _ => ())(
-      onBatch: (Long, Long, Boolean) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      onBatch: (Long, Long, Boolean) => Unit): DataStreamWriter[Row] = {
     import graft.dedup.{ClusterIndex, Dedup, SignatureIndex}
     import graft.pipeline.DocStore
     require(maintainEvery.forall(_ >= 1),
       s"maintainEvery must be >= 1, got $maintainEvery")
     def skip(body: => Boolean): Boolean =
       graft.sources.Lease.cadenceOrSkip(onMaintenanceSkipped)(body)
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          val n = batch.count()
-          val spark = batch.sparkSession
-          // reader-first recovery: both tables are READ below before
-          // their own folds' preambles run
-          SignatureIndex.recoverSwap(spark, sigPath)
-          DocStore.recoverSwap(spark, docsPath)
-          val (sig, releaseSig) = Dedup.batchSignatures(batch, idCol, textCol)
-          try {
-            val within = Dedup.pairsFromSignatures(sig, "batch_id",
-                "sh_batch", threshold)
-              .select(col("doc_a"), col("doc_b"))
-            val cross = SignatureIndex.probe(sig, sigPath,
-                DocStore.open(spark, docsPath), "doc_id", "text", threshold)
-              .select(col("batch_id").as("doc_a"),
-                col("corpus_id").as("doc_b"))
-            ClusterIndex.foldBatch(clusterPath, batch, idCol,
-              within.unionByName(cross), "doc_a", "doc_b", batchId)
-            DocStore.foldBatch(docsPath, batch, idCol, textCol, batchId)
-            // the probe's signatures ARE the fold's rows — land them
-            // without re-signing the batch
-            SignatureIndex.foldBatchSigned(sigPath,
-              sig.select(col("batch_id").as("doc_id"), col("sig")),
-              batchId)
-          } finally releaseSig()
-          val compactedCluster = maintainEvery.exists(d =>
-            skip(ClusterIndex.maintainThrough(spark, clusterPath, d,
-              batchId - 1)))
-          val compactedSig = maintainEvery.exists(d =>
-            skip(SignatureIndex.maintainThrough(spark, sigPath, d,
-              batchId - 1)))
-          val compactedDocs = maintainEvery.exists(d =>
-            skip(DocStore.maintainThrough(spark, docsPath, d,
-              batchId - 1)))
-          onBatch(batchId, n,
-            compactedCluster | compactedSig | compactedDocs)
-        } finally batch.unpersist()
-        ()
-      }
+    persistedBatches(docs) { (batch, batchId) =>
+      val n = batch.count()
+      val spark = batch.sparkSession
+      // reader-first recovery: both tables are READ below before
+      // their own folds' preambles run
+      SignatureIndex.recoverSwap(spark, sigPath)
+      DocStore.recoverSwap(spark, docsPath)
+      val (sig, releaseSig) = Dedup.batchSignatures(batch, idCol, textCol)
+      try {
+        val within = Dedup.pairsFromSignatures(sig, "batch_id",
+            "sh_batch", threshold)
+          .select(col("doc_a"), col("doc_b"))
+        val cross = SignatureIndex.probe(sig, sigPath,
+            DocStore.open(spark, docsPath), "doc_id", "text", threshold)
+          .select(col("batch_id").as("doc_a"),
+            col("corpus_id").as("doc_b"))
+        ClusterIndex.foldBatch(clusterPath, batch, idCol,
+          within.unionByName(cross), "doc_a", "doc_b", batchId)
+        DocStore.foldBatch(docsPath, batch, idCol, textCol, batchId)
+        // the probe's signatures ARE the fold's rows — land them
+        // without re-signing the batch
+        SignatureIndex.foldBatchSigned(sigPath,
+          sig.select(col("batch_id").as("doc_id"), col("sig")),
+          batchId)
+      } finally releaseSig()
+      val compactedCluster = maintainEvery.exists(d =>
+        skip(ClusterIndex.maintainThrough(spark, clusterPath, d,
+          batchId - 1)))
+      val compactedSig = maintainEvery.exists(d =>
+        skip(SignatureIndex.maintainThrough(spark, sigPath, d,
+          batchId - 1)))
+      val compactedDocs = maintainEvery.exists(d =>
+        skip(DocStore.maintainThrough(spark, docsPath, d,
+          batchId - 1)))
+      onBatch(batchId, n,
+        compactedCluster | compactedSig | compactedDocs)
+    }
   }
 
   /**

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.DqGate
+import graft.streaming.EventTimeOps
 import graft.pipeline.DqGate.{Rule, Verdict}
 
 /** The declarative dq gate: verdict counting (incl. the null-counts-
@@ -61,9 +62,9 @@ class DqGateSpec extends SparkSpec {
     implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(schema)
     val mem = MemoryStream[Row](enc, spark)
     val routed = mutable.ArrayBuffer[(Long, Boolean, Long, Seq[Verdict])]()
-    val q = DqGate.gateStream(mem.toDF(), rules, Some(("id_unique", "id"))) {
-      (batch, vs, batchId) =>
-        routed += ((batchId, vs.forall(_.pass), batch.count(), vs))
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, batchId) =>
+      val vs = DqGate.collectVerdicts(batch, rules, Some(("id_unique", "id")))
+      routed += ((batchId, vs.forall(_.pass), batch.count(), vs))
     }.start()
     try {
       mem.addData(Row(1L, 1.0), Row(2L, 2.0))          // clean

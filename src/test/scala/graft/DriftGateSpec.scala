@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 import graft.pipeline.DriftGate
+import graft.streaming.EventTimeOps
 
 /** The streaming drift gate: TVD endpoints (identical → 0, disjoint
   * → 1), empty-batch contract, and per-batch routing against the
@@ -131,8 +132,8 @@ class DriftGateSpec extends SparkSpec {
     implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(schema)
     val mem = MemoryStream[Row](enc, spark)
     val routed = mutable.ArrayBuffer[(Long, Long, Double)]()
-    val q = DriftGate.gateStream(mem.toDF(), profile, "text") {
-      (batch, t, id) => routed += ((id, batch.count(), t))
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, id) =>
+      routed += ((id, batch.count(), DriftGate.tvd(profile, batch, "text")))
     }.start()
     try {
       mem.addData(Row("alpha beta gamma"), Row("beta gamma delta"))
@@ -158,8 +159,8 @@ class DriftGateSpec extends SparkSpec {
     implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(schema)
     val mem = MemoryStream[Row](enc, spark)
     val routed = mutable.ArrayBuffer[(Long, Double)]()
-    val q = DriftGate.cappedGateStream(mem.toDF(), profile, "text") {
-      (_, t, id) => routed += ((id, t))
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, id) =>
+      routed += ((id, DriftGate.cappedTvd(profile, batch, "text")))
     }.start()
     try {
       // the corpus's own distribution (25x alpha/delta, 50x beta/gamma

@@ -172,11 +172,14 @@ class EventTimeSpec extends SparkSpec {
     ).toDF("doc_id", "text").persist()
     val mem = MemoryStream[Row](enc, spark)
     val got = scala.collection.mutable.Set.empty[(Long, Long)]
-    val (writer, releaseIndex) = EventTimeOps.dedupAgainstCorpus(
-      mem.toDF(), corpus, "doc_id", "text", 0.3) { m =>
-        got ++= m.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-    val q = writer.start()
+    val (corpusIndex, releaseIndex) =
+      Dedup.corpusNearDupIndex(corpus, "doc_id", "text")
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, _) =>
+      val (m, releaseBatch) = Dedup.probeNearDupIndex(
+        batch, corpusIndex, "doc_id", "text", 0.3)
+      try got ++= m.collect().map(r => (r.getLong(0), r.getLong(1)))
+      finally releaseBatch()
+    }.start()
     try {
       val b1 = Seq(Row(10L, "alpha beta gamma delta epsilon eta"), // ~dup of 1
         Row(11L, "completely unrelated text body here"))
@@ -208,11 +211,12 @@ class EventTimeSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val mem = MemoryStream[Row](enc, spark)
     val got = scala.collection.mutable.Set.empty[(Long, Long, Long)]
-    val (writer, releaseIndex) = EventTimeOps.simhashDedupAgainstCorpus(
-      mem.toDF(), corpus, "doc_id", "text", 5, 6, 2) { m =>
-        got ++= m.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      }
-    val q = writer.start()
+    val (corpusIndex, releaseIndex) =
+      Dedup.corpusSimhashIndex(corpus, "doc_id", "text", 5, 6, 2)
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, _) =>
+      got ++= Dedup.probeSimhashIndex(batch, corpusIndex, "doc_id", "text",
+        5, 6, 2).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    }.start()
     try {
       // exact dups (hamming 0) — a 1-token edit in 40 can exceed
       // hamming 5 over the FULL 120-bit distance; this test pins the
@@ -247,12 +251,12 @@ class EventTimeSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val mem = MemoryStream[Row](enc, spark)
     val got = scala.collection.mutable.Map.empty[Long, (Long, Long, Boolean)]
-    val (writer, releaseIndex) = EventTimeOps.decontaminateStream(
-      mem.toDF(), eval, "doc_id", "text", k = 3, threshold = 0.5) { m =>
-        got ++= m.collect().map(r =>
+    val (index, releaseIndex) = Dedup.evalGramIndex(eval, "text", k = 3)
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, _) =>
+      got ++= Dedup.contaminationAgainstIndex(batch, "doc_id", "text", index,
+        k = 3, threshold = 0.5).collect().map(r =>
           r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(4))))
-      }
-    val q = writer.start()
+    }.start()
     try {
       mem.addData(
         Row(1L, "alpha beta gamma delta leaked prefix"),  // 2 of 4 grams hit
@@ -285,12 +289,13 @@ class EventTimeSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val mem = MemoryStream[Row](enc, spark)
     val got = scala.collection.mutable.Set.empty[(Long, Long)]
-    val (writer, releaseIndex) = EventTimeOps.embedDedupAgainstCorpus(
-      mem.toDF(), corpus, "vec_id", "embedding",
-      bands = 2, planesPerBand = 4, dims = 4, threshold = 0.9) { m =>
-        got ++= m.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-    val q = writer.start()
+    val (corpusIndex, releaseIndex) = Similarity.corpusEmbedIndex(corpus,
+      "vec_id", "embedding", bands = 2, planesPerBand = 4, dims = 4)
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, _) =>
+      got ++= Similarity.probeEmbedIndex(batch, corpusIndex, "vec_id",
+        "embedding", bands = 2, planesPerBand = 4, dims = 4, threshold = 0.9)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    }.start()
     try {
       // scaled copies share every projection sign, hence every band
       // bucket — collision is provable, and cosine is exactly 1.0
@@ -319,6 +324,35 @@ class EventTimeSpec extends SparkSpec {
         !got.exists(_._2 == 3L),
         "scaled copies of corpus vec 1 must match; orthogonal vecs must not")
     } finally q.stop()
+  }
+
+  test("persistedBatches: body sees a persisted batch; a throwing body fails the query and leaves nothing persisted") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import org.apache.spark.storage.StorageLevel
+    val schema = StructType.fromDDL("id BIGINT")
+    implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(schema)
+    val mem = MemoryStream[Row](enc, spark)
+    val levels = scala.collection.mutable.ArrayBuffer.empty[StorageLevel]
+    val boom = new IllegalStateException("body failed on batch 1")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, batchId) =>
+      levels += batch.storageLevel
+      // materialize the batch's cache, so its release is observable
+      batch.count()
+      if (batchId == 1L) throw boom
+    }.start()
+    try {
+      mem.addData(Row(1L), Row(2L)); q.processAllAvailable()
+      mem.addData(Row(3L))
+      val e = intercept[StreamingQueryException](q.processAllAvailable())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(causes.contains(boom), s"query failed with $causes, not the body's exception")
+    } finally q.stop()
+    assert(levels.size == 2 && levels.forall(_ != StorageLevel.NONE),
+      s"body must see a persisted batch: $levels")
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "a failed batch must leave nothing persisted")
   }
 
   test("clusterFoldStream: folds batches, sees cross-batch dups, compacts in-loop") {
@@ -584,9 +618,12 @@ class EventTimeSpec extends SparkSpec {
     implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(schema)
     val mem = MemoryStream[Row](enc, spark)
     val log = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, String)]
-    val q = EventTimeOps.ivfMaintainStream(mem.toDF(), "vec_id", "embedding",
-      handle, driftThreshold = 0.5, pathForVersion = b => s"$root/v$b",
-      k = 4) { (id, d, a) => log += ((id, d, a)) }.start()
+    val q = EventTimeOps.persistedBatches(mem.toDF()) { (batch, batchId) =>
+      EventTimeOps.ivfMaintainOnce(batch, batchId, "vec_id", "embedding",
+        handle, driftThreshold = 0.5, pathForVersion = b => s"$root/v$b",
+        k = 4, refineIters = 1, retainIn = None,
+        onBatch = (id, d, a) => { log += ((id, d, a)); () })
+    }.start()
     try {
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()

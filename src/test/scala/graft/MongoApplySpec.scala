@@ -78,6 +78,41 @@ class MongoApplySpec extends SparkSpec {
       """{"$oid":"b2"}""" -> """{"_id":{"$oid":"b2"},"v":1}"""))
   }
 
+  test("the ReplaceOne loop runs on the LWW exchange: one shuffle, hashed by _id") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val loops = scala.collection.mutable.ArrayBuffer.empty[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "foreachPartition") loops.synchronized { loops += qe; () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val cfg = MongoApply.Config(() => InMemoryMongo.open("m4"))
+    // the meter drains the listener bus after the body, so the
+    // ReplaceOne loop's execution has reached the listener
+    try CpuMeter.measure(spark.sparkContext) {
+      spark.listenerManager.register(listener)
+      MongoApply.applyBatch(
+        rows.toDF("offset", "value_json"), "value_json", "offset", cfg)
+    } finally spark.listenerManager.unregister(listener)
+    assert(loops.size == 1, s"one ReplaceOne loop per batch, got ${loops.size}")
+    val plan = loops.head.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exchanges = PlanInspect.flatten(plan).collect {
+      case e: ShuffleExchangeLike => e.outputPartitioning
+    }
+    assert(exchanges.size == 1, s"one exchange (the LWW window's), got:\n$plan")
+    assert(exchanges.forall {
+      case h: HashPartitioning => h.references.exists(_.name == "__id")
+      case _ => false
+    }, s"the exchange must hash by __id, got $exchanges")
+  }
+
   test("custom id field routes documents by that field") {
     val cfg = MongoApply.Config(() => InMemoryMongo.open("m3"), idField = "ID")
     MongoApply.applyBatch(
