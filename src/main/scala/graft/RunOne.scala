@@ -43,12 +43,14 @@ object RunOne {
 
   /** One output row. Locale-pinned (Locale.ROOT): the wall/cpu columns
     * are what a triage habit greps and a comma-decimal default locale
-    * would silently break the format the spec pins. */
+    * would silently break the format the spec pins. `jobs_outside_sql`
+    * counts the rep's jobs run outside any SQL execution (schema
+    * inference, listings): fixed per-call cost no query plan shows. */
   private[graft] def line(name: String, rep: Int, wallSec: Double,
-      cpuSec: Double, rows: Long): String =
+      cpuSec: Double, rows: Long, jobsOutsideSql: Long): String =
     String.format(java.util.Locale.ROOT,
-      "[runone] %-28s rep%d %6.2f s  cpu %6.2f s  rows=%d",
-      name, rep, wallSec, cpuSec, rows)
+      "[runone] %-28s rep%d %6.2f s  cpu %6.2f s  rows=%d  jobs_outside_sql=%d",
+      name, rep, wallSec, cpuSec, rows, jobsOutsideSql)
 
   def main(args: Array[String]): Unit = {
     val (names, sfDir, reps) = parse(args) match {
@@ -63,7 +65,8 @@ object RunOne {
       (1 to reps).foreach { i =>
         val run = CpuMeter.measure(spark.sparkContext)(
           SparkEntry.queries(name)(spark, sfDir).count())
-        println(line(name, i, run.wallS, run.cpuS, run.value))
+        println(line(name, i, run.wallS, run.cpuS, run.value,
+          run.jobsOutsideSql))
       }
     }
     spark.stop()

@@ -367,11 +367,11 @@ object IvfIndex {
       // footers to infer a schema from) — nothing to fold or resize
       if (graft.sources.BatchPartitions
           .ids(spark, s"$path/corpus", nested = true).nonEmpty) {
+        val corpus = graft.Tables.readParquet(spark, s"$path/corpus")
         val purged = (retractIdCol, tombBatches.isEmpty) match {
           case (Some(c), false) => graft.sources.Retractions.antiJoin(
-            spark.read.parquet(s"$path/corpus"), c,
-            graft.sources.Retractions.open(spark, path))
-          case _ => spark.read.parquet(s"$path/corpus")
+            corpus, c, graft.sources.Retractions.open(spark, path))
+          case _ => corpus
         }
         // cluster the rewrite on cell so each (cell, batch) lands as
         // ~one file — the probe-side file count is the point
@@ -433,7 +433,7 @@ object IvfIndex {
       idCol: String, vecCol: String, threshold: Double): DataFrame =
     Similarity.semanticDedupAssigned(
       graft.sources.Retractions(spark, path,
-        spark.read.parquet(s"$path/corpus")
+        graft.Tables.readParquet(spark, s"$path/corpus")
           .filter(col(vecCol).isNotNull)
           .select(col(idCol), col(vecCol), col("cell")),
         idCol),
@@ -476,7 +476,7 @@ object IvfIndex {
   /** Read back the trained centroids (K rows — driver-side by
     * construction, like every centroid structure here). */
   def readCentroids(spark: SparkSession, path: String): Seq[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
+    graft.Tables.readParquet(spark, s"$path/centroids")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray).toSeq
 
@@ -492,7 +492,10 @@ object IvfIndex {
       idCol, vecCol, nprobe, k)
 
   /** [[probe]] with the centroids already resident: the steady-state
-    * per-query-batch cost is ONLY the pruned cell scan + rerank. */
+    * per-query-batch cost is the pruned cell scan + rerank, plus
+    * driver-side metadata only — the corpus listing and ONE footer
+    * read for its schema ([[graft.Tables.readParquet]]), no Spark job
+    * outside the probe's own query. */
   def probeResident(spark: SparkSession, path: String,
       centroids: Seq[Array[Double]], queries: Seq[(Long, Array[Double])],
       idCol: String, vecCol: String, nprobe: Int, k: Int): DataFrame = {
@@ -500,7 +503,7 @@ object IvfIndex {
     // listing-guarded no-op in the steady state) — a deleted doc must
     // never be served as a neighbor between the delete and the purge
     val assigned = graft.sources.Retractions(spark, path,
-      spark.read.parquet(s"$path/corpus")
+      graft.Tables.readParquet(spark, s"$path/corpus")
         .select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
           col("cell")),
       "neighbor_id")

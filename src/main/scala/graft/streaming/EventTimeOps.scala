@@ -411,7 +411,7 @@ object EventTimeOps {
         // retracted docs into the new version and retire the
         // tombstones that guarded them with the old path
         val standing = graft.sources.Retractions(spark, cur.path,
-          spark.read.parquet(s"${cur.path}/corpus")
+          graft.Tables.readParquet(spark, s"${cur.path}/corpus")
             .where(col("__batch") =!= batchId)
             .select(col(idCol), col(vecCol)),
           idCol)
@@ -457,7 +457,7 @@ object EventTimeOps {
         // embeddingProfile's consumer below BEFORE the old path
         // dies — its lineage must never reference cur.path)
         val (prof, rel) = DriftGate.embeddingProfile(
-          spark.read.parquet(s"$newPath/corpus"), vecCol)
+          graft.Tables.readParquet(spark, s"$newPath/corpus"), vecCol)
         prof.count()
         handle.set(IvfIndex.Resident(newPath, cents, prof, rel,
           builtBy = Some(batchId)))

@@ -96,6 +96,40 @@ class AnnLayoutSpec extends SparkSpec {
       s"probe scan read $scanned rows; probed cells hold $expected of $total")
   }
 
+  test("a steady-state probe runs one job fewer than an inferring read, same rows") {
+    import graft.ann.IvfIndex
+    val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val cents = Similarity.trainCentroids(emb, "vec_id", "embedding", K)
+    val queries = emb.filter(col("vec_id") < 4).orderBy("vec_id")
+      .select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
+      .toSeq
+    val root = Files.createTempDirectory("graft-ivf-jobs").toString + "/idx"
+    IvfIndex.write(emb, "vec_id", "embedding", cents, root)
+    try {
+      val resident = IvfIndex.readCentroids(spark, root)
+      val viaFooter = () => IvfIndex.probeResident(spark, root, resident,
+        queries, "vec_id", "embedding", 2, 5)
+      // the same probe over spark.read.parquet's inferring read
+      val viaInference = () => Similarity.ivfTopKAssigned(
+        graft.sources.Retractions(spark, root,
+          spark.read.parquet(s"$root/corpus").select(col("vec_id").as("neighbor_id"),
+            col("embedding").as("nv"), col("cell")),
+          "neighbor_id"),
+        queries, resident, 2, 5)
+      def measured(probe: () => org.apache.spark.sql.DataFrame) =
+        CpuMeter.measure(spark.sparkContext)(
+          probe().orderBy("query_id", "rank").collect().map(_.toSeq).toSeq)
+      // steady state: one warm call each before measuring
+      measured(viaFooter); measured(viaInference)
+      val (a, b) = (measured(viaFooter), measured(viaInference))
+      assert(a.value == b.value && a.value.nonEmpty)
+      assert(a.jobs == b.jobs - 1, s"footer $a vs inference $b")
+      assert((a.jobsOutsideSql, b.jobsOutsideSql) == ((0L, 1L)),
+        s"footer $a vs inference $b")
+    } finally IvfIndex.delete(spark, root)
+  }
+
   test("IvfIndex.append: probe-after-append ≡ probe-after-full-rewrite") {
     import graft.ann.IvfIndex
     val sf = "/root/testdata/sf0.001"

@@ -24,6 +24,23 @@ class CpuMeterSpec extends SparkSpec {
     assert((run.jobs, run.shuffleRecords, run.bytesWritten) == ((1L, 0L, 0L)), run)
   }
 
+  test("jobs outside any SQL execution: an inferring read runs one, Tables none") {
+    // spark.read.parquet infers its schema with a job of its own,
+    // before any query starts; the footer read on the driver has none
+    val dir = java.nio.file.Files.createTempDirectory("graft-meter-loose").toString
+    spark.range(10).write.parquet(s"$dir/a.parquet")
+    spark.range(10).write.parquet(s"$dir/b.parquet")
+    val inferred = CpuMeter.measure(spark.sparkContext)(
+      spark.read.parquet(s"$dir/a.parquet"))
+    assert((inferred.jobs, inferred.jobsOutsideSql) == ((1L, 1L)), inferred)
+    val resolved = CpuMeter.measure(spark.sparkContext)(Tables(spark, dir, "b"))
+    assert(resolved.jobsOutsideSql == 0L, resolved)
+    // a query's own job carries its execution id
+    val counted = CpuMeter.measure(spark.sparkContext)(resolved.value.count())
+    assert(counted.value == 10L && counted.jobs >= 1L && counted.jobsOutsideSql == 0L,
+      counted)
+  }
+
   test("Harness.cores: unset means every available core; a bad SPARK_GRAFT_CPUS is named") {
     assert(Harness.parseCores(None) == Runtime.getRuntime.availableProcessors)
     assert(Harness.parseCores(Some("8")) == 8)

@@ -20,15 +20,19 @@ class TablesSpec extends SparkSpec {
         "listing + schema resolution per table, the catalog contract)")
 
     // in-session rewrite: without invalidation the cached plan pins
-    // the pre-rewrite file listing (stale rows at best, deleted-file
-    // read failures at worst) — the harness that rewrites must call
-    // invalidate, exactly as ScaleSmoke's synthesized tables do
-    spark.range(12).select(col("id").as("k"))
+    // the pre-rewrite file listing and schema (stale rows at best,
+    // deleted-file read failures at worst) — the harness that rewrites
+    // must call invalidate, exactly as ScaleSmoke's synthesized tables
+    // do. The rewrite adds a column: the re-read resolves its schema
+    // from the new footers.
+    spark.range(12).select(col("id").as("k"), (col("id") * 2).as("v"))
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     Tables.invalidate(dir)
     val b = Tables(spark, dir, "t")
     assert(!(b eq a), "invalidate must drop the dir's cached plans")
     assert(b.count() == 12, "the re-read must serve the rewritten files")
+    assert(b.columns.toSeq == Seq("k", "v"), "and their new schema")
+    assert(b.agg(sum("v")).head().getLong(0) == 132L)
   }
 
   test("rowCount reads the exact count from parquet footers") {
@@ -39,6 +43,76 @@ class TablesSpec extends SparkSpec {
     Seq("embeddings", "documents", "events").foreach { t =>
       assert(Tables.rowCount(spark, dir, t) == Tables(spark, dir, t).count(),
         s"footer count of $t must equal count()")
+    }
+  }
+
+  test("resolving a table launches no Spark job") {
+    // a fresh dir, so the plan cache is cold and the read resolves
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-jobs").toString
+    spark.range(20).select(col("id").as("k"), col("id").cast("string").as("s"))
+      .write.parquet(s"$dir/t.parquet")
+    val run = CpuMeter.measure(spark.sparkContext)(Tables(spark, dir, "t").schema)
+    assert((run.jobs, run.jobsOutsideSql) == ((0L, 0L)),
+      s"table resolution must read its schema on the driver: $run")
+    assert(run.value.fieldNames.toSeq == Seq("k", "s"))
+  }
+
+  test("footer schema equals Spark's inference for every driver table") {
+    // pyarrow-written single files; events carries TIMESTAMP(NANOS),
+    // so the loader's confs (set by any Tables read) must be in force
+    // for the inferring side too
+    val dir = "/root/testdata/sf0.001"
+    Tables(spark, dir, "region")
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents", "embeddings").foreach { t =>
+      val p = s"$dir/$t.parquet"
+      assert(Tables.footerSchema(spark, p) == spark.read.parquet(p).schema,
+        s"footer schema of $t must equal inference")
+    }
+  }
+
+  test("footer schema equals inference on a Spark-written multi-part dir") {
+    // Spark's footers carry its own row schema, NOT NULLs included;
+    // file-source reads make top-level fields nullable, and so must
+    // the footer read. Three parts plus the _SUCCESS marker.
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-spark").toString
+    val p = s"$dir/t.parquet"
+    spark.range(0, 30, 1, 3)
+      .select(col("id").as("k"),
+        to_timestamp_ntz(timestamp_seconds(col("id") * 3600)).as("at"),
+        when(col("id") % 2 === 0, col("id").cast("string")).as("s"))
+      .write.parquet(p)
+    assert(new java.io.File(s"$p/_SUCCESS").exists)
+    assert(new java.io.File(p).list().count(_.endsWith(".parquet")) == 3)
+    Tables(spark, dir, "t")
+    val inferred = spark.read.parquet(p).schema
+    assert(Tables.footerSchema(spark, p) == inferred)
+    assert(inferred("k").nullable && inferred("at").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType, inferred)
+    // and the loader folds the NTZ column like an inferred one
+    val t = Tables(spark, dir, "t")
+    assert(t.schema("at").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(t.count() == 30)
+  }
+
+  test("a path with no footer fails as inference does") {
+    // an emptied dir (only a _SUCCESS marker) and a missing path each
+    // raise the same error condition spark.read.parquet raises
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-empty").toString
+    spark.range(0).select(col("id"), col("id").as("p"))
+      .write.partitionBy("p").parquet(s"$dir/empty")
+    assert(new java.io.File(s"$dir/empty").list().toSeq.filterNot(_.startsWith("."))
+      == Seq("_SUCCESS"))
+    Seq(s"$dir/empty", s"$dir/missing").foreach { p =>
+      val ours = intercept[org.apache.spark.sql.AnalysisException](
+        Tables.readParquet(spark, p))
+      val spark0 = intercept[org.apache.spark.sql.AnalysisException](
+        spark.read.parquet(p))
+      assert(ours.getCondition == spark0.getCondition, s"$p: $ours vs $spark0")
+      assert(ours.getMessage == spark0.getMessage)
     }
   }
 
