@@ -43,14 +43,17 @@ object RunOne {
 
   /** One output row. Locale-pinned (Locale.ROOT): the wall/cpu columns
     * are what a triage habit greps and a comma-decimal default locale
-    * would silently break the format the spec pins. `jobs_outside_sql`
+    * would silently break the format the spec pins. `jobs` and
+    * `shuffle_records` are the load-immune counters; `jobs_outside_sql`
     * counts the rep's jobs run outside any SQL execution (schema
     * inference, listings): fixed per-call cost no query plan shows. */
-  private[graft] def line(name: String, rep: Int, wallSec: Double,
-      cpuSec: Double, rows: Long, jobsOutsideSql: Long): String =
+  private[graft] def line(name: String, rep: Int,
+      run: CpuMeter.Run[Long]): String =
     String.format(java.util.Locale.ROOT,
-      "[runone] %-28s rep%d %6.2f s  cpu %6.2f s  rows=%d  jobs_outside_sql=%d",
-      name, rep, wallSec, cpuSec, rows, jobsOutsideSql)
+      "[runone] %-28s rep%d %6.2f s  cpu %6.2f s  rows=%d  jobs=%d  " +
+        "shuffle_records=%d  jobs_outside_sql=%d",
+      name, rep, run.wallS, run.cpuS, run.value, run.jobs,
+      run.shuffleRecords, run.jobsOutsideSql)
 
   def main(args: Array[String]): Unit = {
     val (names, sfDir, reps) = parse(args) match {
@@ -65,8 +68,7 @@ object RunOne {
       (1 to reps).foreach { i =>
         val run = CpuMeter.measure(spark.sparkContext)(
           SparkEntry.queries(name)(spark, sfDir).count())
-        println(line(name, i, run.wallS, run.cpuS, run.value,
-          run.jobsOutsideSql))
+        println(line(name, i, run))
       }
     }
     spark.stop()

@@ -472,7 +472,7 @@ object ScaleSmoke {
     val batch = soup(spark.range(6).toDF("id"), "probe").unionByName(dups)
     val (batchSig, relSig) = Dedup.batchSignatures(batch, "doc_id", "text")
     try {
-      val keys = Dedup.bandRows(batchSig, "batch_id")
+      val keys = Dedup.bandRows(batchSig)
         .select("band_key").distinct().collect().map(_.getString(0)).toSeq
 
       def measure(tag: String, corpus: org.apache.spark.sql.DataFrame)
@@ -498,7 +498,7 @@ object ScaleSmoke {
           bands.filter(PointReads.keyedFilter(col("band_key"), keys)))
         val candIds = bands
           .filter(PointReads.keyedFilter(col("band_key"), keys))
-          .join(broadcast(Dedup.bandRows(batchSig, "batch_id")), "band_key")
+          .join(broadcast(Dedup.bandRows(batchSig)), "band_key")
           .select("doc_id").distinct().collect().map(_.getLong(0)).toSeq
         val textRead = if (candIds.isEmpty) 0L else Layout.scanOutputRows(
           text.filter(PointReads.keyedFilter(col("doc_id"), candIds)))

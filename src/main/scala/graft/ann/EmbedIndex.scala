@@ -467,8 +467,8 @@ object EmbedIndex {
       // that hashed to its bucket, so a re-embedded doc scores each
       // version through its own collisions — exactly the in-RAM
       // probeEmbedIndex join, whose index rows carry v the same way;
-      // identical multi-band collisions collapse in the trailing
-      // distinct like the join plan's. The threshold filter uses
+      // multi-band collisions collapse in the distinctBy below, as
+      // the join plan keeps each pair at its first shared band. The threshold filter uses
       // SPARK's double ordering ([[sqlCompareDoubles]]), NOT Java's
       // primitive >=: a NaN cosine (an Inf-normed or NaN-poisoned
       // vector) passes `cos >= t` in Spark SQL and DuckDB alike (NaN

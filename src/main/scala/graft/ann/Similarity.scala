@@ -519,8 +519,10 @@ object Similarity {
    *
    * Shape: bucket assignment is one narrow pass (bands×planes literal
    * hyperplanes, native VectorDot); candidates are per-band equi-joins
-   * on (band, bucket) — bounded fan-out — deduped before the verify
-   * join-back, so each surviving pair pays ONE cosine.
+   * on (band, bucket) — bounded fan-out — whose rows carry the vector,
+   * each pair kept once ([[embedBandJoin]]), so it pays ONE cosine
+   * with no `distinct` and no join-back. Null vectors pair with nothing
+   * (their cosine is 0, below any positive threshold).
    *
    * Band b's planes are globally indexed [b·r, (b+1)·r) in the shared
    * LCG, so band 0 with r planes IS the single-band bucketing — banded
@@ -528,21 +530,11 @@ object Similarity {
    */
   def bandedNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       bands: Int, planesPerBand: Int, dims: Int, threshold: Double): DataFrame = {
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val buckets = base.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        lshBucket(col("v"), planesPerBand, dims, b * planesPerBand)): _*))
-        .as(Seq("band", "bucket")))
-    val cand = buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
+    val b = embedBandRows(corpus, idCol, vecCol, "id", bands, planesPerBand, dims)
+    embedBandJoin(b, b, bands, planesPerBand, dims, threshold)
       .filter(col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    cand
-      .join(base.toDF("id_a", "va"), "id_a")
-      .join(base.toDF("id_b", "vb"), "id_b")
-      .withColumn("cos", cosine(col("va"), col("vb")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+        round(col("cos"), 6).as("cos"))
   }
 
   // ------------------------------------------- standing embedding index
@@ -560,9 +552,28 @@ object Similarity {
       idName: String, bands: Int, planesPerBand: Int, dims: Int): DataFrame =
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as(idName), col(vecCol).as("v"),
-        posexplode(array((0 until bands).map(b =>
-          lshBucket(col(vecCol), planesPerBand, dims, b * planesPerBand)): _*))
+        posexplode(array(bandBuckets(col(vecCol), bands, planesPerBand, dims): _*))
           .as(Seq("band", "bucket")))
+
+  /** Band b's bucket of `v`: planes [b·r, (b+1)·r) of the shared LCG. */
+  private def bandBuckets(v: Column, bands: Int, planesPerBand: Int,
+      dims: Int): Seq[Column] =
+    (0 until bands).map(b => lshBucket(v, planesPerBand, dims, b * planesPerBand))
+
+  /** The banded join of the self-join and probe faces over
+    * [[embedBandRows]] frames: x ⋈ y on (band, bucket) under
+    * [[graft.dedup.Dedup.isFirstSharedBand]] (buckets recomputed from
+    * x.v / y.v), with `cos` ≥ `threshold`. */
+  private def embedBandJoin(x: DataFrame, y: DataFrame, bands: Int,
+      planesPerBand: Int, dims: Int, threshold: Double): DataFrame = {
+    def buckets(side: String) =
+      bandBuckets(col(s"$side.v"), bands, planesPerBand, dims)
+    x.as("x").join(y.as("y"), Seq("band", "bucket"))
+      .filter(graft.dedup.Dedup.isFirstSharedBand(
+        buckets("x"), buckets("y"), col("band")))
+      .withColumn("cos", cosine(col("x.v"), col("y.v")))
+      .filter(col("cos") >= threshold)
+  }
 
   /**
    * The STANDING banded-LSH index over the corpus embeddings — the
@@ -586,9 +597,9 @@ object Similarity {
 
   /**
    * Probe a [[corpusEmbedIndex]] with one incoming batch: batch band
-   * rows equi-join the index on (band, bucket), exact cosine verifies,
-   * and the trailing distinct collapses multi-band collisions — one
-   * row per matching (batch_id, corpus_id) pair with its cosine. The
+   * rows equi-join the index on (band, bucket) and exact cosine
+   * verifies each colliding pair of rows once ([[embedBandJoin]]) —
+   * one row per matching pair with its cosine. The
    * batch side is single-use (|batch|·bands rows), so nothing needs
    * caching or releasing. OR-amplified recall across bands, exactly
    * like [[bandedNearDupPairs]]'s within-corpus candidates.
@@ -598,11 +609,8 @@ object Similarity {
       dims: Int, threshold: Double): DataFrame = {
     val b = embedBandRows(batch, idCol, vecCol, "batch_id",
       bands, planesPerBand, dims)
-    b.as("x").join(corpusIndex.as("y"), Seq("band", "bucket"))
-      .withColumn("cos", cosine(col("x.v"), col("y.v")))
-      .filter(col("cos") >= threshold)
+    embedBandJoin(b, corpusIndex, bands, planesPerBand, dims, threshold)
       .select(col("batch_id"), col("corpus_id"), round(col("cos"), 6).as("cos"))
-      .distinct()
   }
 
   /** One-shot convenience composing [[corpusEmbedIndex]] +

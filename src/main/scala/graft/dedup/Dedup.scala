@@ -12,12 +12,12 @@ import graft.text.TextAnalysis
  *
  * Scale design (100 TB corpus):
  *  - Signature computation is a narrow per-document pass — no shuffle.
- *  - LSH banding shuffles only (band_key, doc_id) pairs (bytes per
- *    doc, not the documents themselves); candidate generation is a
- *    self-join on band_key whose fan-out is bounded by bucket sizes.
- *  - Exact-Jaccard verification joins shingle sets back only for
- *    CANDIDATE pairs — the quadratic step never touches the full
- *    corpus. This is the standard MinHash→LSH→verify funnel.
+ *  - LSH banding shuffles band rows carrying the verify payload
+ *    (shingle set + signature), never the document text; candidate
+ *    generation is a self-join on band_key whose fan-out is bounded by
+ *    bucket sizes, each pair kept once ([[isFirstSharedBand]]).
+ *  - Exact-Jaccard verification runs in place on CANDIDATE pairs only
+ *    — the standard MinHash→LSH→verify funnel.
  *
  * Portability: hashes are md5 hex strings (identical in DuckDB);
  * MinHash = lexicographic MIN over md5 strings, so signatures are
@@ -176,12 +176,15 @@ object Dedup {
   def minhashSignature(text: Column, k: Int = 3): Column =
     toCol(MinHashSig(toExpr(text), k, NumHashes))
 
-  /** LSH band keys: md5 over the concatenated signature rows of each
-    * band (band index prefixed so bands never collide across index). */
+  /** LSH band key of band `b`: md5 over the band's signature rows
+    * (band index prefixed so bands never collide across index). */
+  def bandKey(sig: Column, b: Int): Column =
+    md5(concat_ws("|", lit(b.toString) +:
+      (0 until BandRows).map(r => element_at(sig, b * BandRows + r + 1)): _*))
+
+  /** Every band's [[bandKey]], in band order. */
   def bandKeys(sig: Column): Column =
-    transform(sequence(lit(0), lit(numBands - 1)), b =>
-      md5(concat_ws("|", (b.cast("string") +:
-        (0 until BandRows).map(r => element_at(sig, b * lit(BandRows) + r + 1))): _*)))
+    array((0 until numBands).map(bandKey(sig, _)): _*)
 
   /** Exact Jaccard between two distinct-element arrays (native
     * expression — one hash-set pass, see JaccardSim scaladoc). */
@@ -191,12 +194,11 @@ object Dedup {
   // ------------------------------------------------- LSH banding funnel
   /**
    * Shared signature frame for every banding funnel: one narrow pass
-   * computing (id, shingle set, MinHash signature), PERSISTED — the
-   * funnel plans read this subtree three times (band side(s) plus the
-   * verify join-backs) and Spark would otherwise recompute the digest
-   * pass for each use. At cluster scale this is a checkpoint /
-   * exchange-reuse point for the same reason. Callers own the handle:
-   * the `…Managed` funnel variants unpersist it on release.
+   * computing (id, shingle set, MinHash signature), PERSISTED — every
+   * band-join side and every composed consumer of a standing index
+   * reads this subtree, and Spark would otherwise recompute the
+   * digest pass for each use. Callers own the handle: the `…Managed`
+   * funnel variants unpersist it on release.
    */
   private[dedup] def withSignatures(docs: DataFrame, idCol: String,
       textCol: String, idName: String, shName: String = "sh"): DataFrame = docs
@@ -205,47 +207,43 @@ object Dedup {
       minhashSignature(col(textCol)).as("sig"))
     .persist()
 
-  /**
-   * Exploded (id, band_key) rows of a signature frame — with THE
-   * degenerate-doc guard: docs with < k tokens have all-null
-   * signatures; concat_ws would silently skip the nulls and give
-   * EVERY degenerate doc the same band key — one quadratic mega-bucket
-   * at corpus scale. They can't be near-dups by shingle Jaccard anyway
-   * (empty sets), so drop them before banding. Lives here exactly
-   * ONCE so no funnel variant can drift out of it.
-   */
-  private[graft] def bandRows(sigFrame: DataFrame, idName: String): DataFrame =
-    sigFrame
-      .filter(element_at(col("sig"), 1).isNotNull)
-      .select(col(idName), explode(bandKeys(col("sig"))).as("band_key"))
+  /** THE candidate rule of every banded funnel: a pair joined on band
+    * `band` is kept only if no LOWER band's keys match too, so it
+    * leaves the join once and needs no `distinct`. `a`/`b`: each
+    * side's per-band keys, recomputed from the payload riding the band
+    * rows — only below `band` (`||` short-circuits). Keys, not the rows
+    * they digest, are compared; a null key never matches. */
+  private[graft] def isFirstSharedBand(a: Seq[Column], b: Seq[Column],
+      band: Column): Column =
+    a.indices.map(j =>
+      band <= j || coalesce(a(j) =!= b(j), lit(true))).reduce(_ && _)
 
   /**
-   * THE parameterized LSH candidate generator every banding funnel
-   * ([[nearDupPairs]], [[minhashEstimatePairs]],
-   * [[incrementalNearDup]]) funnels through.
-   *
-   *  - `index = None`: self-join over the probe's band rows — ordered
-   *    (doc_a < doc_b) within-corpus pairs.
-   *  - `index = Some((frame, idName))`: cross-probe — each probe band
-   *    row looks up collisions in the standing index's band rows,
-   *    emitting (probeId, indexId).
-   *
-   * Either way the shuffle carries (band_key, id) pairs — bytes per
-   * doc, never the documents — and the trailing `distinct` collapses
-   * multi-band collisions so the verify pays each pair once.
+   * Exploded band rows of a signature frame — its columns (the verify
+   * payload) plus `band` and `band_key` ([[bandKey]]) — with THE
+   * degenerate-doc guard: docs with < k tokens have all-null
+   * signatures; concat_ws would silently skip the nulls and give EVERY
+   * degenerate doc the same band key — one quadratic mega-bucket at
+   * corpus scale. They can't be near-dups (empty shingle sets), so
+   * they drop before banding — here, ONCE, for every funnel.
    */
-  private def bandCandidates(probe: DataFrame, probeId: String,
-      index: Option[(DataFrame, String)]): DataFrame = index match {
-    case None =>
-      val bands = bandRows(probe, probeId)
-      bands.as("x").join(bands.as("y"), Seq("band_key"))
-        .filter(col(s"x.$probeId") < col(s"y.$probeId"))
-        .select(col(s"x.$probeId").as("doc_a"), col(s"y.$probeId").as("doc_b"))
-        .distinct()
-    case Some((idx, idxId)) =>
-      bandRows(probe, probeId).join(bandRows(idx, idxId), "band_key")
-        .select(col(probeId), col(idxId))
-        .distinct()
+  private[graft] def bandRows(sigFrame: DataFrame): DataFrame =
+    sigFrame
+      .filter(element_at(col("sig"), 1).isNotNull)
+      .select(col("*"), posexplode(bandKeys(col("sig"))).as(Seq("band", "band_key")))
+
+  /**
+   * THE candidate generator every MinHash funnel funnels through:
+   * two [[bandRows]] frames (the same one twice for a self-join),
+   * aliased `x`/`y` and equi-joined on the band, each colliding pair
+   * of ROWS kept once ([[isFirstSharedBand]]). Ids carry no uniqueness
+   * contract: a repeated id pairs once per copy that collides.
+   */
+  private def bandCandidates(x: DataFrame, y: DataFrame): DataFrame = {
+    def keys(side: String) = (0 until numBands).map(bandKey(col(s"$side.sig"), _))
+    // band_key implies the band; joining on both names `band` once
+    x.as("x").join(y.as("y"), Seq("band", "band_key"))
+      .filter(isFirstSharedBand(keys("x"), keys("y"), col("band")))
   }
 
   /**
@@ -253,8 +251,8 @@ object Dedup {
    * LSH banding → exact shingle-Jaccard ≥ threshold.
    * Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
    *
-   * Persists the signature frame for the session (the plan reads it
-   * three times); use [[nearDupPairsManaged]] when iterating over many
+   * Persists the signature frame for the session (both band-join
+   * sides read it); use [[nearDupPairsManaged]] when iterating over many
    * inputs in one session so the cache is released deterministically
    * instead of by LRU eviction.
    */
@@ -286,14 +284,11 @@ object Dedup {
    */
   def pairsFromSignatures(sig: DataFrame, idName: String, shName: String,
       threshold: Double): DataFrame = {
-    val cand = bandCandidates(sig, idName, None)
-    val sh = sig.select(col(idName), col(shName))
-    cand
-      .join(sh.select(col(idName).as("doc_a"), col(shName).as("sh_a")), "doc_a")
-      .join(sh.select(col(idName).as("doc_b"), col(shName).as("sh_b")), "doc_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+    val b = bandRows(sig)
+    bandCandidates(b, b).filter(col(s"x.$idName") < col(s"y.$idName"))
+      .select(col(s"x.$idName").as("doc_a"), col(s"y.$idName").as("doc_b"),
+        jaccard(col(s"x.$shName"), col(s"y.$shName")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /**
@@ -303,14 +298,10 @@ object Dedup {
    * audit that tells you whether [[NumHashes]] is enough before you
    * trust signature-only similarity at a scale where exact verify is
    * unaffordable. Candidates only (banded), so the quadratic step
-   * stays bounded exactly like [[nearDupPairs]].
+   * stays bounded exactly like [[nearDupPairs]]. Returns the
+   * signature-frame release handle (same contract as
+   * [[nearDupPairsManaged]]).
    */
-  def minhashEstimatePairs(docs: DataFrame, idCol: String,
-      textCol: String): DataFrame =
-    minhashEstimatePairsManaged(docs, idCol, textCol)._1
-
-  /** [[minhashEstimatePairs]] with the signature-frame release handle
-    * (same contract as [[nearDupPairsManaged]]). */
   def minhashEstimatePairsManaged(docs: DataFrame, idCol: String,
       textCol: String): (DataFrame, () => Unit) = {
     val withSig = withSignatures(docs, idCol, textCol, "doc_id")
@@ -323,17 +314,14 @@ object Dedup {
     * counterpart of [[pairsFromSignatures]], so one cached signature
     * frame serves the near-dup funnel AND this audit. */
   def minhashEstimateFromSignatures(sig: DataFrame): DataFrame = {
-    val cand = bandCandidates(sig, "doc_id", None)
     val matches = (1 to NumHashes).map(j =>
-      (element_at(col("sig_a"), j) === element_at(col("sig_b"), j))
+      (element_at(col("x.sig"), j) === element_at(col("y.sig"), j))
         .cast("int")).reduce(_ + _)
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
-        col("sig").as("sig_a")), "doc_a")
-      .join(sig.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-        col("sig").as("sig_b")), "doc_b")
-      .withColumn("est", round(matches.cast("double") / NumHashes, 6))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+    val b = bandRows(sig)
+    bandCandidates(b, b).filter(col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        round(matches.cast("double") / NumHashes, 6).as("est"),
+        jaccard(col("x.sh"), col("y.sh")).as("jaccard"))
       .select(col("doc_a"), col("doc_b"), col("est"), col("jaccard"),
         round(abs(col("est") - col("jaccard")), 6).as("abs_err"))
   }
@@ -380,7 +368,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val block = blockCols.map(col)
     // Shingle once; reused by the token explode and both verify
-    // join-backs (same persist rationale as nearDupPairs).
+    // join-backs (same persist rationale as withSignatures).
     val d = docs
       .select(block :+ col(idCol).as("doc_id") :+
         shingles(col(textCol), k).as("sh"): _*)
@@ -494,28 +482,6 @@ object Dedup {
       maxHamming: Int = 5, bands: Int = 6): DataFrame =
     simhashNearDupPairsWide(docs, idCol, textCol, maxHamming, bands, words = 1)
 
-  /**
-   * [[simhashNearDupPairs]] with a PARAMETERIZED fingerprint width —
-   * the past-10M-docs dial: `words` independent 60-bit fingerprint
-   * words (graft.functions.SimHashWide — word 0 ≡ simhash60, both
-   * words from the one md5 per token) give 60·words total bits at the
-   * SAME band count, so each band key carries 60·words/bands bits and
-   * expected bucket size drops from n/2^10 to n/2^20 at the defaults
-   * (words=2, bands=6) — tractable to ~10 BILLION docs before buckets
-   * outgrow the per-key join. Hamming distance spans all words
-   * (Σ bit_count(xor) per word), and the pigeonhole guarantee is
-   * unchanged: maxHamming < bands flipped bits cannot touch every
-   * band, so the banded candidates provably contain every qualifying
-   * pair and the verify keeps the result EXACT at the wider width too
-   * (equivalence-tested against the naive quadratic join).
-   *
-   * fp rides ALONG with the band rows (8·words bytes) instead of
-   * being re-joined per side: the verify needs no join-backs, and both
-   * self-join inputs are the identical subplan, so ReuseExchange runs
-   * the fingerprint scan ONCE. A pair colliding in k bands recomputes
-   * its bit_count k times before the distinct — instructions per
-   * occurrence vs two extra joins.
-   */
   /** Validated band layout of a 60·words-bit fingerprint: band j's key
     * is bits [shift, shift+bitsPerBand) of word j/bandsPerWord — THE
     * band math, shared by the self-join and probe variants. */
@@ -553,7 +519,7 @@ object Dedup {
   /** Exploded (id, fp, band, key) rows from a PRECOMPUTED
     * [[simhashFingerprints]] frame — fp rides along (8·words bytes)
     * so the verify needs no join-backs. */
-  private def simhashBandRowsFromFp(fpFrame: DataFrame, idName: String,
+  private[graft] def simhashBandRowsFromFp(fpFrame: DataFrame, idName: String,
       maxHamming: Int, bands: Int, words: Int): DataFrame =
     fpFrame.select(col(idName), col("fp"),
       posexplode(array(
@@ -567,14 +533,40 @@ object Dedup {
       simhashFingerprints(docs, idCol, textCol, idName, words),
       idName, maxHamming, bands, words)
 
-  /** Full-fingerprint Hamming distance between the two sides of a
-    * banded self-join/probe (x.fp, y.fp as word arrays). */
-  private def simhashHamming(words: Int): Column =
-    (0 until words).map(w =>
-      bit_count(element_at(col("x.fp"), w + 1)
-        .bitwiseXOR(element_at(col("y.fp"), w + 1)))).reduce(_ + _)
-      .cast("long")
+  /** The banded fingerprint join of the self-join and probe faces:
+    * x ⋈ y on (band, key) under [[isFirstSharedBand]] (keys recomputed
+    * from x.fp / y.fp), with full-fingerprint `hamming` ≤ `maxHamming`. */
+  private[graft] def simhashBandJoin(x: DataFrame, y: DataFrame,
+      maxHamming: Int, bands: Int, words: Int): DataFrame = {
+    def keys(side: String) =
+      simhashBandKeys(col(s"$side.fp"), maxHamming, bands, words)
+    x.as("x").join(y.as("y"), Seq("band", "key"))
+      .filter(isFirstSharedBand(keys("x"), keys("y"), col("band")))
+      .withColumn("hamming", (1 to words).map(w =>
+        bit_count(element_at(col("x.fp"), w)
+          .bitwiseXOR(element_at(col("y.fp"), w)))).reduce(_ + _).cast("long"))
+      .filter(col("hamming") <= maxHamming)
+  }
 
+  /**
+   * [[simhashNearDupPairs]] with a PARAMETERIZED fingerprint width —
+   * the past-10M-docs dial: `words` independent 60-bit fingerprint
+   * words (graft.functions.SimHashWide — word 0 ≡ simhash60, both
+   * words from the one md5 per token) give 60·words total bits at the
+   * SAME band count, so each band key carries 60·words/bands bits and
+   * expected bucket size drops from n/2^10 to n/2^20 at the defaults
+   * (words=2, bands=6) — tractable to ~10 BILLION docs before buckets
+   * outgrow the per-key join. Hamming distance spans all words
+   * (Σ bit_count(xor) per word), and the pigeonhole guarantee is
+   * unchanged: maxHamming < bands flipped bits cannot touch every
+   * band, so the banded candidates provably contain every qualifying
+   * pair and the verify keeps the result EXACT at the wider width too
+   * (equivalence-tested against the naive quadratic join).
+   *
+   * fp rides ALONG with the band rows (8·words bytes): the verify
+   * needs no join-backs, and a pair colliding in k bands leaves
+   * [[simhashBandJoin]] once.
+   */
   def simhashNearDupPairsWide(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, bands: Int, words: Int): DataFrame =
     simhashNearDupPairsFromFp(
@@ -589,12 +581,10 @@ object Dedup {
       maxHamming: Int, bands: Int, words: Int): DataFrame = {
     val banded = simhashBandRowsFromFp(fpFrame, "doc_id",
       maxHamming, bands, words)
-    banded.as("x").join(banded.as("y"), Seq("band", "key"))
+    simhashBandJoin(banded, banded, maxHamming, bands, words)
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        simhashHamming(words).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+        col("hamming"))
   }
 
   /**
@@ -621,9 +611,9 @@ object Dedup {
   /** The STANDING banded fingerprint index for repeated SimHash
     * probing (a stream): the persisted (corpus_id, fp, band, key)
     * rows — |corpus|·bands narrow rows, computed once per corpus
-    * snapshot. Unlike the MinHash index there are no verify join-backs
-    * (fp rides with the band rows), so the persist exists purely to
-    * amortize the fingerprint pass across probes. */
+    * snapshot. fp rides with the band rows (the verify payload, as
+    * the shingle set rides the MinHash index's), and the persist
+    * amortizes the fingerprint pass across probes. */
   def corpusSimhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       maxHamming: Int, bands: Int, words: Int): (DataFrame, () => Unit) = {
     val c = simhashBandRows(corpus, idCol, textCol, "corpus_id",
@@ -631,20 +621,17 @@ object Dedup {
     (c, () => { c.unpersist(); () })
   }
 
-  /** Probe a [[corpusSimhashIndex]] (or any band-row frame) with one
-    * batch; the batch side is single-use, so nothing needs caching or
-    * releasing. */
+  /** Probe a [[corpusSimhashIndex]] (or any band-row frame built with
+    * the same maxHamming/bands/words) with one batch: one row per
+    * colliding (batch row, index row) pair within `maxHamming`,
+    * emitted at its first shared band. The batch side is single-use,
+    * so nothing needs caching or releasing. */
   def probeSimhashIndex(batch: DataFrame, corpusIndex: DataFrame,
       idCol: String, textCol: String, maxHamming: Int, bands: Int,
-      words: Int): DataFrame = {
-    val b = simhashBandRows(batch, idCol, textCol, "batch_id",
-      maxHamming, bands, words)
-    b.as("x").join(corpusIndex.as("y"), Seq("band", "key"))
-      .select(col("batch_id"), col("corpus_id"),
-        simhashHamming(words).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
+      words: Int): DataFrame =
+    simhashBandJoin(simhashBandRows(batch, idCol, textCol, "batch_id",
+        maxHamming, bands, words), corpusIndex, maxHamming, bands, words)
+      .select(col("batch_id"), col("corpus_id"), col("hamming"))
 
   /**
    * Declarative HOF formulation of [[simhash16]] — 16 interpreted
@@ -745,8 +732,8 @@ object Dedup {
    * Scale shape: the corpus index is |corpus|·bands narrow rows you
    * persist (and bucket by band_key) ONCE — [[corpusNearDupIndex]] is
    * that build step, reusable across probes; each batch pays
-   * |batch|·bands probe rows plus a verify join-back for candidates
-   * only. Within-batch duplicates are [[nearDupPairs]] on the batch
+   * |batch|·bands probe rows, each carrying its shingle set so the
+   * verify runs in place on candidates only. Within-batch duplicates are [[nearDupPairs]] on the batch
    * alone — orthogonal, corpus-independent cost.
    */
   def incrementalNearDup(batch: DataFrame, corpus: DataFrame,
@@ -813,15 +800,11 @@ object Dedup {
     * [[corpusNearDupIndex]] — with no persist of its own (the shared-
     * index counterpart of [[pairsFromSignatures]]). */
   def probeFromSignatures(batchSig: DataFrame, corpusIndex: DataFrame,
-      threshold: Double): DataFrame = {
-    val cand = bandCandidates(batchSig, "batch_id", Some((corpusIndex, "corpus_id")))
-    cand
-      .join(batchSig.select(col("batch_id"), col("sh_batch")), "batch_id")
-      .join(corpusIndex.select(col("corpus_id"), col("sh_corpus")), "corpus_id")
-      .withColumn("jaccard", jaccard(col("sh_batch"), col("sh_corpus")))
+      threshold: Double): DataFrame =
+    bandCandidates(bandRows(batchSig), bandRows(corpusIndex))
+      .select(col("batch_id"), col("corpus_id"),
+        jaccard(col("sh_batch"), col("sh_corpus")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-  }
 
   /** [[probeFromSignatures]] against an AT-REST signature table
     * ([[SignatureIndex.open]]) instead of the session-RAM index: the
@@ -833,19 +816,19 @@ object Dedup {
     * table holds (the standing corpus the folds also land in — e.g.
     * `CuratedCorpus.open`): a missing id silently drops its candidate
     * pairs (inner join). Output and verdicts are identical to the
-    * in-RAM probe (SignatureIndexSpec pins equality). */
+    * in-RAM probe (SignatureIndexSpec pins equality); a doc_id the
+    * table stores twice (folded twice) repeats its verified row. */
   def probeAtRestSignatures(batchSig: DataFrame, atRestSigs: DataFrame,
       corpusText: DataFrame, idCol: String, textCol: String,
       threshold: Double): DataFrame = {
     val idx = atRestSigs.select(col("doc_id").as("corpus_id"), col("sig"))
-    val cand = bandCandidates(batchSig, "batch_id", Some((idx, "corpus_id")))
     // join the candidates onto the RAW text first, then shingle the
     // joined rows: shingling below the join would tokenize the whole
     // corpus per probe — the exact cost the at-rest table amortizes
     // away (and Catalyst never pushes a computed projection through
     // a join, so the order here IS the plan order)
-    cand
-      .join(batchSig.select(col("batch_id"), col("sh_batch")), "batch_id")
+    bandCandidates(bandRows(batchSig), bandRows(idx))
+      .select(col("batch_id"), col("sh_batch"), col("corpus_id"))
       .join(corpusText.select(col(idCol).as("corpus_id"),
         col(textCol).as("__text")), "corpus_id")
       .withColumn("sh_corpus", shingles(col("__text")))

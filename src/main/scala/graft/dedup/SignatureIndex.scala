@@ -26,9 +26,10 @@ import graft.sources.{PointReads, StandingStore, TableSpec}
  * }}}
  * `__batch = -1` is the corpus snapshot, each fold appends its own
  * partitions. Folds are REPLAY-IDEMPOTENT (batch-keyed dynamic
- * partition overwrite). Signatures are per-document facts —
- * duplicate rows would only waste candidate work, never change a
- * verdict (banding dedups candidates) — but compaction still folds
+ * partition overwrite). Signatures are per-document facts — a doc
+ * folded twice never changes a verdict (the scan-shaped
+ * [[Dedup.probeAtRestSignatures]] repeats its row per stored copy,
+ * [[probe]] does not) — but compaction still folds
  * SETTLED batches only ([[compactThrough]], the
  * [[graft.ann.IvfIndex.compactThrough]] discipline), so a replay
  * after compaction overwrites its own standing partition instead of
@@ -109,7 +110,7 @@ object SignatureIndex {
   /** (band_key, doc_id) rows of a (doc_id, sig, …) frame — the
     * degenerate-doc guard rides in [[Dedup.bandRows]]. */
   private def bandsOf(sigFrame: DataFrame): DataFrame =
-    Dedup.bandRows(sigFrame, "doc_id")
+    Dedup.bandRows(sigFrame)
       .select(col("band_key"), col("doc_id"))
 
   /** Fold one batch's signatures as its own partition — batch-sized
@@ -209,15 +210,14 @@ object SignatureIndex {
       idCol: String, textCol: String, threshold: Double,
       cap: Int = PointReads.MaxKeys): DataFrame = {
     val spark = batchSig.sparkSession
-    val batchBands = Dedup.bandRows(batchSig, "batch_id")
+    val batchBands = Dedup.bandRows(batchSig)
     PointReads.distinctKeys(batchBands, "band_key", cap) match {
       case None =>
         Dedup.probeAtRestSignatures(batchSig, open(spark, path),
           corpusText, idCol, textCol, threshold)
       case Some(keys) =>
         // candidates: point-read matching band pages, resolve to
-        // (batch_id, corpus_id) — batch-bounded by construction
-        // (banding dedups multi-band collisions via the distinct)
+        // distinct (batch_id, corpus_id) — batch-bounded by construction
         val cand = openBands(spark, path)
           .filter(PointReads.keyedFilter(col("band_key"), keys))
           .join(broadcast(batchBands), "band_key")

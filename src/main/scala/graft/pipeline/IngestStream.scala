@@ -719,13 +719,14 @@ object IngestStream {
     * guessed (a reason of "404" must not come back as an int). A
     * missing or fully-drained quarantine reads back as the EMPTY
     * zero-column frame (there is no schema to synthesize without
-    * data) — check `isEmpty` before selecting columns. */
+    * data) — check `isEmpty` before selecting columns. The schema
+    * comes from one footer ([[graft.Tables.readParquet]]): no job. */
   def openQuarantine(spark: org.apache.spark.sql.SparkSession,
       quarantineDir: String, idCol: String): DataFrame =
     if (quarantineBatchIds(spark, quarantineDir).isEmpty)
       spark.emptyDataFrame
     else {
-      val all = spark.read.parquet(quarantineDir)
+      val all = graft.Tables.readParquet(spark, quarantineDir)
         .withColumn("__batch_id", col("__batch_id").cast("long"))
         .withColumn("__reason", col("__reason").cast("string"))
       val w = org.apache.spark.sql.expressions.Window

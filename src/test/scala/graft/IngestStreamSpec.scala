@@ -105,6 +105,11 @@ class IngestStreamSpec extends SparkSpec {
       lww.head.getAs[Long]("__batch_id") == again.batchId &&
       lww.head.getAs[String]("__reason") == "dq:again",
       s"triage must LWW to the latest stamp: ${lww.toSeq}")
+    // the triage read takes its schema from one footer: opening it
+    // launches no Spark job (schema inference ran one per call)
+    val open = CpuMeter.measure(spark.sparkContext)(
+      IngestStream.openQuarantine(spark, qDir, "doc_id"))
+    assert(open.jobs == 0L && open.jobsOutsideSql == 0L, s"$open")
     // retention: triage completed through the first batch prunes its
     // whole partition (both reasons, listing-only), leaves the later
     assert(IngestStream.pruneQuarantine(spark, qDir, bad.batchId) ==

@@ -571,8 +571,7 @@ class PlanQualitySpec extends SparkSpec {
     }
     assert(inMem.nonEmpty, "probe must hit the persisted standing index")
     // the verify is an equi-join on (band, bucket) — broadcast or SMJ,
-    // never a nested loop (global guard) — and the trailing distinct
-    // is the only aggregate
+    // never a nested loop (global guard)
     assert(collectAll(p) {
       case j: BroadcastHashJoinExec => j
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
@@ -650,6 +649,56 @@ class PlanQualitySpec extends SparkSpec {
     assert(!readCols.contains("lang") && !readCols.contains("source") &&
       !readCols.contains("n_chars"),
       s"documents scan reads unprojected columns: $readCols")
+  }
+
+  test("LSH funnels: no candidate aggregate, no id join-back after the band join; jobs pinned") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.dedup.{Dedup, DedupQueries}
+    // the plan AND every cached relation it reads: q_dedup_lsh_pairs
+    // serves a persisted funnel output, the funnels a persisted
+    // signature frame
+    def deep(p: SparkPlan): Seq[SparkPlan] = {
+      val here = collectAll(p) { case n => n }
+      here ++ here.collect { case m: InMemoryTableScanExec =>
+        m.relation.cachedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case c => c
+        }
+      }.flatMap(deep)
+    }
+    for (q <- Seq("q_dedup_minhash_est", "q_dedup_lsh_pairs")) {
+      val nodes = deep(plan(SparkEntry.queries(q)(spark, Sf)))
+      // each candidate pair leaves the band join once: no distinct
+      assert(nodes.collect { case a: BaseAggregateExec => a }.isEmpty,
+        s"$q plans an aggregate")
+      // the verify payload rides the band rows: the band join is the
+      // only join, keyed on the band alone
+      val joins = nodes.collect { case j: BaseJoinExec => j }
+      val keys = joins.map(j => (j.leftKeys ++ j.rightKeys)
+        .flatMap(_.references.map(_.name)).toSet)
+      assert(joins.size == 1 && keys == Seq(Set("band", "band_key")),
+        s"$q joins on $keys")
+    }
+    // Spark jobs per call (every AQE exchange is its own job): the
+    // calibration query warm, and the near-dup funnel over a
+    // materialized signature frame — the band join's one broadcast
+    // plus the count's own two
+    def jobs(df: => org.apache.spark.sql.DataFrame): Long =
+      CpuMeter.measure(spark.sparkContext)(df.count()).jobs
+    val est = SparkEntry.queries("q_dedup_minhash_est")
+    est(spark, Sf).count()
+    assert(jobs(est(spark, Sf)) == 3)
+    val docs = Tables(spark, Sf, "documents")
+    val sig = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"),
+      Dedup.minhashSignature(col("text")).as("sig")).persist()
+    try {
+      sig.count()
+      assert(jobs(Dedup.pairsFromSignatures(sig, "doc_id", "sh",
+        DedupQueries.LshPairsThreshold)) == 3)
+    } finally sig.unpersist()
   }
 
   test("q_dedup_embed_atrest_point: a micro-batch probe plans a LOCAL relation — no distributed join") {

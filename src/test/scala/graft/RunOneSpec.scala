@@ -59,13 +59,15 @@ class RunOneSpec extends AnyFunSuite {
   test("output row format is pinned and locale-proof") {
     // the triage habit greps these columns — pin the shape once so a
     // refactor can't silently change what the habit parses
-    assert(RunOne.line("q_cdc_lww", 2, 1.2345, 0.678, 42L, 1L) ==
-      "[runone] q_cdc_lww                    rep2   1.23 s  cpu   0.68 s  rows=42  jobs_outside_sql=1")
+    assert(RunOne.line("q_cdc_lww", 2,
+      CpuMeter.Run(42L, 1.2345, 0.678, 5L, 120L, 0L, 1L)) ==
+      "[runone] q_cdc_lww                    rep2   1.23 s  cpu   0.68 s  " +
+        "rows=42  jobs=5  shuffle_records=120  jobs_outside_sql=1")
     // and a comma-decimal default locale must not leak into the row
     val prev = java.util.Locale.getDefault
     java.util.Locale.setDefault(java.util.Locale.FRANCE)
     try {
-      val l = RunOne.line("q_x", 1, 0.5, 0.25, 1L, 0L)
+      val l = RunOne.line("q_x", 1, CpuMeter.Run(1L, 0.5, 0.25, 0L, 0L, 0L, 0L))
       assert(!l.contains(","), s"comma-decimal leaked: $l")
       assert(l.contains("0.50 s"), l)
     } finally java.util.Locale.setDefault(prev)

@@ -166,7 +166,7 @@ class SignatureIndexSpec extends SparkSpec {
       // the sorted layout) where a full scan emits all of them
       val bands = SignatureIndex.openBands(spark, path)
       val total = Layout.scanOutputRows(bands.filter(col("doc_id") >= 0))
-      val keys = Dedup.bandRows(batchSig, "batch_id")
+      val keys = Dedup.bandRows(batchSig)
         .select("band_key").distinct().collect().map(_.getString(0)).toSeq
       val pruned = Layout.scanOutputRows(
         bands.filter(PointReads.keyedFilter(col("band_key"), keys)))
