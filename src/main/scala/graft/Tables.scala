@@ -2,12 +2,14 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loader for the driver test data (TESTDATA.md). */
@@ -46,9 +48,9 @@ object Tables {
     * DATA is re-read by every job, only the driver-side listing + ONE
     * footer schema read ([[footerSchema]]: the first summary file,
     * else the first data part) + normalization fold is amortized —
-    * no Spark job, ~20-35 ms per table in a warm JVM on 4 vCPUs (the
-    * job-launching `spark.read.parquet` inference it replaces took
-    * ~80-110 ms there).
+    * no Spark job and no thread pool, a median ~7 ms per sf0.001
+    * driver table in a warm JVM on 4 vCPUs (~74 ms for all ten), where
+    * the job-launching `spark.read.parquet` inference takes ~80 ms.
     * Sound here because the driver test tables are immutable files;
     * mutable standing structures go through [[graft.sources
     * .StandingStore]], which lists per open by design. */
@@ -151,15 +153,33 @@ object Tables {
     footers(spark, s"$sfDir/$name.parquet")(_.parts)
       .map(_.getParquetMetadata.getBlocks.asScala.map(_.getRowCount).sum).sum
 
-  /** Read a parquet path with its schema resolved on the DRIVER from
-    * one footer — no Spark job. `spark.read.parquet` infers the same
-    * schema through `mergeSchemasInParallel`, which launches a job per
-    * read even for a one-file table: the fixed per-call cost a
-    * catalog that already knows the schema never pays. Partition
-    * columns (`k=v` directories) stay path-inferred by the file index,
-    * as they are under inference. */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  /** Read a parquet path as `spark.read.schema(s).parquet(path)` does,
+    * where `s` is the given `schema` (a standing structure's known
+    * DDL) or else is resolved on the DRIVER from one footer
+    * ([[footerSchema]]) — no Spark job. `spark.read.parquet` infers the
+    * same schema through `mergeSchemasInParallel`, which launches a job
+    * per read even for a one-file table: the fixed per-call cost a
+    * catalog that already knows the schema never pays. The relation
+    * also skips Spark's own existence check, which starts a fresh
+    * thread pool on every read to stat one path
+    * ([[GraftShims.parquetRelation]]). This read has already stat'ed
+    * the path on the driver thread (the footer listing, or one
+    * `getFileStatus` when the schema is given), and that stat raises
+    * the `PATH_NOT_FOUND` the check would, with the same message.
+    * Partition columns (`k=v` directories) stay path-inferred by the
+    * file index, as they are under inference, or take the given
+    * schema's types. */
+  private[graft] def readParquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val resolved = schema match {
+      case Some(known) =>
+        val root = new Path(path)
+        status(root.getFileSystem(spark.sessionState.newHadoopConf()), root)
+        known
+      case None => footerSchema(spark, path)
+    }
+    GraftShims.parquetRelation(spark, path, resolved)
+  }
 
   /** The schema Spark's non-merging parquet inference would resolve
     * for `path`, read from the footer it would pick: the first summary
@@ -206,20 +226,30 @@ object Tables {
         else if (SummaryNames.contains(n) || (!hidden(n) && n.endsWith(".parquet"))) Seq(c)
         else Nil
       }
-    val top = try fs.getFileStatus(root) catch {
-      case _: java.io.FileNotFoundException => throw new AnalysisException(
-        "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))
-    }
+    val top = status(fs, root)
     val files = if (top.isDirectory) walk(top.getPath) else Seq(top)
     val (summaries, parts) = files.sortBy(_.getPath.toString)
       .partition(f => SummaryNames.contains(f.getPath.getName))
     val listing = Listing(
       summaries.sortBy(f => SummaryNames.indexOf(f.getPath.getName)), parts)
+    // read options over the session's conf: without them parquet builds
+    // them over a fresh `Configuration`, which re-parses Hadoop's default
+    // XML resources on every open and misses the session's settings
+    // (an encrypted footer's crypto factory among them)
     pick(listing).map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath).build())
       try new Footer(st.getPath, r.getFooter) finally r.close()
     }
   }
+
+  /** `root`'s status, or the `PATH_NOT_FOUND` `spark.read` raises for a
+    * missing path. */
+  private def status(fs: FileSystem, root: Path): FileStatus =
+    try fs.getFileStatus(root) catch {
+      case _: java.io.FileNotFoundException => throw new AnalysisException(
+        "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(root).toString))
+    }
 
   private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // nanosAsLong is a READ-path necessity (Spark 4 refuses

@@ -495,7 +495,8 @@ object IvfIndex {
     * per-query-batch cost is the pruned cell scan + rerank, plus
     * driver-side metadata only — the corpus listing and ONE footer
     * read for its schema ([[graft.Tables.readParquet]]), no Spark job
-    * outside the probe's own query. */
+    * outside the probe's own query and no thread started to resolve
+    * the corpus relation. */
   def probeResident(spark: SparkSession, path: String,
       centroids: Seq[Array[Double]], queries: Seq[(Long, Array[Double])],
       idCol: String, vecCol: String, nprobe: Int, k: Int): DataFrame = {

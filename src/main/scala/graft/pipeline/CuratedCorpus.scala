@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.dedup.Dedup
 
@@ -159,8 +160,8 @@ object CuratedCorpus {
   private[graft] def freshRows(path: String, batchDocs: DataFrame,
       batchId: Long, excludeHashes: Option[DataFrame] = None): DataFrame = {
     val spark = batchDocs.sparkSession
-    val standing0 = spark.read.schema("h STRING, __batch LONG")
-      .parquet(s"$path/hashes")
+    val standing0 = graft.Tables
+      .readParquet(spark, s"$path/hashes", Some(StructType.fromDDL("h STRING, __batch LONG")))
       .where(col("__batch") =!= batchId) // replay: never probe own landing
       .select("h")
     val standing = excludeHashes.fold(standing0)(ex =>

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * ROOT-LEVEL retraction (tombstone) mechanics — ONE implementation of
@@ -136,7 +137,8 @@ object Retractions {
     * partitions. Empty-safe only when a partition stands; guard with
     * [[batchIds]]. */
   def open(spark: SparkSession, root: String): DataFrame =
-    spark.read.schema("id LONG, __batch LONG").parquet(dirOf(root))
+    graft.Tables
+      .readParquet(spark, dirOf(root), Some(StructType.fromDDL("id LONG, __batch LONG")))
       .select("id").distinct()
 
   /** Anti-join `df` against a tombstone id frame on `idCol`. */

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Spec of one sub-table under a standing-structure root.
@@ -228,7 +229,8 @@ final class StandingStore(val root: String, val tables: Seq[TableSpec]) {
 
   /** Raw schema'd read of `table` including `__batch`. */
   def openRaw(spark: SparkSession, table: String): DataFrame =
-    spark.read.schema(spec(table).schema).parquet(dir(table))
+    graft.Tables
+      .readParquet(spark, dir(table), Some(StructType.fromDDL(spec(table).schema)))
 
   /** The composed rows of `table` across the base and every fold,
     * with standing retractions applied when the table opted in

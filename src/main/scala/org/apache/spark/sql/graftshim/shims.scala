@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -41,6 +42,19 @@ object GraftShims {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** The relation `spark.read.schema(schema).parquet(path)` resolves
+    * (the same `DataSource`, options and file index, so the plans are
+    * equal), minus its existence check: `checkFilesExist` starts a
+    * fresh thread pool per read to stat one path. For a caller that has
+    * already stat'ed `path` on the driver and raises `PATH_NOT_FOUND`
+    * itself ([[graft.Tables.readParquet]]). */
+  def parquetRelation(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.baseRelationToDataFrame(DataSource(classic, className = "parquet",
+      userSpecifiedSchema = Some(schema), options = Map("path" -> path))
+      .resolveRelation(checkFilesExist = false, readOnly = true))
   }
 
   /** Drain the listener bus (`private[spark]`): a harness snapshotting

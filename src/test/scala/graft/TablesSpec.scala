@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The resolved-plan cache behind [[Tables]]: memoization, explicit
   * invalidation for in-session rewrites (the ScaleSmoke pattern), and
@@ -116,6 +117,74 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("a known-schema open of a missing path fails as spark.read does") {
+    // a standing structure's open passes its DDL: the one getFileStatus
+    // on the driver must raise spark.read's PATH_NOT_FOUND, message and
+    // all; an existing dir resolves to the relation spark.read builds
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-known").toString
+    val schema = StructType.fromDDL("id LONG, __batch LONG")
+    val missing = s"$dir/missing"
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.readParquet(spark, missing, Some(schema)))
+    val spark0 = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.schema(schema).parquet(missing))
+    assert(ours.getCondition == "PATH_NOT_FOUND")
+    assert(ours.getCondition == spark0.getCondition, s"$ours vs $spark0")
+    assert(ours.getMessage == spark0.getMessage)
+
+    val p = s"$dir/t"
+    spark.range(6).withColumn("__batch", col("id") % 2).write
+      .partitionBy("__batch").parquet(p)
+    val read = Tables.readParquet(spark, p, Some(schema))
+    assert(read.queryExecution.analyzed.sameResult(
+      spark.read.schema(schema).parquet(p).queryExecution.analyzed))
+    assert(read.schema == schema && read.where(col("__batch") === 1).count() == 3)
+  }
+
+  test("the footer read runs under the session's Hadoop conf (encrypted footer)") {
+    // the crypto factory lives in the session conf, as it must for
+    // spark.read to decrypt; a footer opened under any other conf has
+    // no keys for an encrypted footer
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-crypto").toString
+    val p = s"$dir/t.parquet"
+    val session = Map(
+      "parquet.crypto.factory.class" ->
+        "org.apache.parquet.crypto.keytools.PropertiesDrivenCryptoFactory",
+      "parquet.encryption.kms.client.class" -> classOf[Base64Kms].getName)
+    session.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      spark.range(10).select(col("id").as("k"), col("id").cast("string").as("s"))
+        .write.option("parquet.encryption.uniform.key", "k0").parquet(p)
+      val inferred = spark.read.parquet(p).schema
+      assert(Tables.footerSchema(spark, p) == inferred)
+      assert(Tables.readParquet(spark, p).count() == 10)
+      assert(Tables.rowCount(spark, dir, "t") == 10)
+    } finally session.keys.foreach(spark.conf.unset)
+    // and the footer really is encrypted: without the factory, no read
+    intercept[org.apache.spark.SparkException](spark.read.parquet(p).schema)
+  }
+
+  test("resolving tables starts no thread per open") {
+    // load-immune pin for Spark's existence check, which starts a
+    // fresh thread pool on every read: count JVM thread starts over
+    // fresh resolutions, by footer and by known schema
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-tables-threads").toString
+    val n = 10
+    (0 until n).foreach(i => spark.range(3).write.parquet(s"$dir/t$i.parquet"))
+    val schema = StructType.fromDDL("id LONG")
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    val before = threads.getTotalStartedThreadCount
+    (0 until n).foreach { i =>
+      Tables(spark, dir, s"t$i")
+      Tables.readParquet(spark, s"$dir/t$i.parquet", Some(schema))
+    }
+    val started = threads.getTotalStartedThreadCount - before
+    assert(started < 2 * n, s"$started thread starts over ${2 * n} resolutions")
+  }
+
   test("invalidate reaches registered family caches and unpersists their frames") {
     // the family objects memoize persisted frames DERIVED from a
     // dir's files (signatures, fingerprints, normalized wire);
@@ -144,4 +213,15 @@ class TablesSpec extends SparkSpec {
       // (holding the map) outlive the test in the global registry
       Tables.deregisterSessionCache(m)
   }
+}
+
+/** A toy KMS for the encrypted-footer case: a key "wraps" to its
+  * base64 text, so any reader with this client unwraps it. */
+class Base64Kms extends org.apache.parquet.crypto.keytools.KmsClient {
+  def initialize(conf: org.apache.hadoop.conf.Configuration, id: String,
+      url: String, token: String): Unit = ()
+  def wrapKey(key: Array[Byte], master: String): String =
+    java.util.Base64.getEncoder.encodeToString(key)
+  def unwrapKey(wrapped: String, master: String): Array[Byte] =
+    java.util.Base64.getDecoder.decode(wrapped)
 }
