@@ -371,18 +371,20 @@ object AnalyticsQueries {
     // non-stopword tokens — rank-equivalent to tf-idf for a fixed doc
     // (idf is monotone-decreasing in df) but integer-only, so the
     // ranking is exactly portable with no transcendental rounding.
-    // Scale shape: tf aggregates on (doc_id, token) with map-side
-    // combine; df is a COUNT WINDOW over the tf table partitioned by
-    // token (vocabulary-sized) — the tf-join-dfreq formulation
-    // re-derives the tf subtree per reference and scans the corpus
-    // twice; the per-doc rank runs partial+final WindowGroupLimit so
-    // the final shuffle carries O(docs·k) rows.
+    // Scale shape: a document's term counts are formed inside its row
+    // (TextAnalysis.termCounts, one native pass), so only (doc, token,
+    // tf) pairs move — once, hashed by token. That one exchange serves
+    // the exact (doc_id, token) merge (a repeated doc_id still sums)
+    // and the df COUNT WINDOW, which is vocabulary-partitioned; the
+    // per-doc rank runs partial+final WindowGroupLimit over the second
+    // and last exchange, so it carries O(docs·k) rows.
     "q_text_keywords" -> ((s, dir) => {
-      val toks = Tables(s, dir, "documents")
+      val tf = Tables(s, dir, "documents")
         .select(col("doc_id"),
-          explode(TextAnalysis.tokens(col("text"))).as("token"))
-        .filter(!col("token").isin(TextAnalysis.Stopwords: _*))
-      val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
+          explode(TextAnalysis.termCounts(col("text"))).as("t"))
+        .select(col("doc_id"), col("t.token").as("token"), col("t.tf").as("n"))
+        .repartition(col("token"))
+        .groupBy("doc_id", "token").agg(sum("n").as("tf"))
       val byDoc = Window.partitionBy("doc_id")
         .orderBy(col("tf").desc, col("df").asc, col("token"))
       tf.withColumn("df", count(lit(1)).over(Window.partitionBy("token")))

@@ -300,9 +300,9 @@ object Similarity {
    * Centroids here are caller-provided (the oracle query samples the
    * first K corpus vectors — deterministic and honest about being a
    * baseline; [[trainCentroids]] is the k-means seam). Query probes
-   * are computed DRIVER-side (bit-identical fold), since the query set
-   * is small by contract while the corpus-side assignment must stay
-   * narrow.
+   * are computed DRIVER-side (bit-identical fold) and ride the plan as
+   * a literal ([[ivfProbe]]), since the query set is small by contract
+   * while the corpus-side assignment must stay narrow.
    *
    * Assignment score is `dot(v, cᵢ) / |cᵢ|` — argmax-equivalent to
    * cosine (|v| is a positive per-row constant that cannot flip the
@@ -478,30 +478,41 @@ object Similarity {
       centroids: Seq[Array[Double]], nprobe: Int, k: Int): DataFrame =
     ivfProbe(assigned, queries, centroids, nprobe, k, pruneCells = true)
 
+  /** The probe shared by [[ivfTopK]] and [[ivfTopKAssigned]]. The
+    * probe set is known on the driver, so it rides the plan as a
+    * literal `cell → [(query_id, qv)]` map: each corpus row looks up
+    * its own cell and explodes that cell's probes (a cell no query
+    * probes looks up null and yields no rows). No broadcast exchange
+    * and no join — the scored rows come straight off the narrow
+    * assignment pass. The literal holds |queries|·nprobe vectors, the
+    * same order as the K·dims centroid literal [[bestCentroid]]
+    * already ships with the plan; a query set too large for that
+    * belongs in [[bruteForceTopK]]'s broadcast shape. */
   private def ivfProbe(assigned: DataFrame, queries: Seq[(Long, Array[Double])],
       centroids: Seq[Array[Double]], nprobe: Int, k: Int,
       pruneCells: Boolean): DataFrame = {
     require(centroids.nonEmpty, "ivfTopK needs at least one centroid")
-    val spark = assigned.sparkSession
-    import spark.implicits._
     val norms = centroids.map(c => math.sqrt(dotLocal(c, c)))
-    val probeRows = queries.flatMap { case (qid, qv) =>
-      val cs = centroids.zip(norms).map { case (c, n) =>
-        if (n > 0) dotLocal(qv, c) / n else 0.0 }
-      val order = cs.indices.sortBy(i => (-cs(i), i))
-      order.take(nprobe).map(cid => (qid, qv.toSeq, cid))
-    }
+    val byCell: Map[Int, Seq[(Long, Seq[Double])]] = queries
+      .flatMap { case (qid, qv) =>
+        val cs = centroids.zip(norms).map { case (c, n) =>
+          if (n > 0) dotLocal(qv, c) / n else 0.0 }
+        val order = cs.indices.sortBy(i => (-cs(i), i))
+        order.take(nprobe).map(cid => (cid, (qid, qv.toSeq)))
+      }
+      .groupBy(_._1).map { case (cid, ps) => cid -> ps.map(_._2) }
     // static partition pruning: the probed cell set is known on the
     // driver, so non-probed cell PARTITIONS of the at-rest layout
     // never even reach the scan
     val base =
-      if (pruneCells)
-        assigned.filter(col("cell").isInCollection(probeRows.map(_._3).distinct))
+      if (pruneCells) assigned.filter(col("cell").isInCollection(byCell.keys.toSeq.sorted))
       else assigned
-    val probes = broadcast(probeRows.toDF("query_id", "qv", "probe"))
-    val scored = probes
-      .join(base, col("probe") === col("cell") &&
-        col("query_id") =!= col("neighbor_id"))
+    val scored = base
+      .select(col("neighbor_id"), col("nv"),
+        explode(typedLit(byCell).apply(col("cell"))).as("p"))
+      .select(col("p._1").as("query_id"), col("p._2").as("qv"),
+        col("neighbor_id"), col("nv"))
+      .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", cosine(col("qv"), col("nv")))
     rankTopK(scored, k)
   }

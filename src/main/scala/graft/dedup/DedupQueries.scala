@@ -414,17 +414,19 @@ object DedupQueries {
     // dial), selected by a deterministic salted content hash so the
     // sample is reproducible and join-free to audit. Kept rows carry
     // the importance weight 1/rate for unbiased downstream statistics.
-    // Scale shape: the rates table broadcasts, the hash filter is a
-    // narrow scan-speed pass — no shuffle at any corpus size.
+    // Scale shape: the rates table rides the plan as a literal map
+    // (a language with no rate looks up null and drops, as the inner
+    // join did), so the hash filter is one narrow scan-speed pass —
+    // no join, no broadcast job, no shuffle at any corpus size.
     "q_sample_stratified" -> ((s, dir) => {
       import graft.text.TextAnalysis
-      val rates = broadcast(s.createDataFrame(StratifiedRates).toDF("lang", "rate"))
       val bucket =
         TextAnalysis.charPolyHash(concat(col("text"), lit("|strat"))) % 10000
       Tables(s, dir, "documents")
-        .join(rates, Seq("lang"))
-        .select(col("doc_id"), col("lang"), bucket.as("bucket"), col("rate"))
-        .where(col("bucket") < (col("rate") * 10000).cast("long"))
+        .select(col("doc_id"), col("lang"), bucket.as("bucket"),
+          typedLit(StratifiedRates.toMap).apply(col("lang")).as("rate"))
+        .where(col("rate").isNotNull &&
+          col("bucket") < (col("rate") * 10000).cast("long"))
         .select(col("doc_id"), col("lang"), col("bucket"),
           round(lit(1.0) / col("rate"), 6).as("weight"))
         .orderBy("doc_id")

@@ -377,6 +377,40 @@ object TextNative {
   }
 
   /**
+   * Term counts of one document: whitespace tokens of `lowered` (empty
+   * tokens dropped, as `TextAnalysis.tokens` splits) minus `stops`,
+   * one `(token, tf)` struct per distinct token in first-occurrence
+   * order. One pass with one hash map, O(tokens): the declarative
+   * explode → groupBy(doc, token) count shuffles every token
+   * occurrence to count what already sits inside one row. The caller
+   * lower-cases (Spark's `lower`), so the tokens are exactly the
+   * declarative tokenizer's.
+   */
+  def termCounts(lowered: UTF8String, stops: java.util.Set[String]): ArrayData = {
+    val toks = lowered.toString.split("\\s+")
+    val counts = new java.util.LinkedHashMap[String, Array[Int]](toks.length * 2)
+    var i = 0
+    while (i < toks.length) {
+      val t = toks(i)
+      if (t.nonEmpty && !stops.contains(t)) {
+        val c = counts.get(t)
+        if (c == null) counts.put(t, Array(1)) else c(0) += 1
+      }
+      i += 1
+    }
+    val out = new Array[Any](counts.size)
+    var j = 0
+    val it = counts.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      out(j) = new GenericInternalRow(
+        Array[Any](UTF8String.fromString(e.getKey), e.getValue()(0)))
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /**
    * MinHash signature: md5 per shingle, component j = lexicographic
    * min over the j-th 4-hex-char slice. Null components when the
    * shingle set is empty (matches array_min of an empty array).
@@ -553,6 +587,31 @@ object RepetitionCounts {
     StructField("n_bigrams", IntegerType, nullable = false),
     StructField("top_trigram", IntegerType, nullable = false),
     StructField("n_trigrams", IntegerType, nullable = false)))
+}
+
+/** `term_counts(lower(text))` → array<struct<token, tf>>: a document's
+  * non-stopword term counts in one native pass (see
+  * TextNative.termCounts). */
+case class TermCounts(child: Expression, stopwords: Seq[String])
+    extends UnaryExpression {
+  @transient private lazy val stops: java.util.Set[String] =
+    new java.util.HashSet[String](java.util.Arrays.asList(stopwords: _*))
+  override def dataType: DataType = ArrayType(TermCounts.entry, containsNull = false)
+  override def prettyName: String = "term_counts"
+  override def nullSafeEval(input: Any): Any =
+    TextNative.termCounts(input.asInstanceOf[UTF8String], stops)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val s = ctx.addReferenceObj("stops", stops, "java.util.Set")
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextNative.termCounts($c, $s)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): TermCounts =
+    copy(child = newChild)
+}
+
+object TermCounts {
+  val entry: StructType = StructType(Seq(
+    StructField("token", StringType, nullable = false),
+    StructField("tf", IntegerType, nullable = false)))
 }
 
 /** `minhash_sig(text)` → array<string> MinHash signature (see TextNative). */

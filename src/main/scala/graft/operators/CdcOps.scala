@@ -134,14 +134,17 @@ object CdcOps {
    * reference applies events in Kafka offset order within a partition;
    * a distributed apply must instead keep only the LATEST event per
    * (table, key) within a micro-batch — same terminal state,
-   * order-insensitive. One shuffle on (table, key).
+   * order-insensitive. One shuffle on (table, key), or none when the
+   * input is already hash-partitioned by them, as the batch CDC
+   * queries' keyed feed is (SparkEntry.keyedValid).
    *
    * Skew note (verified via explain): Spark plans the rank<=1 filter
    * as WindowGroupLimit with a PARTIAL pass before the exchange, so a
    * hot key collapses to one row per map partition BEFORE it
    * shuffles — the classic "millions of updates to one key in a
    * batch" skew case never concentrates on a single reducer. No
-   * manual salting needed.
+   * manual salting needed. Over clustered input there is no exchange,
+   * and Spark plans only the final limit.
    *
    * Tie caveat: offsets must be unique per (table, key) within the
    * batch (true for a single Kafka partition per key, which the

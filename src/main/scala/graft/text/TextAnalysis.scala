@@ -55,6 +55,17 @@ object TextAnalysis {
     toCol(graft.functions.CjkTokens(toExpr(text)))
   }
 
+  /** A document's non-[[Stopwords]] term counts as
+    * array<struct<token, tf>>, distinct tokens in first-occurrence
+    * order: the multiset of [[tokens]] minus stopwords, counted in one
+    * native pass inside the row ([[graft.functions.TermCounts]]). The
+    * text is lower-cased here by `lower`, as [[tokens]] does, so both
+    * see the same tokens. */
+  def termCounts(text: Column): Column = {
+    import org.apache.spark.sql.graftshim.GraftShims.{column => toCol, expression => toExpr}
+    toCol(graft.functions.TermCounts(toExpr(lower(text)), Stopwords))
+  }
+
   def tokenCount(text: Column): Column = size(tokens(text))
 
   // ---------------------------------------------------------------- quality

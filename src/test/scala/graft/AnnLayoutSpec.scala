@@ -96,6 +96,29 @@ class AnnLayoutSpec extends SparkSpec {
       s"probe scan read $scanned rows; probed cells hold $expected of $total")
   }
 
+  test("an empty query set probes an empty literal map: no rows, no join, no error") {
+    val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val cents = emb.orderBy("vec_id").limit(K).select("embedding").collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
+    val none = Seq.empty[(Long, Array[Double])]
+    val assigned = Similarity.assignWithVectors(emb, "vec_id", "embedding", cents)
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"), col("cell"))
+    for (df <- Seq(
+        Similarity.ivfTopK(emb, none, "vec_id", "embedding", cents, 2, 5),
+        Similarity.ivfTopKAssigned(assigned, none, cents, 2, 5))) {
+      assert(df.collect().isEmpty)
+      assert(df.queryExecution.executedPlan.collectWithSubqueries {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, df.queryExecution.executedPlan.toString)
+    }
+    // a cell that no query probes looks up null and yields no rows:
+    // one query probing a single cell scores only that cell's members
+    val q = Seq((-1L, cents.head))
+    val cell0 = assigned.filter(col("cell") === 0).count()
+    assert(Similarity.ivfTopK(emb, q, "vec_id", "embedding", cents, 1, 1000000)
+      .count() == cell0 && cell0 > 0)
+  }
+
   test("a steady-state probe runs one job fewer than an inferring read, same rows") {
     import graft.ann.IvfIndex
     val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
