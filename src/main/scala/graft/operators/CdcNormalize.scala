@@ -17,39 +17,42 @@ import graft.model.{Cdc, CdcConfig}
  */
 object CdcNormalize {
 
+  /** Built in three projections, one per dependency level (one
+    * analyzer pass per level, not one per column): the headers, then
+    * the ISO time, decoded JSON, op and target table, then
+    * `corrupt_reason`. The JSON decodes sit with the second level, as
+    * they did when each column was its own projection, so the
+    * optimized plan is unchanged, and the columns come out in step
+    * order. */
   def apply(wire: DataFrame, cfg: CdcConfig = CdcConfig()): DataFrame = {
     import Cdc.Cols
-    val withHeaders = wire
-      .withColumn(Cols.TableName,
-        CdcOps.headerString(col("headers"), cfg.tableHeader))
-      .withColumn(Cols.EntryType,
-        CdcOps.headerString(col("headers"), cfg.entryTypeHeader))
-      .withColumn(Cols.SourceTs,
-        CdcOps.headerString(col("headers"), Cdc.Headers.Timestamp))
+    val headers = wire.select(col("*"),
+      CdcOps.headerString(col("headers"), cfg.tableHeader).as(Cols.TableName),
+      CdcOps.headerString(col("headers"), cfg.entryTypeHeader).as(Cols.EntryType),
+      CdcOps.headerString(col("headers"), Cdc.Headers.Timestamp).as(Cols.SourceTs))
+
+    val routed = headers.select(col("*"),
       // Step 5 of the reference task (IidrCdcSinkTask.java:197-201):
       // localize A_TIMSTAMP with the configured zone; null stays null.
       // (Reads the source_ts column built above — one header
       // extraction, definitionally in sync.)
-      .withColumn(Cols.SourceTsIso,
-        graft.functions.Timestamps.iidrTimestampToIsoZoned(
-          col(Cols.SourceTs), cfg.timestampZone))
-      .withColumn(Cols.KeyJson, decode(col("key"), "UTF-8"))
-      .withColumn(Cols.ValueJson, decode(col("value"), "UTF-8"))
-
-    val routed = withHeaders
-      .withColumn(Cols.Op, CdcOps.mapEntryType(col(Cols.EntryType)))
-      .withColumn(Cols.TargetTable,
-        CdcOps.applyIdentifierCase(
-          CdcOps.resolveTargetTable(cfg.tableNameFormat,
-            col(Cols.TableName), col("topic")),
-          cfg.identifierCase))
+      graft.functions.Timestamps.iidrTimestampToIsoZoned(
+        col(Cols.SourceTs), cfg.timestampZone).as(Cols.SourceTsIso),
+      decode(col("key"), "UTF-8").as(Cols.KeyJson),
+      decode(col("value"), "UTF-8").as(Cols.ValueJson),
+      CdcOps.mapEntryType(col(Cols.EntryType)).as(Cols.Op),
+      CdcOps.applyIdentifierCase(
+        CdcOps.resolveTargetTable(cfg.tableNameFormat,
+          col(Cols.TableName), col("topic")),
+        cfg.identifierCase).as(Cols.TargetTable))
 
     // Corrupt checks in the reference's order (IidrCdcSinkTask.java:161-217):
     // required headers → entry-type mapping → operation shape.
-    routed.withColumn(Cols.CorruptReason, coalesce(
+    routed.select(col("*"), coalesce(
       CdcOps.missingHeaderReason(col(Cols.TableName), col(Cols.EntryType),
         cfg.tableHeader, cfg.entryTypeHeader),
       CdcOps.unknownEntryTypeReason(col(Cols.EntryType), col(Cols.Op)),
-      CdcOps.shapeReason(col(Cols.Op), col(Cols.KeyJson), col(Cols.ValueJson))))
+      CdcOps.shapeReason(col(Cols.Op), col(Cols.KeyJson), col(Cols.ValueJson)))
+      .as(Cols.CorruptReason))
   }
 }

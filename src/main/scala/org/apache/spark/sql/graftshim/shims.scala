@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,17 +46,24 @@ object GraftShims {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
-  /** The relation `spark.read.schema(schema).parquet(path)` resolves
-    * (the same `DataSource`, options and file index, so the plans are
-    * equal), minus its existence check: `checkFilesExist` starts a
-    * fresh thread pool per read to stat one path. For a caller that has
-    * already stat'ed `path` on the driver and raises `PATH_NOT_FOUND`
-    * itself ([[graft.Tables.readParquet]]). */
-  def parquetRelation(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+  /** The relation `spark.read.schema(schema).parquet(path)` resolves,
+    * built over `index`, the file index of `path` the caller has
+    * already listed ([[graft.Tables.readParquet]]). The options and the
+    * data and partition schemas are the ones `spark.read` gives it, so
+    * the plans are equal: the partition columns come from the index,
+    * and the data schema is `schema` without them, made nullable
+    * (`asNullable` is `private[spark]`, hence the shim). Building it
+    * lists nothing, and skips `spark.read`'s existence check, which
+    * starts a fresh thread pool per read. */
+  def parquetRelation(spark: SparkSession, path: String, index: InMemoryFileIndex,
+      schema: StructType): DataFrame = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.baseRelationToDataFrame(DataSource(classic, className = "parquet",
-      userSpecifiedSchema = Some(schema), options = Map("path" -> path))
-      .resolveRelation(checkFilesExist = false, readOnly = true))
+    val partitions = index.partitionSchema
+    val resolver = classic.sessionState.conf.resolver
+    val data = schema.filterNot(f => partitions.exists(p => resolver(p.name, f.name)))
+    classic.baseRelationToDataFrame(HadoopFsRelation(index, partitions,
+      StructType(data).asNullable, None, new ParquetFileFormat,
+      CaseInsensitiveMap(Map("path" -> path)))(classic))
   }
 
   /** Drain the listener bus (`private[spark]`): a harness snapshotting

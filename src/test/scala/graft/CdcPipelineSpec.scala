@@ -147,4 +147,42 @@ class CdcPipelineSpec extends SparkSpec {
     assert(missing.getAs[String](Cdc.Cols.CorruptReason)
       .contains("Missing required header: NOPE"))
   }
+
+  test("normalize builds in three projections, with the columns and plan of one withColumn per column") {
+    import Cdc.Cols
+    val cfg = CdcConfig()
+    val wire = wireDf(fixture)
+    val norm = CdcNormalize(wire, cfg)
+    def projects(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project => p
+    }.size
+    assert(projects(norm) - projects(wire) == 3)
+    assert(norm.columns.toSeq == Cdc.kafkaWireSchema.fieldNames.toSeq ++ Seq(
+      Cols.TableName, Cols.EntryType, Cols.SourceTs, Cols.SourceTsIso,
+      Cols.KeyJson, Cols.ValueJson, Cols.Op, Cols.TargetTable, Cols.CorruptReason))
+    // the same columns added one at a time, in step order
+    val header = (h: String) => CdcOps.headerString(col("headers"), h)
+    val oneByOne = wire
+      .withColumn(Cols.TableName, header(cfg.tableHeader))
+      .withColumn(Cols.EntryType, header(cfg.entryTypeHeader))
+      .withColumn(Cols.SourceTs, header(Cdc.Headers.Timestamp))
+      .withColumn(Cols.SourceTsIso, graft.functions.Timestamps
+        .iidrTimestampToIsoZoned(col(Cols.SourceTs), cfg.timestampZone))
+      .withColumn(Cols.KeyJson, decode(col("key"), "UTF-8"))
+      .withColumn(Cols.ValueJson, decode(col("value"), "UTF-8"))
+      .withColumn(Cols.Op, CdcOps.mapEntryType(col(Cols.EntryType)))
+      .withColumn(Cols.TargetTable, CdcOps.applyIdentifierCase(
+        CdcOps.resolveTargetTable(cfg.tableNameFormat, col(Cols.TableName), col("topic")),
+        cfg.identifierCase))
+      .withColumn(Cols.CorruptReason, coalesce(
+        CdcOps.missingHeaderReason(col(Cols.TableName), col(Cols.EntryType),
+          cfg.tableHeader, cfg.entryTypeHeader),
+        CdcOps.unknownEntryTypeReason(col(Cols.EntryType), col(Cols.Op)),
+        CdcOps.shapeReason(col(Cols.Op), col(Cols.KeyJson), col(Cols.ValueJson))))
+    assert(projects(oneByOne) - projects(wire) == 9)
+    assert(norm.schema == oneByOne.schema)
+    assert(norm.queryExecution.optimizedPlan.sameResult(oneByOne.queryExecution.optimizedPlan))
+    val rows = (df: DataFrame) => df.drop("key", "value", "headers").collect().toSeq
+    assert(rows(norm) == rows(oneByOne))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -39,7 +41,8 @@ class TablesSpec extends SparkSpec {
   test("rowCount reads the exact count from parquet footers") {
     // the catalog-statistics read that sizes adaptive LSH dials must
     // equal a full count() for every driver table shape (single-file
-    // tables here; the directory branch lists *.parquet parts)
+    // tables here; the directory cases below read every data file the
+    // file index lists, whatever its extension)
     val dir = "/root/testdata/sf0.001"
     Seq("embeddings", "documents", "events").foreach { t =>
       assert(Tables.rowCount(spark, dir, t) == Tables(spark, dir, t).count(),
@@ -68,15 +71,15 @@ class TablesSpec extends SparkSpec {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       val p = s"$dir/$t.parquet"
-      assert(Tables.footerSchema(spark, p) == spark.read.parquet(p).schema,
+      assert(Tables.readParquet(spark, p).schema == spark.read.parquet(p).schema,
         s"footer schema of $t must equal inference")
     }
   }
 
   test("footer schema equals inference on a Spark-written multi-part dir") {
     // Spark's footers carry its own row schema, NOT NULLs included;
-    // file-source reads make top-level fields nullable, and so must
-    // the footer read. Three parts plus the _SUCCESS marker.
+    // file-source reads make every field nullable, and so must the
+    // open. Three parts plus the _SUCCESS marker.
     val dir = java.nio.file.Files
       .createTempDirectory("graft-tables-spark").toString
     val p = s"$dir/t.parquet"
@@ -89,10 +92,10 @@ class TablesSpec extends SparkSpec {
     assert(new java.io.File(p).list().count(_.endsWith(".parquet")) == 3)
     Tables(spark, dir, "t")
     val inferred = spark.read.parquet(p).schema
-    assert(Tables.footerSchema(spark, p) == inferred)
+    assert(Tables.readParquet(spark, p).schema == inferred)
     assert(inferred("k").nullable && inferred("at").dataType ==
       org.apache.spark.sql.types.TimestampNTZType, inferred)
-    // and the loader folds the NTZ column like an inferred one
+    // and the loader types the NTZ column TimestampType
     val t = Tables(spark, dir, "t")
     assert(t.schema("at").dataType == org.apache.spark.sql.types.TimestampType)
     assert(t.count() == 30)
@@ -158,7 +161,7 @@ class TablesSpec extends SparkSpec {
       spark.range(10).select(col("id").as("k"), col("id").cast("string").as("s"))
         .write.option("parquet.encryption.uniform.key", "k0").parquet(p)
       val inferred = spark.read.parquet(p).schema
-      assert(Tables.footerSchema(spark, p) == inferred)
+      assert(Tables.readParquet(spark, p).schema == inferred)
       assert(Tables.readParquet(spark, p).count() == 10)
       assert(Tables.rowCount(spark, dir, "t") == 10)
     } finally session.keys.foreach(spark.conf.unset)
@@ -183,6 +186,174 @@ class TablesSpec extends SparkSpec {
     }
     val started = threads.getTotalStartedThreadCount - before
     assert(started < 2 * n, s"$started thread starts over ${2 * n} resolutions")
+  }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `path` opens through [[Tables]] as `spark.read.parquet` reads it:
+    * the same schema, the same rows, and a footer row count equal to
+    * them. Returns the schema. */
+  private def readsAsSpark(dir: String, name: String): StructType = {
+    val p = s"$dir/$name.parquet"
+    val spark0 = spark.read.parquet(p)
+    val ours = Tables.readParquet(spark, p)
+    assert(ours.schema == spark0.schema)
+    val n = spark0.count()
+    assert(ours.count() == n && Tables.rowCount(spark, dir, name) == n)
+    assert(ours.collect().map(_.toString).sorted sameElements
+      spark0.collect().map(_.toString).sorted)
+    spark0.schema
+  }
+
+  private def copy(from: java.io.File, to: String): Unit = {
+    java.nio.file.Files.copy(from.toPath, java.nio.file.Paths.get(to)); ()
+  }
+
+  private def parts(p: String): Seq[java.io.File] =
+    new java.io.File(p).listFiles().toSeq.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+
+  test("a table whose parts lack the .parquet extension reads as spark.read does") {
+    // Hive / MapReduce `part-m-00000` parts: every non-hidden file is a
+    // data file. A nested NOT NULL field checks nullability as well.
+    val dir = tmp("graft-tables-noext")
+    val p = s"$dir/t.parquet"
+    spark.range(0, 30, 1, 3).select(col("id").as("k"),
+      struct(col("id").as("a"), lit("x").as("b")).as("st")).write.parquet(p)
+    parts(p).zipWithIndex.foreach { case (f, i) =>
+      assert(f.renameTo(new java.io.File(f"$p/part-m-$i%05d")))
+    }
+    assert(parts(p).isEmpty)
+    readsAsSpark(dir, "t")
+    assert(Tables(spark, dir, "t").count() == 30)
+  }
+
+  test("summary files: _common_metadata, else _metadata, gives the schema; no rows are read from them") {
+    // footers of two other tables stand in for the summaries, so the
+    // schema shows which file inference picked; each holds one row
+    // that a scan or a footer count must not see
+    val dir = tmp("graft-tables-summary")
+    val p = s"$dir/t.parquet"
+    spark.range(0, 20, 1, 2).toDF("k").write.parquet(p)
+    spark.range(1).select(col("id").as("k"), lit(1.0).as("m")).write.parquet(s"$dir/m")
+    spark.range(1).select(col("id").as("k"), lit("x").as("c")).write.parquet(s"$dir/c")
+    copy(parts(s"$dir/m").head, s"$p/_metadata")
+    assert(readsAsSpark(dir, "t").fieldNames.toSeq == Seq("k", "m"))
+    copy(parts(s"$dir/c").head, s"$p/_common_metadata")
+    assert(readsAsSpark(dir, "t").fieldNames.toSeq == Seq("k", "c"))
+  }
+
+  test("a file still being copied (._COPYING_) is skipped as spark.read skips it") {
+    // named to sort before every part, so it would be the footer read
+    // and would add its row if the listing kept it
+    val dir = tmp("graft-tables-copying")
+    val p = s"$dir/t.parquet"
+    spark.range(0, 30, 1, 3).toDF("k").write.parquet(p)
+    spark.range(1).select(col("id").as("k"), lit("x").as("c")).write.parquet(s"$dir/c")
+    copy(parts(s"$dir/c").head, s"$p/part-0.parquet._COPYING_")
+    assert(readsAsSpark(dir, "t").fieldNames.toSeq == Seq("k"))
+  }
+
+  test("a naive timestamp read as TimestampType carries the stored micros in every zone and reader") {
+    // before the Gregorian switch, just before 1900, inside New York's
+    // 2021 spring-forward gap, and the last micro of 9999
+    val micros = Seq(-15000000000000000L, -2208988800000001L,
+      1615689000000000L, 253402300799999999L)
+    val dir = tmp("graft-tables-ntz")
+    val p = s"$dir/t.parquet"
+    val zoneKey = "spark.sql.session.timeZone"
+    val vecKey = "spark.sql.parquet.enableVectorizedReader"
+    val (zone0, vec0) = (spark.conf.get(zoneKey), spark.conf.getOption(vecKey))
+    try {
+      spark.conf.set(zoneKey, "UTC")
+      spark.createDataFrame(micros.map(Tuple1(_))).toDF("m")
+        .select(col("m"), timestamp_micros(col("m")).cast("timestamp_ntz").as("at"))
+        .coalesce(1).write.parquet(p)
+      val fold = expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', at)")
+      for (zone <- Seq("UTC", "America/New_York"); vec <- Seq("true", "false")) {
+        spark.conf.set(zoneKey, zone)
+        spark.conf.set(vecKey, vec)
+        Tables.invalidate(dir)
+        val t = Tables(spark, dir, "t")
+        assert(t.schema("at").dataType == org.apache.spark.sql.types.TimestampType)
+        val read = t.select(col("m"), unix_micros(col("at"))).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+        val folded = spark.read.parquet(p).select(col("m"), fold).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+        assert(read == micros.sorted.map(m => (m, m)), s"$zone vectorized=$vec")
+        // the old NTZ fold agrees, but for the value inside the session
+        // zone's DST gap: its timestampdiff moves that value by the gap
+        val inGap = (r: (Long, Long)) => zone != "UTC" && r._1 == 1615689000000000L
+        assert(folded.filterNot(inGap) == read.filterNot(inGap), s"$zone vectorized=$vec")
+      }
+    } finally {
+      spark.conf.set(zoneKey, zone0)
+      vec0.fold(spark.conf.unset(vecKey))(spark.conf.set(vecKey, _))
+      Tables.invalidate(dir)
+    }
+  }
+
+  test("a table of naive timestamps plans no Project over its scan") {
+    val dir = tmp("graft-tables-ntz-plan")
+    spark.range(3).select(
+      to_timestamp_ntz(timestamp_seconds(col("id") * 60)).as("at"),
+      to_timestamp_ntz(timestamp_seconds(col("id"))).as("bt"))
+      .write.parquet(s"$dir/t.parquet")
+    val t = Tables(spark, dir, "t")
+    assert(t.schema.map(_.dataType).distinct ==
+      Seq(org.apache.spark.sql.types.TimestampType))
+    Seq(t.queryExecution.analyzed, t.queryExecution.optimizedPlan).foreach { plan =>
+      assert(plan.collect { case p: org.apache.spark.sql.catalyst.plans.logical.Project => p }
+        .isEmpty, plan.treeString)
+    }
+    assert(t.select(unix_micros(col("at"))).collect().map(_.getLong(0)).sorted.toSeq
+      == Seq(0L, 60000000L, 120000000L))
+  }
+
+  test("a cold open lists each directory once") {
+    // a counting local file system under its own scheme: every
+    // listStatus call, keyed by the directory listed
+    val dir = tmp("graft-tables-listing")
+    spark.range(0, 30, 1, 3).toDF("k").write.parquet(s"$dir/t.parquet")
+    // quarantine-shaped: k=v dirs two levels deep
+    spark.range(12).select(col("id").as("k"),
+      (col("id") % 2).as("__batch_id"),
+      when(col("id") % 3 === 0, "a").otherwise("b").as("__reason"))
+      .write.partitionBy("__batch_id", "__reason").parquet(s"$dir/q")
+    def dirs(p: String): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+        .map(_.toString).toSet finally walk.close()
+    }
+    // a session conf reaches every Hadoop conf the session makes
+    // (the `spark.hadoop.` prefix is read only when a context starts)
+    val implKey = s"fs.${CountingFs.Scheme}.impl"
+    spark.conf.set(implKey, classOf[CountingFs].getName)
+    def lists(open: => Unit): Map[String, Int] = {
+      CountingFs.lists.clear()
+      open
+      CountingFs.lists.asScala.map { case (k, v) => k -> v.intValue }.toMap
+    }
+    val fs = s"${CountingFs.Scheme}://"
+    try {
+      val schema = StructType.fromDDL("k LONG, __batch_id INT, __reason STRING")
+      val opens = Seq(
+        "Tables(...) of a 3-part dir" -> (dirs(s"$dir/t.parquet"),
+          lists { Tables(spark, s"$fs$dir", "t"); () }),
+        "readParquet of a partitioned dir" -> (dirs(s"$dir/q"),
+          lists { Tables.readParquet(spark, s"$fs$dir/q"); () }),
+        "readParquet of a partitioned dir, schema known" -> (dirs(s"$dir/q"),
+          lists { Tables.readParquet(spark, s"$fs$dir/q", Some(schema)); () }))
+      opens.foreach { case (what, (expected, seen)) =>
+        assert(expected.size > 1 || what.startsWith("Tables"))
+        assert(seen == expected.map(_ -> 1).toMap, s"$what: listStatus calls per dir")
+      }
+      assert(Tables(spark, s"$fs$dir", "t").count() == 30)
+      assert(Tables.readParquet(spark, s"$fs$dir/q").where(col("__reason") === "a").count() == 4)
+    } finally {
+      spark.conf.unset(implKey)
+      Tables.invalidate(s"$fs$dir")
+    }
   }
 
   test("invalidate reaches registered family caches and unpersists their frames") {
@@ -224,4 +395,22 @@ class Base64Kms extends org.apache.parquet.crypto.keytools.KmsClient {
     java.util.Base64.getEncoder.encodeToString(key)
   def unwrapKey(wrapped: String, master: String): Array[Byte] =
     java.util.Base64.getDecoder.decode(wrapped)
+}
+
+/** A local file system under its own scheme that counts `listStatus`
+  * calls per directory (every listing Hadoop and Spark make goes
+  * through it), for the one-listing pin. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${CountingFs.Scheme}:///")
+  override def getScheme: String = CountingFs.Scheme
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFs.lists.merge(p.toUri.getPath.stripSuffix("/"), 1,
+      (a: Integer, b: Integer) => Integer.valueOf(a + b))
+    super.listStatus(p)
+  }
+}
+
+object CountingFs {
+  val Scheme = "countfs"
+  val lists = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 }
