@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, LongType, StringType}
 
 /**
  * Temporal coercion operators (SURVEY.md §2.4 T1/T2).
@@ -9,7 +10,10 @@ import org.apache.spark.sql.functions._
  * All of these are compositions of codegen'd builtins
  * (`try_to_timestamp` + `coalesce`), mirroring the reference's
  * try-patterns-in-order loops declaratively so Catalyst can constant-
- * fold and the whole chain stays in one codegen stage.
+ * fold and the whole chain stays in one codegen stage. Casts take
+ * `DataType` objects, not type names: `Column.cast(String)` runs the
+ * SQL type parser on every call, and each CDC micro-batch builds these
+ * columns anew.
  */
 object Timestamps {
 
@@ -69,11 +73,11 @@ object Timestamps {
     // (whole minutes — the fractional part cancels before the floor).
     val offSec = unix_timestamp(parsed) -
       unix_timestamp(to_utc_timestamp(parsed, zone))
-    val mins = floor(abs(offSec) / 60).cast("long")
+    val mins = floor(abs(offSec) / 60).cast(LongType)
     val off = concat(
       when(offSec < 0, lit("-")).otherwise(lit("+")),
-      lpad(floor(mins / 60).cast("long").cast("string"), 2, "0"), lit(":"),
-      lpad((mins % 60).cast("string"), 2, "0"))
+      lpad(floor(mins / 60).cast(LongType).cast(StringType), 2, "0"), lit(":"),
+      lpad((mins % 60).cast(StringType), 2, "0"))
     when(parsed.isNotNull,
       concat(date_format(parsed, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), off))
   }
@@ -112,7 +116,7 @@ object Timestamps {
   /** String → date: reference truncates to the first 10 chars (JdbcWriter.java:242-268). */
   def coerceDate(raw: Column): Column =
     try_to_timestamp(substring(nullif(trim(raw), lit("")), 1, 10), lit("yyyy-MM-dd"))
-      .cast("date")
+      .cast(DateType)
 
   /**
    * String → TIME: Spark has no TimeType (SURVEY.md §7.3) — normalize

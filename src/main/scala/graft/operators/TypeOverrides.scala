@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType, DateType,
-  DayTimeIntervalType, StringType, StructType, TimestampType, YearMonthIntervalType}
+  DayTimeIntervalType, DecimalType, IntegerType, LongType, StringType, StructType,
+  TimestampType, YearMonthIntervalType}
 
 import graft.model.Cdc
 
@@ -21,6 +22,8 @@ import graft.model.Cdc
  *
  * All coercions are compositions of codegen'd builtins
  * (`try_to_timestamp` + `coalesce`) — one whole-stage pass, no UDFs.
+ * Casts take `DataType` objects, not type names, so building the
+ * override plan (once per CDC micro-batch) parses no SQL text.
  * Divergence (documented): `SimpleDateFormat` ignores trailing
  * characters past its pattern (so `2026-01-01garbage` parses as a
  * date); Spark's formatter is strict and rejects it — strictly fewer
@@ -88,7 +91,7 @@ object TypeOverrides {
       case "timestamp" =>
         coalesce(TimestampPatterns.map(p => try_to_timestamp(s, lit(p))): _*)
       case "date" =>
-        coalesce(DatePatterns.map(p => try_to_timestamp(s, lit(p))): _*).cast("date")
+        coalesce(DatePatterns.map(p => try_to_timestamp(s, lit(p))): _*).cast(DateType)
       case "time" =>
         date_format(
           coalesce(TimePatterns.map(p => try_to_timestamp(s, lit(p))): _*),
@@ -139,8 +142,8 @@ object TypeOverrides {
     // |total months| bound: 2^31-1 for +, 2^31 for - (Int.MinValue)
     val maxMonths = when(sign === -1, lit(2147483648L)).otherwise(lit(2147483647L))
     def gated(y: Column, m: Column): Column =
-      when(y.cast("bigint") * 12 + m.cast("bigint") <= maxMonths,
-        make_ym_interval(sign * y.cast("int"), sign * m.cast("int")))
+      when(y.cast(LongType) * 12 + m.cast(LongType) <= maxMonths,
+        make_ym_interval(sign * y.cast(IntegerType), sign * m.cast(IntegerType)))
     val oracle = when(b.rlike("^\\d{1,9}-(\\d|1[01])$"),
       gated(regexp_extract(b, "^(\\d+)-(\\d+)$", 1),
         regexp_extract(b, "^(\\d+)-(\\d+)$", 2)))
@@ -178,12 +181,12 @@ object TypeOverrides {
       lit(new java.math.BigDecimal("9223372036854.775808")))
       .otherwise(lit(new java.math.BigDecimal("9223372036854.775807")))
     def gated(d: Column, h: Column, mi: Column, sec: Column): Column = {
-      val secDec = sec.cast("decimal(18,6)")
-      val tot = d.cast("decimal(20,0)") * 86400 + h.cast("decimal(20,0)") * 3600 +
-        mi.cast("decimal(20,0)") * 60 + secDec
+      val secDec = sec.cast(DecimalType(18, 6))
+      val tot = d.cast(DecimalType(20, 0)) * 86400 + h.cast(DecimalType(20, 0)) * 3600 +
+        mi.cast(DecimalType(20, 0)) * 60 + secDec
       when(tot <= maxSecs,
-        make_dt_interval(sign * d.cast("int"), sign * h.cast("int"),
-          sign * mi.cast("int"), sign.cast("decimal(18,6)") * secDec))
+        make_dt_interval(sign * d.cast(IntegerType), sign * h.cast(IntegerType),
+          sign * mi.cast(IntegerType), sign.cast(DecimalType(18, 6)) * secDec))
     }
     val oraRe = "^(\\d{1,9}) ([01]?\\d|2[0-3]):([0-5]?\\d):([0-5]?\\d(?:\\.\\d{1,6})?)$"
     val oracle = when(b.rlike(oraRe),
@@ -197,14 +200,14 @@ object TypeOverrides {
         part(b, "T(?:\\d+H)?(\\d+)M"),
         coalesce(
           nullif(regexp_extract(b, "(\\d+(?:\\.\\d+)?)S", 1), lit(""))
-            .cast("decimal(18,6)"),
+            .cast(DecimalType(18, 6)),
           lit(java.math.BigDecimal.ZERO))))
     coalesce(oracle, iso)
   }
 
   /** Optional integer regex group: 0 when the group is absent. */
   private def part(b: Column, re: String): Column =
-    coalesce(nullif(regexp_extract(b, re, 1), lit("")).cast("int"), lit(0))
+    coalesce(nullif(regexp_extract(b, re, 1), lit("")).cast(IntegerType), lit(0))
 
   /** A normalized CDC frame with override failures marked corrupt:
     * `corrupt_reason` gains [[failureReason]] for each overridden field

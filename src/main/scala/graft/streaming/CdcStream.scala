@@ -10,13 +10,14 @@ import graft.sinks.JdbcApply
 
 /**
  * Structured-Streaming shell (SURVEY.md §7.2 M3): Kafka-wire records →
- * normalize chain → foreachBatch JDBC apply (+ DLQ side-branch inside
- * the same write job).
+ * foreachBatch { normalize chain → JDBC apply } (+ DLQ side-branch
+ * inside the same write job).
  *
  *   Kafka topic {prefix}.{schema}.{table}
  *     → spark.readStream.format("kafka").option("includeHeaders", true)
- *     → CdcNormalize (narrow, codegen'd)
- *     → foreachBatch { JdbcApply.applyBatch }   // upsert/delete + DLQ
+ *     → foreachBatch {
+ *         JdbcApply.applyBatch(CdcNormalize(batch))  // upsert/delete + DLQ
+ *       }
  *
  * Effectively-once: offsets are checkpointed per micro-batch and the
  * apply is an idempotent upsert/delete by PK, so replay after failure
@@ -24,11 +25,14 @@ import graft.sinks.JdbcApply
  * sink README.md:8). The apply writes a micro-batch from ONE task with
  * no shuffle, whatever the number of tables, like the reference's
  * one-task poll: one Spark job, whose task counts, dead-letters, runs
- * DDL and writes. It coalesces the batch to one partition, and the
- * coalesce is narrow, so CdcNormalize runs inside that same task: on
- * this path a micro-batch is normalized by one core, not one task per
- * Kafka partition. The batch queries over `CdcNormalize` keep the
- * source's parallelism.
+ * DDL and writes. The streaming query plans only its source; each
+ * micro-batch is normalized inside `foreachBatch`, so the stream runs
+ * the same call as the direct path, `applyBatch(CdcNormalize(batch))`,
+ * and the optimizer sees normalize and apply as one plan. The apply
+ * coalesces the batch to one partition, and the coalesce is narrow, so
+ * CdcNormalize runs inside that same task: on this path a micro-batch
+ * is normalized by one core, not one task per Kafka partition. The
+ * batch queries over `CdcNormalize` keep the source's parallelism.
  *
  * W17 retry (`JdbcApply.Config.maxRetries`) re-runs a failed write job
  * from the driver, which reads the micro-batch again; the task itself
@@ -56,7 +60,16 @@ object CdcStream {
   /**
    * Wire any kafka-shaped streaming DataFrame (live broker or
    * MemoryStream/file source in tests) into the normalize →
-   * JDBC-apply pipeline.
+   * JDBC-apply pipeline. The stream itself carries the wire rows
+   * untouched: each trigger plans only the source, and `foreachBatch`
+   * runs `JdbcApply.applyBatch(CdcNormalize(batch, cdcCfg), sinkCfg)`,
+   * the direct path's call, on the planned batch. Starting the stream
+   * therefore builds no normalize plan, and the streaming query's
+   * progress and plan hold no normalize-side columns or counts; those
+   * come from the apply's own result. The checkpoint holds only source
+   * offsets and the commit log, so a checkpoint written by a stream
+   * that normalized before `foreachBatch` restarts under this writer
+   * and replays its uncommitted epoch.
    *
    * `onBatch` is the per-micro-batch observability seam: it receives
    * the epoch id and the apply's [[JdbcApply.ApplyStats]] strictly
@@ -71,14 +84,12 @@ object CdcStream {
    */
   def writer(wire: DataFrame, cdcCfg: CdcConfig, sinkCfg: JdbcApply.Config,
       onBatch: (Long, JdbcApply.ApplyStats) => Unit = (_, _) => ()):
-      DataStreamWriter[Row] = {
-    val normalized = CdcNormalize(wire, cdcCfg)
-    normalized.writeStream
+      DataStreamWriter[Row] =
+    wire.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        onBatch(epochId, JdbcApply.applyBatch(batch, sinkCfg)); ()
+        onBatch(epochId, JdbcApply.applyBatch(CdcNormalize(batch, cdcCfg), sinkCfg)); ()
       }
-  }
 
   /**
    * The reference's MongoDB topology as ONE streaming plan (S4 → W15:

@@ -895,6 +895,144 @@ class JdbcStreamSpec extends SparkSpec {
       "kill+restart terminal state must equal the single-run state")
   }
 
+  // ----------------------------------------- the stream is the direct path
+
+  test("a trigger plans only its source: the query's last execution holds no normalize step") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, GetJsonObject, JsonToStructs}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(Cdc.kafkaWireSchema)
+    val db = "planonlydb"
+    val mem = MemoryStream[Row](enc, spark)
+    val q = CdcStream.start(mem.toDF(), CdcConfig(), sinkCfg(db),
+      java.nio.file.Files.createTempDirectory("graft-ckpt-plan").toString, 0L)
+    val exec = try {
+      mem.addData(fixture: _*)
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+    } finally q.stop()
+    assertTerminal(s"jdbc:derby:memory:$db")
+    assert(exec != null && exec.currentBatchId == 0L)
+    val wireCols = Cdc.kafkaWireSchema.fieldNames.toSet
+    Seq("analyzed" -> exec.analyzed, "optimized" -> exec.optimizedPlan).foreach { case (n, plan) =>
+      val normalizeSteps = plan.collect { case p if p.expressions.exists(_.exists {
+        case _: ArrayFilter | _: GetJsonObject | _: JsonToStructs => true
+        case _ => false
+      }) => p.nodeName }
+      assert(normalizeSteps.isEmpty, s"$n plan evaluates a normalize step in $normalizeSteps")
+      val added = plan.collect { case p => p.output.map(_.name).filterNot(wireCols) }.flatten
+      assert(added.isEmpty, s"$n plan adds columns ${added.distinct}")
+    }
+  }
+
+  test("the stream is the direct path: the same chunks give the same per-epoch stats, tables and DLQ") {
+    implicit val enc: ExpressionEncoder[Row] = ExpressionEncoder(Cdc.kafkaWireSchema)
+    val chunks = Seq(
+      fixture, // inserts, an update, a delete and one corrupt row
+      Seq( // corrupt only: a missing A_ENTTYP and an unknown entry type
+        wireRow(10, null, """{"ID":4}""", """{"ID":4}"""),
+        wireRow(11, "ZZ", """{"ID":5}""",
+          """{"ID":5,"ORDER_NAME":"zz","AMOUNT":5.0,"STATUS":"NEW"}""")),
+      Seq( // a row for a table no config names, beside a routable one
+        wireRow(20, "PT", """{"ID":6}""",
+          """{"ID":6,"ORDER_NAME":"stray","AMOUNT":6.0,"STATUS":"NEW"}""", "TEST_UNCONFIGURED"),
+        wireRow(21, "PT", """{"ID":7}""",
+          """{"ID":7,"ORDER_NAME":"Order-007","AMOUNT":7.0,"STATUS":"NEW"}""")),
+      Seq( // a row with no PK in key or value, beside a delete
+        wireRow(30, "PT", null, """{"ORDER_NAME":"orphan","AMOUNT":8.0,"STATUS":"NEW"}"""),
+        wireRow(31, "DL", """{"ID":1}""", null)))
+    val (streamDb, directDb) = ("streameqdb", "directeqdb")
+    val streamed = scala.collection.concurrent.TrieMap.empty[Long, JdbcApply.ApplyStats]
+    val mem = MemoryStream[Row](enc, spark)
+    val q = CdcStream.start(mem.toDF(), CdcConfig(), sinkCfg(streamDb),
+      java.nio.file.Files.createTempDirectory("graft-ckpt-eq").toString, 0L,
+      (epoch, stats) => streamed.put(epoch, stats))
+    try chunks.foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+    finally q.stop()
+    val direct = chunks.map { c =>
+      val wire = spark.createDataFrame(spark.sparkContext.parallelize(c, 2), Cdc.kafkaWireSchema)
+      JdbcApply.applyBatch(CdcNormalize(wire, CdcConfig()), sinkCfg(directDb))
+    }
+    assert(streamed.keySet == chunks.indices.map(_.toLong).toSet, s"epochs ${streamed.keySet}")
+    assert(chunks.indices.map(i => streamed(i.toLong)) == direct)
+    assert(direct(1) == JdbcApply.ApplyStats(corruptSkipped = 2, warningsLogged = 2))
+    assert(direct(3).unroutableSkipped == 1)
+    val (su, du) = (s"jdbc:derby:memory:$streamDb", s"jdbc:derby:memory:$directDb")
+    assert(queryAll(su) == Seq((2L, "Order-002-Updated", 250.00, "PROCESSING"),
+      (7L, "Order-007", 7.0, "NEW")))
+    assert(queryAll(su) == queryAll(du))
+    assert(!tableExists(su, "TEST_UNCONFIGURED") && !tableExists(du, "TEST_UNCONFIGURED"))
+    assert(dlqRows(su).size == 3)
+    assert(dlqRows(su) == dlqRows(du))
+  }
+
+  /** Every DLQ row, every column, in offset order. */
+  private def dlqRows(url: String): Seq[Seq[String]] = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(
+        """SELECT * FROM "STREAMING_CORRUPT_EVENTS" ORDER BY "kafka_offset"""")
+      val n = rs.getMetaData.getColumnCount
+      val b = Seq.newBuilder[Seq[String]]
+      while (rs.next()) b += (1 to n).map(rs.getString)
+      b.result()
+    } finally conn.close()
+  }
+
+  test("a checkpoint written by a stream that normalized before foreachBatch restarts under CdcStream.start") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    // ---- reference run: same files, CdcStream, never killed
+    val srcA = Files.createTempDirectory("graft-wire-oldref").toString
+    writeWireFiles(srcA, fixture)
+    val qA = CdcStream.start(fileWire(srcA), CdcConfig(), sinkCfg("oldckptrefdb"),
+      Files.createTempDirectory("graft-ckpt-oldref").toString, 50L)
+    try qA.processAllAvailable() finally qA.stop()
+    val refRows = queryAll("jdbc:derby:memory:oldckptrefdb")
+
+    // ---- kill run under a writer that normalizes the streaming frame
+    // and applies the normalized batch: crash after epoch 2's writes
+    // committed, before its commit-log entry
+    val db = "oldckptdb"
+    val srcB = Files.createTempDirectory("graft-wire-old").toString
+    writeWireFiles(srcB, fixture)
+    val ckpt = Files.createTempDirectory("graft-ckpt-old").toString
+    val applied = scala.collection.concurrent.TrieMap.empty[Long, Int]
+    @volatile var killArmed = true
+    val onBatch: (Long, JdbcApply.ApplyStats) => Unit = (epoch, _) => {
+      applied.updateWith(epoch)(c => Some(c.getOrElse(0) + 1))
+      if (killArmed && epoch == 2L) {
+        killArmed = false
+        throw new RuntimeException("injected-crash-after-apply")
+      }
+    }
+    val q1 = CdcNormalize(fileWire(srcB), CdcConfig()).writeStream
+      .outputMode("update")
+      .foreachBatch { (batch: DataFrame, epochId: Long) =>
+        onBatch(epochId, JdbcApply.applyBatch(batch, sinkCfg(db))); ()
+      }
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(50L))
+      .start()
+    try { q1.processAllAvailable(); q1.awaitTermination(120000L) }
+    catch { case _: Throwable => () }
+    assert(q1.exception.exists(e => Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).take(10)
+      .exists(t => Option(t.getMessage).exists(_.contains("injected-crash-after-apply")))),
+      s"the earlier writer must die on the injected fault, got ${q1.exception}")
+    assert(applied.toMap == Map(0L -> 1, 1L -> 1, 2L -> 1), s"kill run applied $applied")
+
+    // ---- restart on the same checkpoint with CdcStream: epoch 2
+    // replays, the rest apply once
+    val q2 = CdcStream.start(fileWire(srcB), CdcConfig(), sinkCfg(db), ckpt, 50L, onBatch)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(applied.toMap == Map(0L -> 1, 1L -> 1, 2L -> 2, 3L -> 1, 4L -> 1, 5L -> 1),
+      s"only epoch 2 replays after the restart, got $applied")
+    assertTerminal(s"jdbc:derby:memory:$db")
+    assert(queryAll(s"jdbc:derby:memory:$db") == refRows,
+      "restart terminal state must equal the single-run state")
+  }
+
   // ------------------------------------------------------ W17 retry
 
   test("W17: transient JDBC failure retries with backoff and converges (exceeds the reference, which declares max.retries and never reads it)") {
